@@ -46,17 +46,6 @@ _GATE_STABLE = [
     "op_apply_decorrelated", "op_group_by_aggs",
     "op_order_by_nulls_limit",
 ]
-_GATE_ROTATION_R12 = [
-    "bitemp_current_state", "bitemp_asof_system_time",
-    "bitemp_asof_valid_time", "bitemp_system_history",
-    "sql_dialect_battery", "sql_quantified_comparisons",
-    "sql_join_on_subquery", "sql_from_first_pipeline",
-    "fn_string_battery", "fn_math_battery", "fn_case_coalesce_nullif",
-    "fn_extract_datetrunc", "pipe_dedup_exact",
-    "pipe_dedup_ngram_jaccard", "pipe_token_count",
-    "pipe_ann_cosine_topk", "xtql_pipeline_agg", "xtql_unify_join",
-    "dyn_union_column", "src_info_schema_columns",
-]
 # r13 rotation (VERDICT r12 #10: a DIFFERENT 20 each round): the
 # aggregate/window/set-op battery returns — none of these 20 were in
 # the r12 gate window, so the driver's 50-query gate keeps sweeping.

@@ -306,3 +306,21 @@ def test_put_batch_duplicate_id_last_wins_spark_fallback(xt):
                           {"_id": 1, "v": {"a": 2}}])
     rows = xt.scan("dupn").collect()
     assert len(rows) == 1 and rows[0]["v"]["a"] == 2
+
+
+def test_update_decimal_literal_keeps_double_column(xt, monkeypatch):
+    """`SET bal = 0.5` parses as DECIMAL(1,1): written as is beside
+    DOUBLE files it would defeat the merged parquet read, and every
+    later scan would fall back to TableStore._events_lub."""
+    xt.store.put("acct", [{"_id": i, "bal": i + 0.25} for i in range(3)])
+    xt.sql("UPDATE acct SET bal = 0.5 WHERE _id = 1")
+    lub = []
+    orig = TableStore._events_lub
+    monkeypatch.setattr(TableStore, "_events_lub",
+                        lambda self, files: lub.append(files)
+                        or orig(self, files))
+    df = xt.scan("acct")
+    assert dict(df.dtypes)["bal"] == "double"
+    assert {r["_id"]: r["bal"] for r in df.collect()} == \
+        {0: 0.25, 1: 0.5, 2: 2.25}
+    assert lub == []

@@ -1312,3 +1312,143 @@ def test_tls_upgrade(xt, tmp_path):
         client.close()
     finally:
         srv.stop()
+
+
+# ---- one plan per wire read: Describe plans the portal, Execute
+# reuses it; the extended protocol answers exactly as the simple one
+
+
+def _row_desc(body):
+    """(name, type oid) per field of a RowDescription body."""
+    (n,) = struct.unpack(">h", body[:2])
+    cols, off = [], 2
+    for _ in range(n):
+        end = body.index(b"\x00", off)
+        cols.append((body[off:end].decode(),
+                     struct.unpack(">i", body[end + 7:end + 11])[0]))
+        off = end + 19
+    return cols
+
+
+def _data_row(body):
+    (n,) = struct.unpack(">h", body[:2])
+    vals, off = [], 2
+    for _ in range(n):
+        (ln,) = struct.unpack(">i", body[off:off + 4])
+        off += 4
+        vals.append(None if ln == -1 else body[off:off + ln].decode())
+        off += max(ln, 0)
+    return vals
+
+
+def _extended_read(c, sql, params=(), oids=(), max_rows=0, executes=1):
+    """Parse/Bind/Describe(portal)/Execute×executes/Sync with text
+    parameters → (RowDescription fields, rows, tags, message types)."""
+    c.send(b"P", c.cstr("") + c.cstr(sql) + struct.pack(">h", len(oids))
+           + b"".join(struct.pack(">i", o) for o in oids))
+    enc = [str(p).encode() for p in params]
+    c.send(b"B", c.cstr("") + c.cstr("") + struct.pack(">hh", 0, len(enc))
+           + b"".join(struct.pack(">i", len(e)) + e for e in enc)
+           + struct.pack(">h", 0))
+    c.send(b"D", b"P" + c.cstr(""))
+    for _ in range(executes):
+        c.send(b"E", c.cstr("") + struct.pack(">i", max_rows))
+    c.send(b"S", b"")
+    msgs = _read_until_z(c)
+    descs = [_row_desc(b) for t, b in msgs if t == b"T"]
+    rows = [_data_row(b) for t, b in msgs if t == b"D"]
+    tags = [b.rstrip(b"\x00").decode() for t, b in msgs if t == b"C"]
+    return (descs[0] if descs else None), rows, tags, [t for t, _ in msgs]
+
+
+@pytest.fixture()
+def rewrites(monkeypatch):
+    """Names of the rewriter entry points called, in order."""
+    from xtdb_spark.sql import rewriter
+
+    calls = []
+    for name in ("rewrite", "rewrite_with_args"):
+        orig = getattr(rewriter, name)
+        monkeypatch.setattr(rewriter, name,
+                            lambda *a, _o=orig, _n=name, **k:
+                            calls.append(_n) or _o(*a, **k))
+    return calls
+
+
+def test_extended_reads_match_simple_and_plan_once(xt, client, rewrites):
+    """A point read, a suspended portal (max_rows > 0) and a read in
+    a BEGIN READ ONLY WITH (SNAPSHOT_TIME …) block: the extended
+    protocol sends the simple protocol's RowDescription and rows,
+    and each read is rewritten exactly once."""
+    xt.store.put("pe", [{"_id": i, "v": i * 10, "s": f"a{i}"}
+                        for i in range(5)], system_from="2024-01-01")
+    xt.store.put("pe", [{"_id": i, "v": i * 100, "s": f"b{i}"}
+                        for i in range(5)], system_from="2024-06-01")
+
+    def simple(sql):
+        rewrites.clear()
+        (res,), tags = client.query(sql)
+        assert rewrites == ["rewrite_with_args"]
+        return res[0], res[1], tags
+
+    def extended(sql, *a, **k):
+        rewrites.clear()
+        desc, rows, tags, kinds = _extended_read(client, sql, *a, **k)
+        assert rewrites == ["rewrite_with_args"]
+        return desc, rows, tags, kinds
+
+    point = "SELECT _id, v, s FROM pe WHERE _id = "
+    cols, rows, tags = simple(point + "3")
+    assert rows == [["3", "300", "b3"]]
+    desc, erows, etags, kinds = extended(point + "$1", [3], [20])
+    assert (desc, erows, etags) == (cols, rows, tags)
+    assert kinds.count(b"T") == 1
+
+    scan = "SELECT _id, v FROM pe ORDER BY _id"
+    cols, rows, tags = simple(scan)
+    desc, erows, etags, kinds = extended(scan, max_rows=2, executes=3)
+    assert (desc, erows, etags) == (cols, rows, tags)
+    assert kinds.count(b"s") == 2 and tags == ["SELECT 5"]
+
+    client.query("BEGIN READ ONLY WITH "
+                 "(SNAPSHOT_TIME = TIMESTAMP '2024-03-01 00:00:00')")
+    cols, rows, tags = simple(point + "2")
+    assert rows == [["2", "20", "a2"]]              # pinned basis
+    desc, erows, etags, _ = extended(point + "$1", [2], [20])
+    assert (desc, erows, etags) == (cols, rows, tags)
+    client.query("ROLLBACK")
+
+
+def test_failed_tx_plans_nothing_and_execute_answers_25p02(
+        xt, client, rewrites):
+    xt.store.put("pf", [{"_id": 1, "v": 1}], system_from="2024-01-01")
+    client.query("BEGIN")
+    with pytest.raises(RuntimeError):
+        client.query("SELECT * FROM no_such_table_pf")
+    rewrites.clear()
+    desc, rows, _, kinds = _extended_read(
+        client, "SELECT v FROM pf WHERE _id = $1", [1], [20])
+    assert rewrites == []
+    assert desc is None and b"n" in kinds and rows == []
+    assert b"E" in kinds
+    client.query("ROLLBACK")
+
+
+def test_extended_column_names_match_simple(xt, client):
+    """Anonymous items are `_column_<n>` and unquoted identifiers
+    fold to lowercase over both protocols — portal Describe and
+    statement Describe alike."""
+    xt.store.put("cn", [{"_id": 1, "a": 5}], system_from="2024-01-01")
+    for sql, names in [("SELECT 1, upper('x'), a + 1 FROM cn",
+                        ["_column_1", "_column_2", "_column_3"]),
+                       ("SELECT A FROM cn", ["a"])]:
+        (res,), _ = client.query(sql)
+        assert [n for n, _ in res[0]] == names
+        desc, _, _, _ = _extended_read(client, sql)
+        assert desc == res[0]
+        client.send(b"P", client.cstr("cn_st") + client.cstr(sql)
+                    + struct.pack(">h", 0))
+        client.send(b"D", b"S" + client.cstr("cn_st"))
+        client.send(b"S", b"")
+        msgs = _read_until_z(client)
+        assert [_row_desc(b) for t, b in msgs if t == b"T"] == [res[0]]

@@ -158,3 +158,29 @@ def test_results_identical_on_off_battery(xt):
         finally:
             xt.store.sql_auto_prefilter = True
         assert on == off, q
+
+
+def test_each_table_reference_builds_one_scan(xt, monkeypatch):
+    """The prefilter is decided before any scan is built, so a
+    prefiltered point read builds its one store scan once (not a
+    plain scan and then a prefiltered one); two references to the
+    same plain view share one build."""
+    builds = []
+    orig = xt.store.scan
+    monkeypatch.setattr(xt.store, "scan", lambda table, **k: (
+        builds.append((table, k.get("prefilter"))) or orig(table, **k)))
+
+    df = xt.sql("SELECT _id, x FROM ap WHERE _id = 7")
+    assert len(builds) == 1 and builds[0][1] is not None
+    assert [(r["_id"], r["x"]) for r in df.collect()] == [(7, 1007)]
+
+    builds.clear()
+    df = xt.sql("SELECT a._id FROM ap a JOIN ap_dim d "
+                "ON a._id = d._id WHERE a._id = 7 AND d.grp >= 0")
+    assert sorted(t for t, _ in builds) == ["ap", "ap_dim"]
+    assert _ids(df) == [7]
+
+    builds.clear()
+    df = xt.sql("SELECT a._id FROM ap a, ap b WHERE a._id = b._id")
+    assert builds == [("ap", None)]
+    assert len(_ids(df)) == 300

@@ -378,7 +378,7 @@ class _Conn:
         self.ssl_context = ssl_context
         self.buf = b""
         self.statements: dict[str, tuple[str, list[int]]] = {}
-        self.portals: dict[str, str] = {}
+        self.portals: dict[str, dict] = {}
         # explicit transaction block state: None = autocommit, else
         # the buffered submit_tx ops (reference pgwire.clj: DML in
         # BEGIN…COMMIT accumulates and commits as ONE atomic tx)
@@ -1327,7 +1327,11 @@ class _Conn:
                                 f"portal {name!r} does not exist")
                     raise _ResyncAfterError
                 p = self.portals[name]
-                self._describe_sql(p["sql"], p["rfmts"])
+                df = self._portal_df(p)
+                if df is not None:
+                    self._row_description(df, p["rfmts"])
+                else:
+                    self._describe_sql(p["sql"], p["rfmts"])
                 p["described"] = True
         elif t == b"E":                      # Execute
             name, rest = body.split(b"\x00", 1)
@@ -1352,19 +1356,57 @@ class _Conn:
         else:
             self._error("08P01", f"unhandled message type {t!r}")
 
+    # side-effect-free reads: the statements a portal plans before
+    # Execute (anything else may act when built — DML, EXECUTE,
+    # PREPARE, SHOW, SET, COPY)
+    _READ_RE = re.compile(r"^\s*(?:SELECT|WITH|VALUES|SETTING)\b",
+                          re.IGNORECASE)
+
+    def _plan(self, sql: str):
+        """Build a wire read's DataFrame the way _run executes a
+        query: session functions, session zone and the transaction
+        block's basis applied, then `xt.sql` (rewrite, column naming,
+        Spark analysis)."""
+        sql = self._apply_session_zone(
+            self._apply_setting_fns(self._compat_sql(sql)))
+        if self.tx is not None:
+            sql = self._with_tx_basis(sql)
+        return self.xt.sql(sql)
+
+    def _portal_df(self, p: dict):
+        """The portal's DataFrame, for a side-effect-free read: built
+        once, by Describe or else by the first Execute, and kept on
+        the portal until it is closed or rebound (postgres: a portal
+        is a bound, planned statement). None for any other statement
+        and inside a failed transaction — those go through _run,
+        which answers 25P02."""
+        if self.tx_failed or not self._READ_RE.match(p["sql"]):
+            return None
+        if "df" not in p:
+            p["df"] = self._plan(p["sql"])
+        return p["df"]
+
     def _describe_sql(self, sql: str,
                       result_formats: list[int] | None = None) -> None:
+        """Describe of a prepared statement, and of a portal that
+        _portal_df does not plan: RowDescription or NoData, executing
+        nothing. A read is named exactly as Execute names it."""
         if self._SHOW_RE.match(sql):
             self._run(sql, describe_only=True)
             return
-        if _TAG_RE.match(sql) or not sql.strip() or re.search(r"\$\d+", sql):
+        if _TAG_RE.match(sql) or not sql.strip() or self.tx_failed \
+                or re.search(r"\$\d+", sql):
             # unbound params: the client describes the portal after
-            # Bind to get the row shape
+            # Bind to get the row shape; a failed transaction builds
+            # nothing (Execute answers 25P02)
             self._send(b"n")                 # NoData
             return
-        from xtdb_spark.sql.rewriter import rewrite
+        if self._READ_RE.match(sql):
+            df = self._plan(sql)
+        else:
+            from xtdb_spark.sql.rewriter import rewrite
 
-        df = self.xt.spark.sql(rewrite(self.xt, self._compat_sql(sql)))
+            df = self.xt.spark.sql(rewrite(self.xt, self._compat_sql(sql)))
         self._row_description(df, result_formats)
 
     def _execute_portal(self, p: dict, max_rows: int) -> None:
@@ -1372,56 +1414,33 @@ class _Conn:
         pgwire.clj portal execution): `max_rows > 0` returns at most
         that many rows then PortalSuspended ('s'); a later Execute on
         the same portal CONTINUES from where it stopped (JDBC
-        setFetchSize). Execute never re-sends RowDescription once the
-        portal was Described (pgjdbc treats a second 'T' as a new
-        result set); an un-Described portal still gets one so simple
-        clients keep working."""
-        if p["suspended"] is None and max_rows > 0 \
-                and not self.tx_failed \
-                and not (_TAG_RE.match(p["sql"])
-                         or self._SHOW_RE.match(p["sql"])
-                         or self._SET_RE.match(p["sql"])
-                         or self._COPY_RE.match(p["sql"])):
-            # tx blocks included: everything _TAG_RE-excluded is a
-            # query (DML/tx-control all match), and pgjdbc only uses
-            # setFetchSize cursor mode with autocommit OFF — i.e.
-            # inside BEGIN — so suspension must work there
-            from pyspark.sql import DataFrame as _DF
-
-            sql = self._apply_session_zone(
-                self._apply_setting_fns(self._compat_sql(p["sql"])))
-            if self.tx is not None:
-                sql = self._with_tx_basis(sql)
-            df = self.xt.sql(sql)
-            if isinstance(df, _DF):
-                oids = [_oid_of(f.dataType.simpleString())
-                        for f in df.schema.fields]
-                p["suspended"] = {
-                    "iter": df.toLocalIterator(), "oids": oids,
-                    "fmts": _col_formats(len(oids), p["rfmts"]),
-                    "df": df, "sent": 0}
-            else:
-                # the xt.sql call above already EXECUTED the
-                # statement (e.g. EXECUTE of a prepared DML returns a
-                # tx timestamp) — emit the tag directly; re-running
-                # via _run would apply the DML a second time
-                self._send(b"C", self._cstr("OK 0"))
+        setFetchSize — pgjdbc uses it only with autocommit off, so it
+        works inside BEGIN too). Execute never re-sends
+        RowDescription once the portal was Described (pgjdbc treats a
+        second 'T' as a new result set); an un-Described portal still
+        gets one so simple clients keep working. A read runs its
+        kept DataFrame (_portal_df); anything else goes through
+        _run."""
+        s, p["suspended"] = p["suspended"], None
+        if s is None:
+            df = self._portal_df(p)
+            if df is None:
+                self._run(p["sql"], result_formats=p["rfmts"],
+                          send_desc=not p["described"])
                 return
-        if p["suspended"] is not None:
-            s = p["suspended"]
-            if not p["described"] and s["sent"] == 0:
-                self._row_description(s["df"], p["rfmts"])
-            n = self._send_row_iter(s["iter"], s["oids"], s["fmts"],
-                                    max_rows)
-            s["sent"] += n
-            if max_rows and n >= max_rows:
-                self._send(b"s")             # PortalSuspended
-                return
-            p["suspended"] = None
-            self._send(b"C", self._cstr(f"SELECT {s['sent']}"))
+            if not p["described"]:
+                self._row_description(df, p["rfmts"])
+            oids = [_oid_of(f.dataType.simpleString())
+                    for f in df.schema.fields]
+            s = {"iter": df.toLocalIterator(), "oids": oids,
+                 "fmts": _col_formats(len(oids), p["rfmts"]), "sent": 0}
+        n = self._send_row_iter(s["iter"], s["oids"], s["fmts"], max_rows)
+        s["sent"] += n
+        if max_rows and n >= max_rows:
+            p["suspended"] = s
+            self._send(b"s")                 # PortalSuspended
             return
-        self._run(p["sql"], result_formats=p["rfmts"],
-                  send_desc=not p["described"])
+        self._send(b"C", self._cstr(f"SELECT {s['sent']}"))
 
     @staticmethod
     def _bind(sql: str, params: list[str | None], oids: list[int]) -> str:

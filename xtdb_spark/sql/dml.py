@@ -27,6 +27,7 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType, DoubleType, FloatType
 
 from xtdb_spark.sql.rewriter import _tokenize
 from xtdb_spark.sql.rewriter import spark_escape_strings as _esc
@@ -399,8 +400,8 @@ def execute_dml(xt, query: str):
         sets = dict(_split_sets(sets_src))
         meta = ("_iid", "_valid_from", "_valid_to",
                 "_system_from", "_system_to")
-        cur_cols = [c for c in spark.table(view).columns
-                    if c not in meta]
+        cur = spark.table(view)
+        cur_cols = [c for c in cur.columns if c not in meta]
         for col, expr in sets.items():
             if not re.fullmatch(r"[A-Za-z_]\w*", col) or not expr.strip():
                 raise ValueError(f"malformed SET clause near {col!r}")
@@ -415,6 +416,18 @@ def execute_dml(xt, query: str):
         rel = _dml_select(
             xt, f"SELECT {proj} FROM {_from_ref(view, table)}"
             + (f" WHERE {where}" if where else ""))
+        # a decimal literal (`SET c = 0.5` parses as DECIMAL(1,1))
+        # keeps a DOUBLE/FLOAT column's type: a DECIMAL file beside
+        # DOUBLE ones defeats the merged parquet read, and every
+        # later scan would take TableStore._events_lub until
+        # compaction
+        keep = {c: cur.schema[c].dataType for c in sets
+                if isinstance(rel.schema[c].dataType, DecimalType)
+                and isinstance(cur.schema[c].dataType,
+                               (DoubleType, FloatType))}
+        if keep:
+            rel = rel.withColumns({c: rel[c].cast(t)
+                                   for c, t in keep.items()})
         st = xt.store.put(table, rel,
                           valid_from=None if portion else vf,
                           valid_to=None if portion else vt)

@@ -65,7 +65,7 @@ _C_ESCAPES = {"n": "\n", "t": "\t", "r": "\r", "b": "\b", "f": "\f",
               "\\": "\\", "'": "'", '"': '"'}  # \0.. handled as octal
 
 # Query-unique auto-prefilter view bookkeeping (see
-# _inject_auto_prefilters): a process-wide counter makes each
+# _Rewriter._build_scans): a process-wide counter makes each
 # prefiltered registration collision-free across concurrent
 # sessions/threads; a FIFO cap bounds temp-view catalog growth in
 # long-lived servers. The cap is generous (a view is a tiny logical
@@ -77,7 +77,7 @@ _PF_LOCK = threading.Lock()
 _PF_VIEW_CAP = 1024
 
 # diagnostics: the injections performed by the MOST RECENT rewrite
-# (reset per _inject_auto_prefilters call). Test/EXPLAIN aid only —
+# (reset per _build_scans call). Test/EXPLAIN aid only —
 # plan-text assertions are ambiguous because one injection yields two
 # LeftSemi nodes (main + erase-lookup branches) and Catalyst can
 # infer the same transitive literal itself.
@@ -312,7 +312,11 @@ def norm_instant(s):
 
 
 def scan_with_bounds(store, table: str, b: TemporalBounds,
-                     keep_meta: bool = False):
+                     keep_meta: bool = False, **scan_opts):
+    """The resolved scan for one table reference. `scan_opts`
+    (`prefilter=`/`prefilter_mode=`) pass through to
+    TableStore.scan; range bounds resolve from the events instead
+    and take none."""
     from xtdb_spark import bitemporal
 
     if b.valid_range is not None:
@@ -331,6 +335,7 @@ def scan_with_bounds(store, table: str, b: TemporalBounds,
             all_valid_time=b.all_valid,
             all_system_time=b.all_system,
             keep_meta=keep_meta,
+            **scan_opts,
         )
     if getattr(store, "scan_order_ref_iid", False):
         df = _ref_iid_order(df)
@@ -769,8 +774,8 @@ class _Rewriter:
                 else:
                     self.out.append(tok[1])
         remaining = [a for j, a in enumerate(self.args) if j not in self.consumed]
+        self._build_scans()
         self._strip_meta_stars()
-        self._inject_auto_prefilters()
         sql = "".join(self.out)
         sql = self._null_missing_columns(sql)
         if getattr(self, "clock_time", None) is not None:
@@ -1247,20 +1252,12 @@ class _Rewriter:
             view += "__dcl" + _hl.md5(
                 "\x00".join(dcl).encode()).hexdigest()[:8]
         view = re.sub(r"\W", "_", view)
-        df = self._visible(scan_with_bounds(self.xt.store, table, bounds,
-                                            keep_meta=want_meta))
-        if want_meta:
-            df = _with_period_meta(df)
-        if dcl:
-            lower = {c.lower(): c for c in df.columns}
-            df = df.select(*[
-                F.col(lower[c.lower()]).alias(c) if c.lower() in lower
-                else F.lit(None).alias(c)       # schemaless: absent→NULL
-                for c in dcl])
-        df.createOrReplaceTempView(view)
+        # recorded only: run() builds the scan once the whole
+        # statement is seen (_build_scans), so the prefilter decision
+        # comes first and no reference is built twice
         self._scan_refs.append({"table": table, "bounds": bounds,
                                 "view": view, "alias": eff_alias,
-                                "cols": list(df.columns), "dcl": dcl,
+                                "cols": [], "dcl": dcl,
                                 "meta": want_meta,
                                 "out_idx": len(self.out)})
         # preserve an explicit alias; otherwise alias back to the bare
@@ -1273,14 +1270,72 @@ class _Rewriter:
         self._cap = None
         return True
 
-    def _inject_auto_prefilters(self) -> None:
+    def _build_scans(self) -> None:
+        """Build each recorded store table reference's scan exactly
+        once, after the prefilter decision (_auto_prefilters): a
+        prefiltered reference registers under a query-unique
+        `__pf<n>` view and its out slot is pointed there; any other
+        reference registers the plain scan under its shared view
+        (built once per distinct view — a shared name always holds
+        identical content). A prefiltered build that raises
+        (temporal/unknown column etc.) falls back to the plain scan.
+        Fills each reference's `cols` for _strip_meta_stars and
+        _null_missing_columns."""
+        LAST_PREFILTERS.clear()
+        decided = self._auto_prefilters()
+        plain: dict = {}
+        for n, r in enumerate(self._scan_refs):
+            df = None
+            if n in decided:
+                pred, mode, jd = decided[n]
+                try:
+                    df = self._view_df(r, prefilter=pred,
+                                       prefilter_mode=mode)
+                except Exception:
+                    pass          # temporal/unknown column etc. —
+                    #               the plain scan below
+            if df is None:
+                if r["view"] not in plain:
+                    plain[r["view"]] = self._view_df(r)
+                    plain[r["view"]].createOrReplaceTempView(r["view"])
+                df = plain[r["view"]]
+            else:
+                uview = f"{r['view']}__pf{next(_PF_SEQ)}"
+                df.createOrReplaceTempView(uview)
+                self.out[r["out_idx"]] = self.out[r["out_idx"]].replace(
+                    r["view"], uview, 1)
+                _pf_evict(df.sparkSession, uview)
+                LAST_PREFILTERS.append(
+                    {"table": r["table"], "alias": r["alias"],
+                     "pred": pred, "mode": mode,
+                     "join_derived": jd is not None, "view": uview})
+            r["cols"] = list(df.columns)
+
+    def _view_df(self, r, **scan_opts):
+        """One reference's SQL-visible scan: resolved at its bounds,
+        meta columns and derived column list applied."""
+        df = self._visible(scan_with_bounds(self.xt.store, r["table"],
+                                            r["bounds"],
+                                            keep_meta=r["meta"],
+                                            **scan_opts))
+        if r["meta"]:
+            df = _with_period_meta(df)
+        if r["dcl"]:
+            lower = {c.lower(): c for c in df.columns}
+            df = df.select(*[
+                F.col(lower[c.lower()]).alias(c) if c.lower() in lower
+                else F.lit(None).alias(c)       # schemaless: absent→NULL
+                for c in r["dcl"]])
+        return df
+
+    def _auto_prefilters(self) -> dict:
         """Automatic sideways pushdown for temporal-store scans in
         SQL (the reference injects its bloom pushdown automatically,
         join.clj:172-226): conservatively extract the query's
         top-level WHERE conjuncts of the form [alias.]col <op>
         literal, attribute each to a scanned store table by alias
-        (or to a single-relation query's one table), and re-register
-        that scan's view with scan(prefilter=...,
+        (or to a single-relation query's one table), and decide that
+        the reference's scan takes scan(prefilter=...,
         prefilter_mode="auto-stats") — parquet footer statistics
         decide in ~ms whether the candidate semi-join pays; anything
         unparseable, ambiguous, temporal-column, or non-selective
@@ -1288,11 +1343,12 @@ class _Rewriter:
         a result superset and the same conjunct still runs in the
         WHERE, so results are unchanged either way
         (tests/test_sql_auto_prefilter.py). Kill switch:
-        store.sql_auto_prefilter = False.
+        store.sql_auto_prefilter = False. Returns {reference index:
+        (pred, mode, join-derived pred or None)}; builds no scan.
 
         CONCURRENCY: the prefiltered scan registers under a
-        query-UNIQUE view name (__pf<n> suffix) and the emitted SQL
-        is rewritten to reference it. The shared deterministic
+        query-UNIQUE view name (__pf<n> suffix, _build_scans) and the
+        emitted SQL references it. The shared deterministic
         xt__<table>__<bounds> name is race-safe only because its
         content is always the identical plain scan; replacing it
         with query-specific pruned content would let a concurrent
@@ -1300,14 +1356,13 @@ class _Rewriter:
         query's prefilter and drop rows. Unique pf views are evicted
         FIFO past a generous cap so a long-lived pgwire server
         doesn't leak catalog entries."""
-        LAST_PREFILTERS.clear()
         if not getattr(self.xt.store, "sql_auto_prefilter", True):
-            return
-        refs = [r for r in self._scan_refs
+            return {}
+        refs = [(n, r) for n, r in enumerate(self._scan_refs)
                 if r["bounds"].valid_range is None
                 and r["bounds"].system_range is None]
         if not refs:
-            return
+            return {}
         parts = _where_conjuncts(self.toks) or []
         on_parts = _inner_on_conjuncts(self.toks)
         conjs = [c for c in (_simple_conjunct(p) for p in parts) if c]
@@ -1319,13 +1374,14 @@ class _Rewriter:
         equi = [e for e in (_equi_conjunct(p)
                             for p in [*parts, *on_parts]) if e]
         if not conjs and not equi:
-            return
+            return {}
         single = len(self._ref_aliases) == 1
-        for r in refs:
+        decided = {}
+        for n, r in refs:
             if self._ref_aliases.count(r["alias"]) > 1:
                 continue          # self-join / shadowed alias
-            # (same table+bounds twice is fine now: each ref rewrites
-            #  its own out slot to its own query-unique __pf view)
+            # (same table+bounds twice is fine: each ref rewrites its
+            #  own out slot to its own query-unique __pf view)
             mine = [c for c in conjs
                     if c[0] == r["alias"] or (c[0] is None and single)]
             jd = self._join_derived_pred(r, equi, conjs) if equi else None
@@ -1342,38 +1398,8 @@ class _Rewriter:
             # resolution shuffle itself shrinks; literal-only
             # predicates keep the auto-stats gate
             mode = "force-selective" if jd is not None else "auto-stats"
-            b = r["bounds"]
-            try:
-                df = self.xt.store.scan(
-                    r["table"], valid_time=b.valid_asof,
-                    system_time=b.system_asof,
-                    all_valid_time=b.all_valid,
-                    all_system_time=b.all_system,
-                    prefilter=pred, prefilter_mode=mode,
-                    keep_meta=r["meta"])
-            except Exception:
-                continue          # temporal/unknown column etc. —
-                #                   the plain view stays registered
-            df = self._visible(df)
-            if r["meta"]:
-                # the replaced view carried the period pseudo-columns
-                # — the prefiltered replacement must too
-                df = _with_period_meta(df)
-            if r.get("dcl"):
-                lower = {c.lower(): c for c in df.columns}
-                df = df.select(*[
-                    F.col(lower[c.lower()]).alias(c)
-                    if c.lower() in lower else F.lit(None).alias(c)
-                    for c in r["dcl"]])
-            uview = f"{r['view']}__pf{next(_PF_SEQ)}"
-            df.createOrReplaceTempView(uview)
-            self.out[r["out_idx"]] = self.out[r["out_idx"]].replace(
-                r["view"], uview, 1)
-            _pf_evict(df.sparkSession, uview)
-            LAST_PREFILTERS.append(
-                {"table": r["table"], "alias": r["alias"],
-                 "pred": pred, "mode": mode,
-                 "join_derived": jd is not None, "view": uview})
+            decided[n] = (pred, mode, jd)
+        return decided
 
     def _join_derived_pred(self, r, equi, conjs):
         """Join-derived sideways pushdown (the reference pushes
