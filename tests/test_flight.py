@@ -184,27 +184,13 @@ def test_proto_codec_roundtrip():
 
 
 def test_serve_under_concurrent_spark_load(xt):
-    """Round-7 robustness gate: server start + client connect must be
-    reliable while the machine is saturated with Spark work (the
-    judge's saturated-machine run flaked once on connection-refused —
-    serve_flight now waits for the listener, FlightClient retries).
-    20/20 fresh server+client cycles with a churn thread running.
-
-    Timeouts scale with OBSERVED machine load (round-9 de-flake): the
-    in-test churn thread is calibrated for an otherwise-idle box, but
-    a reviewer running their own Spark battery on the same cores
-    roughly multiplies every wait — a fixed 30 s then fails on
-    healthy code. Load-scaled ceilings keep the assertion (cycles
-    must SUCCEED, never hang forever) while tolerating co-located
-    work the test can't control."""
-    import os
+    """Server start + client connect must be reliable while the
+    machine is busy with Spark work: 20/20 fresh server+client cycles
+    with a churn thread running, each first RPC answered. A server
+    answers RPCs once constructed; cycles used to fail when a serve
+    thread of the previous server shut the next one down (see
+    serve_flight)."""
     import threading
-
-    try:
-        scale = max(1.0, os.getloadavg()[0] / (os.cpu_count() or 1))
-    except OSError:
-        scale = 1.0
-    wait = min(300.0, 30.0 * scale)
 
     stop = threading.Event()
 
@@ -218,15 +204,9 @@ def test_serve_under_concurrent_spark_load(xt):
         xt.store.put("load_t", [{"_id": 1, "v": 42}],
                      system_from="2024-01-01")
         for i in range(20):
-            # generous timeouts: late in the full suite the shared JVM
-            # carries real load, and 10s listener-ready has flaked; a
-            # first RPC can also race grpc channel setup — retry once
-            server = serve_flight(xt, ready_timeout=wait)
-            c = FlightClient(server.port, connect_timeout=wait)
-            try:
-                out = c.sql("SELECT v FROM load_t")
-            except Exception:
-                out = c.sql("SELECT v FROM load_t")
+            server = serve_flight(xt)
+            c = FlightClient(server.port)
+            out = c.sql("SELECT v FROM load_t")
             assert out.num_rows == 1 and out.column("v")[0].as_py() == 42
             c.close()
             server.shutdown()

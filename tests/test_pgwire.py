@@ -340,6 +340,23 @@ def test_client_compat_session_functions(client):
     assert results[0][1] == [["read committed"]]
 
 
+def test_show_answers_agree_library_and_wire(xt, client):
+    """`xt.sql("SHOW <name>")`, pgwire `SHOW <name>` and the library's
+    current_setting() answer every static setting alike (one table
+    backs all three), multi-word spelling included."""
+    from xtdb_spark.sql.rewriter import SHOW_VALUES
+
+    for name in [*SHOW_VALUES, "TRANSACTION ISOLATION LEVEL"]:
+        lib = xt.sql(f"SHOW {name}").collect()
+        wire, tags = client.query(f"SHOW {name}")
+        assert [[r[0] for r in lib]] == wire[0][1], name
+        assert tags == ["SHOW"]
+    for name, val in SHOW_VALUES.items():
+        got = xt.sql(f"SELECT current_setting('{name}') AS v").collect()
+        assert got[0]["v"] == val, name
+    assert xt.sql("SHOW server_version").collect()[0][0] == "16.0"
+
+
 # ---- authentication (reference authn.clj:16-71) ----------------------------
 
 def _auth_startup(port, user, password=None, md5=False):

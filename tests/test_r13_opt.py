@@ -9,6 +9,8 @@ import os
 
 import pytest
 
+from xtdb_spark.plans.explain import count_shuffles
+
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR2 = "/root/testdata/sf0.01"
 
@@ -24,7 +26,7 @@ def _plan(df):
 
 # --------------------------------------------------------- item 2
 
-def test_dict_verify_kernel_identical_to_join_path(spark):
+def test_dict_verify_kernel_identical_to_join_path(spark, monkeypatch):
     """ngram + minhash verify through the Arrow-dict kernel vs the
     array_intersect join kernel: same pairs, same jaccard doubles."""
     from xtdb_spark.pipeline import dedup
@@ -32,25 +34,21 @@ def test_dict_verify_kernel_identical_to_join_path(spark):
     docs = spark.read.parquet(os.path.join(SF_DIR2, "documents.parquet"))
     # the pair-volume gate would route this small corpus to the join
     # kernel; force the dict kernel on to pin its equality
-    spark.conf.set("xtdb.dedup.arrowVerify.minPairs", "0")
-    try:
-        fast = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.05,
-                                         max_gram_df=100)
-        assert "InArrow" in _plan(fast), "dict kernel did not engage"
-        a = _rows(fast)
-        assert len(a) > 0
-        mh_fast = _rows(dedup.minhash_lsh_pairs(docs, k=32, bands=8,
-                                                threshold=0.2))
-        spark.conf.set("xtdb.dedup.arrowVerify.maxBytes", "0")
-        slow = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.05,
-                                         max_gram_df=100)
-        assert "InArrow" not in _plan(slow)
-        assert _rows(slow) == a
-        mh_slow = _rows(dedup.minhash_lsh_pairs(docs, k=32, bands=8,
-                                                threshold=0.2))
-    finally:
-        spark.conf.unset("xtdb.dedup.arrowVerify.maxBytes")
-        spark.conf.unset("xtdb.dedup.arrowVerify.minPairs")
+    monkeypatch.setattr(dedup, "_ARROW_VERIFY_MIN_PAIRS", 0)
+    fast = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.05,
+                                     max_gram_df=100)
+    assert "InArrow" in _plan(fast), "dict kernel did not engage"
+    a = _rows(fast)
+    assert len(a) > 0
+    mh_fast = _rows(dedup.minhash_lsh_pairs(docs, k=32, bands=8,
+                                            threshold=0.2))
+    monkeypatch.setattr(dedup, "_ARROW_VERIFY_MAX_BYTES", 0)
+    slow = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.05,
+                                     max_gram_df=100)
+    assert "InArrow" not in _plan(slow)
+    assert _rows(slow) == a
+    mh_slow = _rows(dedup.minhash_lsh_pairs(docs, k=32, bands=8,
+                                            threshold=0.2))
     assert mh_fast == mh_slow and len(mh_fast) > 0
 
 
@@ -140,6 +138,80 @@ _ALLOW = {
 }
 
 
+# Upper bounds on shuffle exchanges in each entry's sf0.001 plan (AQE
+# on, as the catalog runs), pinning the exchange cuts of rounds 12-13
+# (OPTIMIZATION_r12.md / OPTIMIZATION_r13.md tell each story).
+_MAX_SHUFFLES = {
+    "an_daily_retention": 2,
+    "an_top_users_by_value": 2,
+    "an_value_percentiles_by_type": 2,
+    "bitemp_current_state": 1,
+    "bitemp_polygon_rectangles": 12,
+    "cb_minmax_ts": 0,
+    "dyn_nested_legs": 3,
+    "op_agg_approx": 3,
+    "op_agg_percentile": 1,
+    "op_group_by_aggs": 2,
+    "op_window_row_number": 1,
+    "pipe_ann_cosine_topk": 3,
+    "pipe_ann_ivf": 3,
+    "pipe_ann_ivfpq": 4,
+    "pipe_ann_lsh": 2,
+    "pipe_ann_pq": 11,
+    "pipe_bpe_encode": 4,
+    "pipe_bpe_train": 0,
+    "pipe_bpe_word_freqs": 2,
+    "pipe_contamination_check": 2,
+    "pipe_corpus_prep": 3,
+    "pipe_dedup_clusters": 0,
+    "pipe_dedup_embedding_cosine": 0,
+    "pipe_dedup_exact": 2,
+    "pipe_dedup_keep_best": 2,
+    "pipe_dedup_minhash_lsh": 0,
+    "pipe_dedup_ngram_jaccard": 1,
+    "pipe_dedup_semantic": 4,
+    "pipe_dedup_simhash": 7,
+    "pipe_dedup_span_pairs": 3,
+    "pipe_dedup_substring": 3,
+    "pipe_embedding_norms": 2,
+    "pipe_global_shuffle": 2,
+    "pipe_lang_id": 1,
+    "pipe_ngram_topk": 1,
+    "pipe_perplexity_filter": 8,
+    "pipe_pii_redact": 1,
+    "pipe_quality_lr_step": 1,
+    "pipe_quality_lr_train": 0,
+    "pipe_repetition_score": 3,
+    "pipe_sequence_packing": 6,
+    "pipe_stratified_sample": 3,
+    "pipe_text_chunking": 1,
+    "pipe_text_quality": 1,
+    "pipe_token_count": 1,
+    "tpch_q10_returned_items": 1,
+    "tpch_q11_important_stock": 1,
+    "tpch_q12_late_shipments": 1,
+    "tpch_q13_customer_order_distribution": 3,
+    "tpch_q14_promo_effect": 0,
+    "tpch_q15_top_supplier": 1,
+    "tpch_q16_part_supplier_relationship": 3,
+    "tpch_q17_small_quantity_revenue": 1,
+    "tpch_q18_large_volume_customer": 1,
+    "tpch_q19_discounted_revenue": 0,
+    "tpch_q1_pricing_summary": 1,
+    "tpch_q20_potential_promotion": 2,
+    "tpch_q22_global_sales_opportunity": 2,
+    "tpch_q2_min_cost_supplier": 2,
+    "tpch_q3_shipping_priority": 1,
+    "tpch_q4_order_priority": 1,
+    "tpch_q5_local_supplier_volume": 2,
+    "tpch_q6_revenue_forecast": 0,
+    "tpch_q7_volume_shipping": 1,
+    "tpch_q8_national_market_share": 2,
+    "tpch_q9_product_type_profit": 2,
+    "ts_asof_join": 1,
+}
+
+
 def _catalog_names():
     from xtdb_spark.queries import QUERIES
 
@@ -152,20 +224,23 @@ def test_no_expensive_exprs_in_conditions_catalog_wide(spark, name):
     Filter conditions, inferred join-key isnotnull predicates and
     Exchange keys (guide §4.4's trap in JVM form; three spellings
     found and fixed in r12). This pins the WHOLE catalog so a new
-    entry cannot reintroduce a duplicated regex/gram tree."""
+    entry cannot reintroduce a duplicated regex/gram tree. The same
+    plan pins the entry's shuffle count where _MAX_SHUFFLES has one."""
     if name in _ALLOW:
         pytest.skip("documented cheap exception (see _ALLOW)")
     from xtdb_spark.queries import QUERIES
 
-    df = QUERIES[name].fn(spark, SF_DIR)
-    lines = _plan(df).splitlines()
-    suspect = [ln for ln in lines
+    plan = _plan(QUERIES[name].fn(spark, SF_DIR))
+    suspect = [ln for ln in plan.splitlines()
                if ln.lstrip().startswith(("Condition", "Join condition",
                                           "Left keys", "Right keys"))
                or "hashpartitioning(" in ln]
     for tok in _EXPENSIVE:
         bad = [ln for ln in suspect if tok in ln]
         assert not bad, f"{name}: {tok} in {bad[0].strip()[:220]}"
+    if name in _MAX_SHUFFLES:
+        n = count_shuffles(plan)
+        assert n <= _MAX_SHUFFLES[name], f"{name}: {n} shuffles"
 
 
 # ------------------------------------------ gram-pass repartition

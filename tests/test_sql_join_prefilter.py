@@ -25,7 +25,7 @@ def _jd_injections(table=None):
 
 
 @pytest.fixture()
-def xt(spark, tmp_path):
+def xt(spark, tmp_path, monkeypatch):
     s = XtdbSession.__new__(XtdbSession)
     s.spark = spark
     s.store = TableStore(spark, str(tmp_path / "wh"))
@@ -42,7 +42,7 @@ def xt(spark, tmp_path):
     # the production floor (256 MB of fact parquet) exists because
     # the planning probe costs more than a full scan of a small
     # table; tests exercise the mechanism, not the economics
-    s.store.join_prefilter_min_fact_bytes = 0
+    monkeypatch.setattr(rewriter, "JOIN_PREFILTER_MIN_FACT_BYTES", 0)
     return s
 
 

@@ -47,6 +47,8 @@ import struct
 import threading
 from typing import Any
 
+from xtdb_spark.sql.rewriter import SHOW_VALUES, show_name
+
 # cancellation registry: BackendKeyData pid → (secret, live _Conn)
 # (reference pgwire.clj:129 keeps the netty channel registry for the
 # same purpose)
@@ -733,15 +735,6 @@ class _Conn:
         r"(?P<name>[A-Za-z_.]+)\s*(?:=|TO))\s*(?P<val>.+?)\s*;?\s*$",
         re.IGNORECASE | re.DOTALL)
 
-    _SHOW_VALUES = {
-        "role": "none",
-        "server_version": "16.0", "server_encoding": "UTF8",
-        "client_encoding": "UTF8", "datestyle": "ISO",
-        "timezone": "UTC", "integer_datetimes": "on",
-        "standard_conforming_strings": "on", "transaction_isolation":
-        "read committed", "search_path": "public",
-    }
-
     def _run(self, sql: str, describe_only: bool = False,
              result_formats: list[int] | None = None,
              send_desc: bool = True):
@@ -797,11 +790,7 @@ class _Conn:
             return
         m_show = self._SHOW_RE.match(sql)
         if m_show:
-            # multi-word spellings (psql sends `SHOW TRANSACTION
-            # ISOLATION LEVEL`) normalize to the setting name
-            name = "_".join(m_show.group(1).lower().split())
-            name = {"transaction_isolation_level":
-                    "transaction_isolation"}.get(name, name)
+            name = show_name(m_show.group(1))
             # xtdb token variables (Sql.g4:52-54): live values, not
             # static settings — snapshot token = latest committed tx
             # id (the basis the next read runs at; appends are
@@ -816,8 +805,7 @@ class _Conn:
             elif name == "await_token":
                 val = self.settings.get("await_token", "")
             else:
-                val = self.settings.get(name,
-                                        self._SHOW_VALUES.get(name, "on"))
+                val = self.settings.get(name, SHOW_VALUES.get(name, "on"))
             payload = (struct.pack(">h", 1) + self._cstr(name)
                        + struct.pack(">ihihih", 0, 0, 25, -1, -1, 0))
             self._send(b"T", payload)
@@ -1065,7 +1053,7 @@ class _Conn:
         (followed by TO/=/value) are left for their own parsers."""
         def repl(m):
             name = m.group(1).lower()
-            val = self.settings.get(name, self._SHOW_VALUES.get(name))
+            val = self.settings.get(name, SHOW_VALUES.get(name))
             if val is None:
                 return "CAST(NULL AS STRING)"
             return "'" + val.replace("'", "''") + "'"

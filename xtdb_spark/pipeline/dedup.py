@@ -254,10 +254,8 @@ def _hashed_gram_arrays(g: DataFrame) -> DataFrame:
 # broadcast-sized. Local default 256 MB of hashed-gram payload —
 # far above every gate SF (sf1 ≈ 20 MB, the sf10 replica ≈ 100 MB)
 # and far below a 100 TB corpus, which falls back to the
-# distributed array_intersect join kernel below. Parameterised so a
-# cluster can raise it with executor memory.
-_ARROW_VERIFY_MAX_BYTES = "xtdb.dedup.arrowVerify.maxBytes"
-_ARROW_VERIFY_DEFAULT = str(256 << 20)
+# distributed array_intersect join kernel below.
+_ARROW_VERIFY_MAX_BYTES = 256 << 20
 # rows × (2·max_grams) int64 scratch per chunk; the chunker below
 # bounds memory, but a corpus whose LONGEST doc dwarfs the typical
 # doc would waste the rectangular sort on padding — route those to
@@ -268,8 +266,7 @@ _ARROW_VERIFY_MAX_GRAMS = 4096
 # pairs the per-pair savings cannot repay it and the join kernel is
 # faster (measured: minhash sf1, 250 k pairs — join 8.7 s vs dict
 # 10.6 s; ngram sf1, 43.8 M pairs — dict 2× better).
-_ARROW_VERIFY_MIN_PAIRS = "xtdb.dedup.arrowVerify.minPairs"
-_ARROW_VERIFY_MIN_PAIRS_DEFAULT = str(2_000_000)
+_ARROW_VERIFY_MIN_PAIRS = 2_000_000
 
 
 def _arrow_verify_eligible(g: DataFrame) -> bool:
@@ -281,11 +278,10 @@ def _arrow_verify_eligible(g: DataFrame) -> bool:
     if not (isinstance(gtype.get("grams"), ArrayType)
             and isinstance(gtype["grams"].elementType, LongType)):
         return False          # string fallback path — join kernel owns it
-    spark = g.sparkSession
-    cap = int(spark.conf.get(_ARROW_VERIFY_MAX_BYTES, _ARROW_VERIFY_DEFAULT))
     stats = g.agg(F.sum(F.size("grams")).alias("tg"),
                   F.max(F.size("grams")).alias("mg")).collect()[0]
-    return not (stats["tg"] is None or stats["tg"] * 8 > cap
+    return not (stats["tg"] is None
+                or stats["tg"] * 8 > _ARROW_VERIFY_MAX_BYTES
                 or stats["mg"] > _ARROW_VERIFY_MAX_GRAMS)
 
 
@@ -475,8 +471,9 @@ def _jaccard_for_pairs_arrays(g: DataFrame, cand: DataFrame,
     aggregate. Measured 420 s → 54 s on pipe_dedup_ngram_jaccard at
     the sf1 replica (43.8 M candidates × 52 shingles/doc).
 
-    Zero-intersection candidates drop out (matching the exploded
-    kernel, whose inner gram-equality join never emits them).
+    Zero-intersection candidates drop out (their Jaccard is 0, and
+    the exploded gram-equality join this replaced never emitted
+    them).
 
     r13: when the hashed gram relation fits the broadcast gate AND
     the candidate volume is large enough to repay the dictionary
@@ -492,8 +489,6 @@ def _jaccard_for_pairs_arrays(g: DataFrame, cand: DataFrame,
            / (F.col("na") + F.col("nb") - F.col("n_inter")))
     counts = None
     if _arrow_verify_eligible(g):
-        min_pairs = int(g.sparkSession.conf.get(
-            _ARROW_VERIFY_MIN_PAIRS, _ARROW_VERIFY_MIN_PAIRS_DEFAULT))
         n_pairs = pair_hint
         if n_pairs is None:
             # no caller estimate: materialize the candidate set once
@@ -502,7 +497,7 @@ def _jaccard_for_pairs_arrays(g: DataFrame, cand: DataFrame,
             # count it exactly
             cand = checkpoint_df(cand)
             n_pairs = cand.count()
-        if n_pairs >= min_pairs:
+        if n_pairs >= _ARROW_VERIFY_MIN_PAIRS:
             counts = _dict_intersect_counts(g, cand, threshold,
                                             gated=True)
     if counts is None:
@@ -515,31 +510,6 @@ def _jaccard_for_pairs_arrays(g: DataFrame, cand: DataFrame,
     return (counts
             .filter(F.col("n_inter") >= 1)
             .select("id_a", "id_b", jac.alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold))
-
-
-def jaccard_for_pairs(sh: DataFrame, cand: DataFrame,
-                      threshold: float = 0.0) -> DataFrame:
-    """Exact n-gram Jaccard for an EXPLICIT candidate-pair set only —
-    the verify kernel shared by LSH and df-filtered blocking. Work is
-    linear in (candidate pairs × shingles/doc), never all-pairs:
-    candidates join to each side's shingles, intersections come from
-    the gram-equality count, |A∪B| = |A|+|B|−|A∩B|.
-
-    `sh` is a `_shingle_table`; `cand` has (id_a, id_b). Pairs with an
-    empty intersection drop out (their Jaccard is 0)."""
-    inter = (cand
-             .join(sh.alias("a"), F.col("id_a") == F.col("a.id"))
-             .join(sh.alias("b"),
-                   (F.col("id_b") == F.col("b.id"))
-                   & (F.col("a.gram") == F.col("b.gram")))
-             .groupBy("id_a", "id_b",
-                      F.col("a.n_grams").alias("na"),
-                      F.col("b.n_grams").alias("nb"))
-             .agg(F.count("*").alias("n_inter")))
-    jac = (F.col("n_inter").cast("double")
-           / (F.col("na") + F.col("nb") - F.col("n_inter")))
-    return (inter.select("id_a", "id_b", jac.alias("jaccard"))
             .filter(F.col("jaccard") >= threshold))
 
 
@@ -618,29 +588,18 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     g = _hashed_gram_arrays(gs)
     sh = g.select("id", F.size("grams").alias("n_grams"),
                   F.explode_outer("grams").alias("gram"))
-    if True:
-        # exact blocking on every shared shingle; the intersection
-        # count falls straight out of the one blocking join
-        a, b = sh.alias("a"), sh.alias("b")
-        inter = (a.join(b, (F.col("a.gram") == F.col("b.gram"))
-                        & (F.col("a.id") < F.col("b.id")))
-                 .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                          F.col("a.n_grams").alias("na"), F.col("b.n_grams").alias("nb"))
-                 .agg(F.count("*").alias("n_inter")))
-        jac = (F.col("n_inter").cast("double")
-               / (F.col("na") + F.col("nb") - F.col("n_inter")))
-        return (inter.select("id_a", "id_b", jac.alias("jaccard"))
-                .filter(F.col("jaccard") >= threshold))
-    rare = (sh.groupBy("gram").agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") <= max_gram_df))
-    block = sh.join(rare.select("gram"), "gram", "left_semi")
-    cand = (block.alias("a")
-            .join(block.alias("b"),
-                  (F.col("a.gram") == F.col("b.gram"))
-                  & (F.col("a.id") < F.col("b.id")))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct())
-    return _jaccard_for_pairs_arrays(g, cand, threshold)
+    # exact blocking on every shared shingle; the intersection count
+    # falls straight out of the one blocking join
+    a, b = sh.alias("a"), sh.alias("b")
+    inter = (a.join(b, (F.col("a.gram") == F.col("b.gram"))
+                    & (F.col("a.id") < F.col("b.id")))
+             .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+                      F.col("a.n_grams").alias("na"), F.col("b.n_grams").alias("nb"))
+             .agg(F.count("*").alias("n_inter")))
+    jac = (F.col("n_inter").cast("double")
+           / (F.col("na") + F.col("nb") - F.col("n_inter")))
+    return (inter.select("id_a", "id_b", jac.alias("jaccard"))
+            .filter(F.col("jaccard") >= threshold))
 
 
 def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",

@@ -100,11 +100,16 @@ class PlanFacts:
         return True
 
 
+def count_shuffles(text: str) -> int:
+    """Shuffle exchanges in a formatted plan: formatted mode lists
+    `(N) Exchange` nodes with the partitioning on an Arguments: line;
+    BroadcastExchange is not a shuffle."""
+    return len(re.findall(r"Arguments: (?:hash|range)partitioning", text))
+
+
 def analyze(df: DataFrame) -> PlanFacts:
     text = formatted_plan(df)
     cg = codegen_plan(df)
-    # formatted mode lists `(N) Exchange` nodes with the partitioning
-    # on an Arguments: line; BroadcastExchange is not a shuffle.
     # Codegen span count comes from the dedicated codegen mode (AQE
     # hides `*(N)` markers in simple mode before execution).
     return PlanFacts(
@@ -114,8 +119,7 @@ def analyze(df: DataFrame) -> PlanFacts:
         read_schemas=re.findall(r"ReadSchema: struct<([^>]*)>", text),
         n_broadcast_joins=len(re.findall(r"BroadcastHashJoin", text)),
         n_sortmerge_joins=len(re.findall(r"SortMergeJoin", text)),
-        n_shuffles=len(re.findall(
-            r"Arguments: (?:hash|range)partitioning", text)),
+        n_shuffles=count_shuffles(text),
         codegen_spans=int((re.search(
             r"Found (\d+) WholeStageCodegen subtrees", cg) or [0, 0])[1]),
     )

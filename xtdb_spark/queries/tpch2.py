@@ -236,7 +236,7 @@ def q11(spark, sf_dir, big=None):
     # beyond that the window is a one-task straggler over |part| rows
     # and the broadcast 1-row aggregate takes over, re-reading the
     # aggregate's shuffle via ReuseExchange instead of re-computing
-    # (plan: plans/r12/tpch_q11_important_stock_after_bigscale.txt).
+    # (tests/test_r12_opt.py::test_global_scalar_big_path_reuses_exchange).
     # Both paths produce identical rows (tests/test_r12_opt.py).
     if big is None:
         big = big_input(sf_dir, "part", 256 << 20)

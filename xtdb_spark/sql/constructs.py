@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import re
 
-from xtdb_spark.sql.rewriter import _TOKEN_RE, _tokenize, _unquote
+from xtdb_spark.sql.rewriter import SHOW_VALUES, _TOKEN_RE, _tokenize, _unquote
 
 _TRIGGER_RE = re.compile(
     r"[{\[]|\bNEST_ONE\b|\bNEST_MANY\b|\bRECORDS\b"
@@ -1051,8 +1051,9 @@ class _Translator:
                 if up == "CURRENT_SETTING" and \
                         self._peek(1) == ("punct", "(") \
                         and not self.postfix:
-                    # node-level settings for the library surface
-                    # (pgwire answers per-connection)
+                    # node-level settings for the library surface, the
+                    # table SHOW answers from (pgwire answers
+                    # per-connection)
                     expr_start = len(parts)
                     self._next()
                     self._skip_ws()
@@ -1061,12 +1062,9 @@ class _Translator:
                     arg = self._walk(closers=(")",)).strip()
                     if self._peek() == ("punct", ")"):
                         self._next()
-                    parts.append(
-                        f"(CASE lower({arg}) "
-                        "WHEN 'timezone' THEN 'UTC' "
-                        "WHEN 'server_version' THEN '16' "
-                        "WHEN 'standard_conforming_strings' THEN 'on' "
-                        "END)")
+                    parts.append(f"(CASE lower({arg}) " + "".join(
+                        f"WHEN '{k}' THEN '{v}' "
+                        for k, v in SHOW_VALUES.items()) + "END)")
                     self.postfix = True
                     last_sig = ""
                     continue

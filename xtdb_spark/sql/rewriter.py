@@ -76,6 +76,13 @@ _PF_VIEWS: deque = deque()
 _PF_LOCK = threading.Lock()
 _PF_VIEW_CAP = 1024
 
+# Join-derived prefilter gates (_Rewriter._join_derived_pred): the most
+# build-side keys an injected IN list carries, and the smallest fact
+# table (parquet bytes) worth the planning probe — measured at
+# 2M/20M rows, the probe job costs more than it saves below 256 MB.
+JOIN_PREFILTER_KEY_CAP = 64
+JOIN_PREFILTER_MIN_FACT_BYTES = 256 * 1024 * 1024
+
 # diagnostics: the injections performed by the MOST RECENT rewrite
 # (reset per _build_scans call). Test/EXPLAIN aid only —
 # plan-text assertions are ambiguous because one injection yields two
@@ -1427,8 +1434,8 @@ class _Rewriter:
 
         Injection fires only when (a) the fact table is big enough
         for the planning probe to pay
-        (store.join_prefilter_min_fact_bytes, default 256 MB of
-        parquet — measured at 2M/20M rows: the probe job costs more
+        (JOIN_PREFILTER_MIN_FACT_BYTES, 256 MB of parquet —
+        measured at 2M/20M rows: the probe job costs more
         than it saves below that), (b) the fact-side footer estimate
         for the IN is at/below the calibrated prefilter threshold,
         and (c) the estimated candidate set fits the broadcast
@@ -1438,8 +1445,8 @@ class _Rewriter:
         exists). Numeric keys only (strings have no footer
         point-mass estimate). An empty build key set lowers to
         `false` — the inner join is provably empty. Kill switch:
-        store.sql_join_prefilter = False; caps:
-        store.join_prefilter_key_cap (default 64)."""
+        store.sql_join_prefilter = False; at most
+        JOIN_PREFILTER_KEY_CAP (64) keys."""
         import os
 
         from pyspark.sql import functions as F
@@ -1447,14 +1454,12 @@ class _Rewriter:
         store = self.xt.store
         if not getattr(store, "sql_join_prefilter", True):
             return None
-        cap = getattr(store, "join_prefilter_key_cap", 64)
         try:
             ffiles = store.table_files(r["table"])
             fact_bytes = sum(os.path.getsize(f) for f in ffiles)
         except Exception:
             return None
-        if fact_bytes < getattr(store, "join_prefilter_min_fact_bytes",
-                                256 * 1024 * 1024):
+        if fact_bytes < JOIN_PREFILTER_MIN_FACT_BYTES:
             return None           # probe job costs more than a full
             #                       scan of a table this small
         preds = []                # star joins COMPOSE: every
@@ -1494,12 +1499,12 @@ class _Rewriter:
                 # window-shuffle job
                 bdf = store.events(bref["table"])
                 # planning-time collect, bounded BY CONSTRUCTION to
-                # cap+1 rows (cap = 64, set above) — never data-sized
-                rows = (bdf.where(F.expr(bpred)).select(cb)
-                        .distinct().limit(cap + 1).collect())
+                # JOIN_PREFILTER_KEY_CAP + 1 rows — never data-sized
+                rows = (bdf.where(F.expr(bpred)).select(cb).distinct()
+                        .limit(JOIN_PREFILTER_KEY_CAP + 1).collect())
             except Exception:
                 continue
-            if len(rows) > cap:
+            if len(rows) > JOIN_PREFILTER_KEY_CAP:
                 continue
             keys = sorted({row[0] for row in rows
                            if row[0] is not None})
@@ -1916,6 +1921,27 @@ _EXPLAIN_RE = re.compile(r"^\s*EXPLAIN(\s+ANALYZE)?\s+", re.IGNORECASE)
 _SHOW_CANNED_RE = re.compile(
     r"^\s*SHOW\s+([A-Za-z_ ]+?)\s*;?\s*$", re.IGNORECASE)
 
+# Static answers to SHOW <name> (reference pgwire canned responses;
+# sql_test.clj show-canned-responses): the library sql surface answers
+# from this table, pgwire from a connection's SET values over it.
+SHOW_VALUES = {
+    "role": "none",
+    "server_version": "16.0", "server_encoding": "UTF8",
+    "client_encoding": "UTF8", "datestyle": "ISO",
+    "timezone": "UTC", "integer_datetimes": "on",
+    "standard_conforming_strings": "on", "transaction_isolation":
+    "read committed", "search_path": "public",
+}
+
+
+def show_name(spelled: str) -> str:
+    """SHOW's setting name: multi-word spellings (psql sends `SHOW
+    TRANSACTION ISOLATION LEVEL`) normalize to the setting name."""
+    name = "_".join(spelled.lower().split())
+    return {"transaction_isolation_level":
+            "transaction_isolation"}.get(name, name)
+
+
 _XTQL_RE = re.compile(
     r"^\s*XTQL\s*(?:\(\s*)?'(?P<q>(?:[^']|'')*)'\s*\)?\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
@@ -1965,20 +1991,10 @@ def rewrite_and_run(xt, query: str, args: list | None = None):
 
     sm = _SHOW_CANNED_RE.match(query)
     if sm:
-        # canned SHOW responses (reference pgwire canned-responses;
-        # sql_test.clj show-canned-responses) for the LIBRARY sql
-        # surface — the pgwire layer answers these per-connection
-        name = "_".join(sm.group(1).lower().split())
-        name = {"transaction_isolation_level":
-                "transaction_isolation"}.get(name, name)
-        vals = {"transaction_isolation": "read committed",
-                "standard_conforming_strings": "on",
-                "server_version": "16",
-                "server_encoding": "UTF8",
-                "client_encoding": "UTF8"}
-        if name in vals:
+        name = show_name(sm.group(1))
+        if name in SHOW_VALUES:
             return xt.spark.createDataFrame(
-                [(vals[name],)], f"{name} string")
+                [(SHOW_VALUES[name],)], f"{name} string")
     m = _EXPLAIN_RE.match(query)
     if m:
         # EXPLAIN [ANALYZE] <query> (reference Sql.g4 / query.clj:210-277):
