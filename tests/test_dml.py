@@ -308,6 +308,37 @@ def test_put_batch_duplicate_id_last_wins_spark_fallback(xt):
     assert len(rows) == 1 and rows[0]["v"]["a"] == 2
 
 
+def test_insert_decimal_literal_keeps_double_column(xt, monkeypatch):
+    """INSERT VALUES and INSERT SELECT cast a DECIMAL literal back to
+    the DOUBLE column it lands in, like UPDATE; a float8-bound write
+    (the `D` suffix pgwire binds) never reads the table's schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    xt.store.put("acct", [{"_id": i, "bal": i + 0.25} for i in range(3)])
+    xt.sql("INSERT INTO acct (_id, bal) VALUES (3, 1.5)")
+    xt.sql("INSERT INTO acct (_id, bal) SELECT 4, 2.5")
+    reads = []
+    orig_events = TableStore.events
+    monkeypatch.setattr(TableStore, "events",
+                        lambda self, table, files=None: reads.append(table)
+                        or orig_events(self, table, files))
+    xt.sql("INSERT INTO acct (_id, bal) VALUES (5, 3.5D)")
+    assert reads == []
+    assert [pq.read_schema(f).field("bal").type
+            for f in xt.store.table_files("acct")] == [pa.float64()] * 4
+    lub = []
+    orig = TableStore._events_lub
+    monkeypatch.setattr(TableStore, "_events_lub",
+                        lambda self, files: lub.append(files)
+                        or orig(self, files))
+    df = xt.scan("acct")
+    assert dict(df.dtypes)["bal"] == "double"
+    assert {r["_id"]: r["bal"] for r in df.collect()} == \
+        {0: 0.25, 1: 1.25, 2: 2.25, 3: 1.5, 4: 2.5, 5: 3.5}
+    assert lub == []
+
+
 def test_update_decimal_literal_keeps_double_column(xt, monkeypatch):
     """`SET bal = 0.5` parses as DECIMAL(1,1): written as is beside
     DOUBLE files it would defeat the merged parquet read, and every

@@ -340,10 +340,13 @@ def test_client_compat_session_functions(client):
     assert results[0][1] == [["read committed"]]
 
 
-def test_show_answers_agree_library_and_wire(xt, client):
+def test_show_answers_agree_library_and_wire(xt, server, client):
     """`xt.sql("SHOW <name>")`, pgwire `SHOW <name>` and the library's
     current_setting() answer every static setting alike (one table
-    backs all three), multi-word spelling included."""
+    backs all three), multi-word spelling included. pgwire answers
+    an unknown name with 42704 (not `on`), `transaction_read_only`
+    with the open block's access mode, and SET and startup
+    parameters from the session."""
     from xtdb_spark.sql.rewriter import SHOW_VALUES
 
     for name in [*SHOW_VALUES, "TRANSACTION ISOLATION LEVEL"]:
@@ -355,6 +358,36 @@ def test_show_answers_agree_library_and_wire(xt, client):
         got = xt.sql(f"SELECT current_setting('{name}') AS v").collect()
         assert got[0]["v"] == val, name
     assert xt.sql("SHOW server_version").collect()[0][0] == "16.0"
+
+    for name in ("no_such_setting", "application_name"):
+        with pytest.raises(RuntimeError, match="42704"):
+            client.query(f"SHOW {name}")
+
+    def show(c, name):
+        return c.query(f"SHOW {name}")[0][0][1][0][0]
+
+    assert show(client, "transaction_read_only") == "off"
+    client.query("BEGIN READ ONLY")
+    assert show(client, "transaction_read_only") == "on"
+    client.query("COMMIT")
+    assert show(client, "transaction_read_only") == "off"
+    client.query("BEGIN READ WRITE")
+    assert show(client, "transaction_read_only") == "off"
+    client.query("COMMIT")
+
+    client.query("SET application_name = 'probe'")
+    assert show(client, "application_name") == "probe"
+    c = PgClient(server.port)
+    body = (struct.pack(">i", 196608) + c.cstr("user") + c.cstr("test")
+            + c.cstr("database") + c.cstr("xtdb")
+            + c.cstr("application_name") + c.cstr("from_startup") + b"\x00")
+    c.sock.sendall(struct.pack(">i", len(body) + 4) + body)
+    _drain_to_ready(c)
+    try:
+        assert show(c, "application_name") == "from_startup"
+        assert show(c, "timezone") == "UTC"
+    finally:
+        c.close()
 
 
 # ---- authentication (reference authn.clj:16-71) ----------------------------

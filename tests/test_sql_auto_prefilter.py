@@ -8,6 +8,7 @@ the extractor can't prove."""
 import pytest
 from pyspark.sql import functions as F
 
+from xtdb_spark.plans.explain import count_shuffles, formatted_plan
 from xtdb_spark.session import XtdbSession
 from xtdb_spark.tx import TableStore
 
@@ -36,15 +37,37 @@ def _ids(df):
     return sorted(r["_id"] for r in df.collect())
 
 
-def test_selective_conjunct_injects_semi_join(xt):
-    # footer stats: _id = 7 ≈ 1/300 — well under the 0.5% threshold
-    df = xt.sql("SELECT _id, x FROM ap WHERE _id = 7")
+def _point_read(xt, monkeypatch, sql):
+    """Run `sql`, asserting its one `_id`-pinned reference read
+    through TableStore.lookup — no candidate semi-join, and a lookup
+    that plans no shuffle."""
+    got = []
+    orig = xt.store.lookup
+    monkeypatch.setattr(xt.store, "lookup",
+                        lambda *a, **k: got.append(orig(*a, **k)) or got[-1])
+    df = xt.sql(sql)
+    monkeypatch.setattr(xt.store, "lookup", orig)
+    assert "LeftSemi" not in _plan(df)
+    assert len(got) == 1
+    assert count_shuffles(formatted_plan(got[0])) == 0
+    return df
+
+
+def test_selective_conjunct_injects_semi_join(xt, monkeypatch):
+    # footer stats: x = 1007 ≈ 1/1100 — well under the 0.5% threshold
+    df = xt.sql("SELECT _id, x FROM ap WHERE x = 1007")
     assert "LeftSemi" in _plan(df)
     assert [(r["_id"], r["x"]) for r in df.collect()] == [(7, 1007)]
     # qualified by alias too
-    df = xt.sql("SELECT a._id FROM ap AS a WHERE a._id = 7 "
+    df = xt.sql("SELECT a._id FROM ap AS a WHERE a.x = 1007 "
                 "AND a.x >= 0")
     assert "LeftSemi" in _plan(df)
+    assert _ids(df) == [7]
+    # an `_id` conjunct reads the one entity instead
+    df = _point_read(xt, monkeypatch, "SELECT _id, x FROM ap WHERE _id = 7")
+    assert [(r["_id"], r["x"]) for r in df.collect()] == [(7, 1007)]
+    df = _point_read(xt, monkeypatch, "SELECT a._id FROM ap AS a "
+                     "WHERE a._id = 7 AND a.x >= 0")
     assert _ids(df) == [7]
 
 
@@ -54,7 +77,7 @@ def test_broad_conjunct_leaves_plain_scan(xt):
     assert len(_ids(df)) == 300
 
 
-def test_unsafe_shapes_bail_out(xt):
+def test_unsafe_shapes_bail_out(xt, monkeypatch):
     # OR at conjunction level
     assert "LeftSemi" not in _plan(
         xt.sql("SELECT _id FROM ap WHERE _id = 7 OR _id = 9"))
@@ -74,9 +97,20 @@ def test_unsafe_shapes_bail_out(xt):
     # unique names, both refs shared one view and injection had to
     # bail). Results unchanged either way.
     df = xt.sql("SELECT a._id AS ia, b._id AS ib FROM ap a, ap b "
-                "WHERE a._id = 7 AND b._id >= 0")
+                "WHERE a.x = 1007 AND b._id >= 0")
     assert "LeftSemi" in _plan(df)
     assert df.count() == 300
+    # the same shape pinned by `_id`: a reads one entity, b stays a
+    # plain scan
+    df = _point_read(xt, monkeypatch, "SELECT a._id AS ia, b._id AS ib "
+                     "FROM ap a, ap b WHERE a._id = 7 AND b._id >= 0")
+    assert df.count() == 300
+    # a derived table's columns are not the store table's: no
+    # conjunct is attributed through it
+    df = xt.sql("SELECT * FROM (SELECT x + 1 AS x, _id FROM ap) s "
+                "WHERE x = 201")
+    assert "LeftSemi" not in _plan(df)
+    assert [tuple(r) for r in df.collect()] == [(201, 200)]
 
 
 def test_prefilter_views_are_query_unique_no_interleave_race(xt):
@@ -98,19 +132,26 @@ def test_prefilter_views_are_query_unique_no_interleave_race(xt):
     assert len(_ids(xt.sql("SELECT _id FROM ap WHERE x >= 0"))) == 300
 
 
-def test_qualified_conjuncts_attribute_per_table(xt):
-    # d.grp = 2 is selective on the dim per footer stats (1/5 > 0.5%
-    # → actually broad); a._id = 7 is selective on the fact
+def test_qualified_conjuncts_attribute_per_table(xt, monkeypatch):
+    # d.grp >= 0 is broad on the dim per footer stats; a.x = 1007 is
+    # selective on the fact
     df = xt.sql("SELECT a._id FROM ap a JOIN ap_dim d "
-                "ON a._id = d._id WHERE a._id = 7 AND d.grp >= 0")
+                "ON a._id = d._id WHERE a.x = 1007 AND d.grp >= 0")
     assert "LeftSemi" in _plan(df)
+    assert _ids(df) == [7]
+    # a._id = 7 pins the fact to one entity
+    df = _point_read(xt, monkeypatch, "SELECT a._id FROM ap a JOIN ap_dim d "
+                     "ON a._id = d._id WHERE a._id = 7 AND d.grp >= 0")
     assert _ids(df) == [7]
 
 
-def test_temporal_bounds_compose_with_injection(xt):
+def test_temporal_bounds_compose_with_injection(xt, monkeypatch):
     df = xt.sql("SELECT _id, x FROM ap FOR SYSTEM_TIME AS OF "
-                "TIMESTAMP '2024-03-01' WHERE _id = 7")
+                "TIMESTAMP '2024-03-01' WHERE x = 7")
     assert "LeftSemi" in _plan(df)
+    assert [(r["_id"], r["x"]) for r in df.collect()] == [(7, 7)]
+    df = _point_read(xt, monkeypatch, "SELECT _id, x FROM ap FOR SYSTEM_TIME "
+                     "AS OF TIMESTAMP '2024-03-01' WHERE _id = 7")
     assert [(r["_id"], r["x"]) for r in df.collect()] == [(7, 7)]
 
 
@@ -162,22 +203,34 @@ def test_results_identical_on_off_battery(xt):
 
 def test_each_table_reference_builds_one_scan(xt, monkeypatch):
     """The prefilter is decided before any scan is built, so a
-    prefiltered point read builds its one store scan once (not a
-    plain scan and then a prefiltered one); two references to the
-    same plain view share one build."""
+    prefiltered read builds its one store scan once (not a plain
+    scan and then a prefiltered one); a point read builds none (it
+    reads through lookup); two references to the same plain view
+    share one build."""
     builds = []
     orig = xt.store.scan
     monkeypatch.setattr(xt.store, "scan", lambda table, **k: (
         builds.append((table, k.get("prefilter"))) or orig(table, **k)))
 
-    df = xt.sql("SELECT _id, x FROM ap WHERE _id = 7")
+    df = xt.sql("SELECT _id, x FROM ap WHERE x = 1007")
     assert len(builds) == 1 and builds[0][1] is not None
     assert [(r["_id"], r["x"]) for r in df.collect()] == [(7, 1007)]
 
     builds.clear()
+    df = _point_read(xt, monkeypatch, "SELECT _id, x FROM ap WHERE _id = 7")
+    assert builds == []
+    assert [(r["_id"], r["x"]) for r in df.collect()] == [(7, 1007)]
+
+    builds.clear()
     df = xt.sql("SELECT a._id FROM ap a JOIN ap_dim d "
-                "ON a._id = d._id WHERE a._id = 7 AND d.grp >= 0")
+                "ON a._id = d._id WHERE a.x = 1007 AND d.grp >= 0")
     assert sorted(t for t, _ in builds) == ["ap", "ap_dim"]
+    assert _ids(df) == [7]
+
+    builds.clear()
+    df = _point_read(xt, monkeypatch, "SELECT a._id FROM ap a JOIN ap_dim d "
+                     "ON a._id = d._id WHERE a._id = 7 AND d.grp >= 0")
+    assert [t for t, _ in builds] == ["ap_dim"]
     assert _ids(df) == [7]
 
     builds.clear()

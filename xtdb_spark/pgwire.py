@@ -473,6 +473,13 @@ class _Conn:
             return False
         self.replication = params.get("replication", "") in (
             "database", "true", "on", "1")
+        # the remaining startup parameters are session settings, as
+        # in postgres (application_name, …) — except TimeZone: the
+        # session zone stays UTC until an explicit SET TIME ZONE
+        self.settings.update(
+            (k.lower(), v) for k, v in params.items()
+            if k.lower() not in ("user", "database", "replication",
+                                 "options", "timezone"))
         self._send(b"R", struct.pack(">i", 0))  # AuthenticationOk
         for k, v in (("server_version", "16.0 (xtdb_spark)"),
                      ("server_encoding", "UTF8"),
@@ -791,21 +798,11 @@ class _Conn:
         m_show = self._SHOW_RE.match(sql)
         if m_show:
             name = show_name(m_show.group(1))
-            # xtdb token variables (Sql.g4:52-54): live values, not
-            # static settings — snapshot token = latest committed tx
-            # id (the basis the next read runs at; appends are
-            # synchronous so indexed == committed), clock time = the
-            # node's current wall clock
-            if name == "snapshot_token":
-                val = str(self._latest_tx_id() or "")
-            elif name == "clock_time":
-                import datetime as _dtm
-
-                val = _dtm.datetime.now(_dtm.timezone.utc).isoformat()
-            elif name == "await_token":
-                val = self.settings.get("await_token", "")
-            else:
-                val = self.settings.get(name, SHOW_VALUES.get(name, "on"))
+            val = self._setting(name)
+            if val is None:
+                self._error("42704", "unrecognized configuration "
+                            f'parameter "{name}"')
+                return
             payload = (struct.pack(">h", 1) + self._cstr(name)
                        + struct.pack(">ihihih", 0, 0, 25, -1, -1, 0))
             self._send(b"T", payload)
@@ -968,9 +965,6 @@ class _Conn:
         opts: dict = {}
         if re.search(r"(?i)\bREAD\s+ONLY\b", body):
             opts["read_only"] = True
-            self.settings["transaction_read_only"] = "on"
-        elif re.search(r"(?i)\bREAD\s+WRITE\b", body):
-            self.settings["transaction_read_only"] = "off"
         iso = re.search(r"(?i)ISOLATION\s+LEVEL\s+"
                         r"([A-Za-z]+(?:\s+[A-Za-z]+)?)", body)
         if iso:
@@ -1043,6 +1037,31 @@ class _Conn:
                                 r"(?!\s*(?:\(|TO\b|=))",
                                 re.IGNORECASE)
 
+    def _setting(self, name: str) -> str | None:
+        """A setting as SHOW and current_setting() report it; None
+        for a name the connection does not know. The xtdb token
+        variables (Sql.g4:52-54) are live values, not static settings
+        — snapshot token = latest committed tx id (the basis the next
+        read runs at; appends are synchronous so indexed ==
+        committed), clock time = the node's current wall clock.
+        `transaction_read_only` is the open block's access mode, and
+        outside a block the session default (SET SESSION
+        CHARACTERISTICS, else off). Anything else is a SET or
+        startup value over the static table."""
+        if name == "snapshot_token":
+            return str(self._latest_tx_id() or "")
+        if name == "clock_time":
+            import datetime as _dtm
+
+            return _dtm.datetime.now(_dtm.timezone.utc).isoformat()
+        if name == "await_token":
+            return self.settings.get("await_token", "")
+        if name == "transaction_read_only":
+            if self.tx is not None:
+                return "on" if self.tx_opts.get("read_only") else "off"
+            return self.settings.get(name, "off")
+        return self.settings.get(name, SHOW_VALUES.get(name))
+
     def _apply_setting_fns(self, sql: str) -> str:
         """current_setting('name') (reference Sql.g4:364
         CurrentSettingFunction) → the session's value as a literal —
@@ -1052,8 +1071,7 @@ class _Conn:
         SNAPSHOT_TOKEN reports); the SETTING/tx-option spellings
         (followed by TO/=/value) are left for their own parsers."""
         def repl(m):
-            name = m.group(1).lower()
-            val = self.settings.get(name, SHOW_VALUES.get(name))
+            val = self._setting(m.group(1).lower())
             if val is None:
                 return "CAST(NULL AS STRING)"
             return "'" + val.replace("'", "''") + "'"

@@ -278,6 +278,31 @@ def _dml_select(xt, sql: str):
     return xt.spark.sql(_esc(sql))
 
 
+def _keep_float_columns(xt, table: str, rel, schema=None):
+    """`rel` with every DECIMAL column cast back to the DOUBLE/FLOAT
+    type the same column has in `table`: a decimal literal (`1.5`
+    parses as DECIMAL(2,1)) keeps the column's type. A DECIMAL file
+    beside DOUBLE ones defeats the merged parquet read, and every
+    later scan would take TableStore._events_lub until compaction.
+    The table's schema (`schema`, else the stored events') is read
+    only when `rel` has a DECIMAL column, so float8-bound writes
+    pay nothing."""
+    dec = [f.name for f in rel.schema.fields
+           if isinstance(f.dataType, DecimalType)]
+    if not dec:
+        return rel
+    if schema is None:
+        if not xt.store.table_files(table):
+            return rel
+        schema = xt.store.events(table).schema
+    keep = {c: schema[c].dataType for c in dec
+            if c in schema.fieldNames()
+            and isinstance(schema[c].dataType, (DoubleType, FloatType))}
+    if not keep:
+        return rel
+    return rel.withColumns({c: rel[c].cast(t) for c, t in keep.items()})
+
+
 def execute_dml(xt, query: str):
     spark = xt.spark
     # XTDB dialect constructs first: `INSERT INTO t RECORDS {…}` /
@@ -293,7 +318,9 @@ def execute_dml(xt, query: str):
         cols = [c.strip() for c in m.group("cols").split(",")]
         rel = spark.sql(_esc(
             f"SELECT * FROM (VALUES {m.group('values')}) AS t({', '.join(cols)})"))
-        st = xt.store.put(_fold_table(m.group("table")), rel)
+        table = _fold_table(m.group("table"))
+        rel = _keep_float_columns(xt, table, rel)
+        st = xt.store.put(table, rel)
         return _returning(spark, rel, ret, st)
 
     m = _PATCH_RE.match(query)
@@ -321,7 +348,9 @@ def execute_dml(xt, query: str):
         rel = spark.sql(rewrite(xt, m.group("select")))
         if m.group("cols"):
             rel = rel.toDF(*[c.strip() for c in m.group("cols").split(",")])
-        st = xt.store.put(_fold_table(m.group("table")), rel)
+        table = _fold_table(m.group("table"))
+        rel = _keep_float_columns(xt, table, rel)
+        st = xt.store.put(table, rel)
         return _returning(spark, rel, ret, st)
 
     m = _PATCH_SELECT_RE.match(query)
@@ -416,18 +445,7 @@ def execute_dml(xt, query: str):
         rel = _dml_select(
             xt, f"SELECT {proj} FROM {_from_ref(view, table)}"
             + (f" WHERE {where}" if where else ""))
-        # a decimal literal (`SET c = 0.5` parses as DECIMAL(1,1))
-        # keeps a DOUBLE/FLOAT column's type: a DECIMAL file beside
-        # DOUBLE ones defeats the merged parquet read, and every
-        # later scan would take TableStore._events_lub until
-        # compaction
-        keep = {c: cur.schema[c].dataType for c in sets
-                if isinstance(rel.schema[c].dataType, DecimalType)
-                and isinstance(cur.schema[c].dataType,
-                               (DoubleType, FloatType))}
-        if keep:
-            rel = rel.withColumns({c: rel[c].cast(t)
-                                   for c, t in keep.items()})
+        rel = _keep_float_columns(xt, table, rel, cur.schema)
         st = xt.store.put(table, rel,
                           valid_from=None if portion else vf,
                           valid_to=None if portion else vt)

@@ -319,11 +319,12 @@ def norm_instant(s):
 
 
 def scan_with_bounds(store, table: str, b: TemporalBounds,
-                     keep_meta: bool = False, **scan_opts):
-    """The resolved scan for one table reference. `scan_opts`
-    (`prefilter=`/`prefilter_mode=`) pass through to
+                     keep_meta: bool = False, point=None, **scan_opts):
+    """The resolved scan for one table reference. `point` (an `_id`)
+    reads that one entity through TableStore.lookup instead;
+    `scan_opts` (`prefilter=`/`prefilter_mode=`) pass through to
     TableStore.scan; range bounds resolve from the events instead
-    and take none."""
+    and take neither."""
     from xtdb_spark import bitemporal
 
     if b.valid_range is not None:
@@ -335,15 +336,11 @@ def scan_with_bounds(store, table: str, b: TemporalBounds,
         df = bitemporal.resolve_system_range(
             ev, b.system_range[0], b.system_range[1], b.valid_asof)
     else:
-        df = store.scan(
-            table,
-            valid_time=b.valid_asof,
-            system_time=b.system_asof,
-            all_valid_time=b.all_valid,
-            all_system_time=b.all_system,
-            keep_meta=keep_meta,
-            **scan_opts,
-        )
+        bounds = {"valid_time": b.valid_asof, "system_time": b.system_asof,
+                  "all_valid_time": b.all_valid,
+                  "all_system_time": b.all_system, "keep_meta": keep_meta}
+        df = (store.scan(table, **bounds, **scan_opts) if point is None
+              else store.lookup(table, point, **bounds))
     if getattr(store, "scan_order_ref_iid", False):
         df = _ref_iid_order(df)
     return df
@@ -510,6 +507,28 @@ def _simple_conjunct(part):
             qual, col, j = ident(j)
             if col is not None and j == len(sig):
                 return qual, col, f"{lit} {op} {col}"
+    return None
+
+
+def _point_conjunct(part):
+    """(qualifier|None, value) for a conjunct `[alias.]_id = <literal>`
+    (either side) whose literal is an int64 integer or a plain string
+    (no doubled quote, no backslash) — the `_id` values `iid_py`
+    hashes exactly as the stored iid. None for anything else."""
+    c = _simple_conjunct(part)
+    if c is None or c[1].lower() != "_id":
+        return None
+    qual, col, text = c
+    if text.startswith(col + " = "):
+        lit = text[len(col) + 3:]
+    elif text.endswith(" = " + col):
+        lit = text[:-len(col) - 3]
+    else:
+        return None
+    if re.fullmatch(r"-?\d+", lit) and -2 ** 63 <= int(lit) < 2 ** 63:
+        return qual, int(lit)
+    if lit[0] == "'" and not re.search(r"['\\]", lit[1:-1]):
+        return qual, lit[1:-1]
     return None
 
 
@@ -1184,9 +1203,16 @@ class _Rewriter:
                 self.out.append("".join(captured))
                 self._cap = None
                 return self._table_ref()
+            # a derived table is a FROM item whose columns the
+            # conjunct attribution cannot see: it holds a place in
+            # _ref_aliases, so no unqualified conjunct is given to a
+            # store table beside (or inside) it
+            self._ref_aliases.append(None)
             return flush_verbatim(False)
-        if kind not in ("word", "qident") or \
-                (kind == "word" and text.upper() in _NOT_TABLE_START):
+        if kind == "word" and text.upper() in _NOT_TABLE_START:
+            self._ref_aliases.append(None)      # LATERAL / UNNEST / …
+            return flush_verbatim(False)
+        if kind not in ("word", "qident"):
             # emit any whitespace we swallowed, let the walk continue
             return flush_verbatim(False)
         # dotted name
@@ -1200,6 +1226,7 @@ class _Rewriter:
         if self._peek() == ("punct", "("):
             # table-valued function: emit the name, let the main walk
             # handle the argument list (and anything inside it)
+            self._ref_aliases.append(None)
             return flush_verbatim(True)
         # unquoted identifiers FOLD to lowercase (SQL identifier
         # folding; the reference normalizes unquoted table idents —
@@ -1279,25 +1306,31 @@ class _Rewriter:
 
     def _build_scans(self) -> None:
         """Build each recorded store table reference's scan exactly
-        once, after the prefilter decision (_auto_prefilters): a
-        prefiltered reference registers under a query-unique
-        `__pf<n>` view and its out slot is pointed there; any other
-        reference registers the plain scan under its shared view
-        (built once per distinct view — a shared name always holds
-        identical content). A prefiltered build that raises
-        (temporal/unknown column etc.) falls back to the plain scan.
-        Fills each reference's `cols` for _strip_meta_stars and
-        _null_missing_columns."""
+        once, after the point and prefilter decisions (_point_refs,
+        _auto_prefilters): a point or prefiltered reference registers
+        under a query-unique `__pf<n>` view and its out slot is
+        pointed there; any other reference registers the plain scan
+        under its shared view (built once per distinct view — a
+        shared name always holds identical content). A point or
+        prefiltered build that raises (temporal/unknown column etc.)
+        falls back to the plain scan. Fills each reference's `cols`
+        for _strip_meta_stars and _null_missing_columns."""
         LAST_PREFILTERS.clear()
-        decided = self._auto_prefilters()
+        points = self._point_refs()
+        decided = self._auto_prefilters(skip=points)
         plain: dict = {}
         for n, r in enumerate(self._scan_refs):
             df = None
-            if n in decided:
+            if n in points:
+                opts = {"point": points[n]}
+            elif n in decided:
                 pred, mode, jd = decided[n]
+                opts = {"prefilter": pred, "prefilter_mode": mode}
+            else:
+                opts = None
+            if opts:
                 try:
-                    df = self._view_df(r, prefilter=pred,
-                                       prefilter_mode=mode)
+                    df = self._view_df(r, **opts)
                 except Exception:
                     pass          # temporal/unknown column etc. —
                     #               the plain scan below
@@ -1312,11 +1345,66 @@ class _Rewriter:
                 self.out[r["out_idx"]] = self.out[r["out_idx"]].replace(
                     r["view"], uview, 1)
                 _pf_evict(df.sparkSession, uview)
-                LAST_PREFILTERS.append(
-                    {"table": r["table"], "alias": r["alias"],
-                     "pred": pred, "mode": mode,
-                     "join_derived": jd is not None, "view": uview})
+                if n in decided:
+                    LAST_PREFILTERS.append(
+                        {"table": r["table"], "alias": r["alias"],
+                         "pred": pred, "mode": mode,
+                         "join_derived": jd is not None, "view": uview})
             r["cols"] = list(df.columns)
+
+    def _point_refs(self) -> dict:
+        """Point reads (reference operator/scan.clj:127-140 iid
+        selection): {reference index: `_id` value} for the store
+        table references that a top-level WHERE conjunct
+        `[alias.]_id = <literal>` pins to one entity. Their scan is
+        TableStore.lookup — the files of one iid bucket, that iid's
+        events, resolved on one partition — instead of every live
+        file, the prefilter's candidate pass and the resolution
+        shuffle. The conjunct still runs in the WHERE, and the
+        lookup's rows are exactly the events of that one iid, so
+        results are unchanged.
+
+        Conjuncts are attributed as in _auto_prefilters (a qualified
+        alias, or an unqualified column when the query has one FROM
+        item; never a self-joined or shadowed alias), in a query with
+        ONE SELECT, so the WHERE and every FROM item share one scope.
+        Range bounds never route (AS OF and ALL-time bounds pass to
+        lookup), nor do derived column lists.
+        `TableStore.lookup_matches_scan` guards types and columns: the
+        literal must carry the stored `_id`'s iid type tag, no column
+        may be lowered by a mixed-type read, and the lookup's files
+        must carry every column of the table."""
+        if sum(1 for k, t in self.toks
+               if k == "word" and t.upper() == "SELECT") != 1:
+            return {}
+        conjs = [c for c in map(_point_conjunct,
+                                _where_conjuncts(self.toks) or []) if c]
+        if not conjs:
+            return {}
+        points = {}
+        for n, r in enumerate(self._scan_refs):
+            b = r["bounds"]
+            if b.valid_range is not None or b.system_range is not None \
+                    or r["dcl"]:
+                continue
+            keys = {k for _, k in self._mine(r, conjs)}
+            if len(keys) == 1:
+                k = keys.pop()
+                if self.xt.store.lookup_matches_scan(r["table"], k):
+                    points[n] = k
+        return points
+
+    def _mine(self, r, conjs) -> list:
+        """The conjuncts (`(qualifier|None, ...)` tuples) attributed
+        to store reference `r`: those qualified by its alias, or
+        unqualified when the query has one FROM item. Empty for a
+        self-joined or shadowed alias (it appears twice in
+        _ref_aliases), whose qualifier cannot tell the two apart."""
+        if self._ref_aliases.count(r["alias"]) > 1:
+            return []
+        single = len(self._ref_aliases) == 1
+        return [c for c in conjs
+                if c[0] == r["alias"] or (c[0] is None and single)]
 
     def _view_df(self, r, **scan_opts):
         """One reference's SQL-visible scan: resolved at its bounds,
@@ -1335,7 +1423,7 @@ class _Rewriter:
                 for c in r["dcl"]])
         return df
 
-    def _auto_prefilters(self) -> dict:
+    def _auto_prefilters(self, skip=()) -> dict:
         """Automatic sideways pushdown for temporal-store scans in
         SQL (the reference injects its bloom pushdown automatically,
         join.clj:172-226): conservatively extract the query's
@@ -1350,8 +1438,10 @@ class _Rewriter:
         a result superset and the same conjunct still runs in the
         WHERE, so results are unchanged either way
         (tests/test_sql_auto_prefilter.py). Kill switch:
-        store.sql_auto_prefilter = False. Returns {reference index:
-        (pred, mode, join-derived pred or None)}; builds no scan.
+        store.sql_auto_prefilter = False. References in `skip` (the
+        point reads) take no decision and no footer estimate.
+        Returns {reference index: (pred, mode, join-derived pred or
+        None)}; builds no scan.
 
         CONCURRENCY: the prefiltered scan registers under a
         query-UNIQUE view name (__pf<n> suffix, _build_scans) and the
@@ -1366,7 +1456,7 @@ class _Rewriter:
         if not getattr(self.xt.store, "sql_auto_prefilter", True):
             return {}
         refs = [(n, r) for n, r in enumerate(self._scan_refs)
-                if r["bounds"].valid_range is None
+                if n not in skip and r["bounds"].valid_range is None
                 and r["bounds"].system_range is None]
         if not refs:
             return {}
@@ -1382,15 +1472,13 @@ class _Rewriter:
                             for p in [*parts, *on_parts]) if e]
         if not conjs and not equi:
             return {}
-        single = len(self._ref_aliases) == 1
         decided = {}
         for n, r in refs:
             if self._ref_aliases.count(r["alias"]) > 1:
                 continue          # self-join / shadowed alias
             # (same table+bounds twice is fine: each ref rewrites its
             #  own out slot to its own query-unique __pf view)
-            mine = [c for c in conjs
-                    if c[0] == r["alias"] or (c[0] is None and single)]
+            mine = self._mine(r, conjs)
             jd = self._join_derived_pred(r, equi, conjs) if equi else None
             if jd is None and not mine:
                 continue

@@ -1617,20 +1617,82 @@ class TableStore:
 
     def lookup(self, table: str, _id, valid_time=None,
                system_time=None, all_valid_time=False,
-               all_system_time=False) -> DataFrame:
+               all_system_time=False, keep_meta: bool = False) -> DataFrame:
         """Point lookup by `_id`: bucket-pruned manifest + an `_iid`
         equality filter that reaches the parquet scan (files are
         sorted by `_iid`, so row-group stats prune inside the kept
-        bucket too)."""
+        bucket too). The events are read and resolved in ONE task
+        (`coalesce(1)` before `_resolve`), so neither the
+        drop-erased aggregate nor the window plans an exchange. One
+        iid's events fall in one window partition anyway; what the
+        single task gives up is the parallel parquet scan, which
+        matters only when the point files are many (every live L0
+        file is one; on 4 cores a read over 10 or 50 small files
+        costs the same either way, over 200 it is ~10-20 % slower
+        in one task)."""
         current_only = (valid_time is None and system_time is None
                         and not all_valid_time and not all_system_time)
         files = self.point_files(table, _id, current_only=current_only)
         if not files:
-            return self.scan(table).filter(F.lit(False))
+            return self.scan(table, valid_time=valid_time,
+                             system_time=system_time,
+                             all_valid_time=all_valid_time,
+                             all_system_time=all_system_time,
+                             keep_meta=keep_meta).filter(F.lit(False))
         ev = (self.events(table, files=files)
-              .filter(F.col("_iid") == F.lit(self.iid_py(_id))))
+              .filter(F.col("_iid") == F.lit(self.iid_py(_id)))
+              .coalesce(1))
         return self._resolve(ev, valid_time, system_time,
-                             all_valid_time, all_system_time)
+                             all_valid_time, all_system_time,
+                             keep_meta=keep_meta)
+
+    def lookup_matches_scan(self, table: str, _id) -> bool:
+        """Whether `lookup(table, _id)` returns the rows AND columns
+        an SQL read keeps from the full scan under `WHERE _id =
+        <_id>`, judged from cached parquet footers (no Spark job):
+
+        - every column has one type across the live files, so no read
+          of the table lowers a column through `_events_lub` (an
+          `_id` lowered to string compares equal to ids of both type
+          tags, which one tagged iid cannot find);
+        - `_id`'s type carries `_id`'s own `iid_py` tag, so SQL's
+          comparison and the iid select the same entity (`_id = '5'`
+          over integer ids coerces to 5; the iid of '5' is another
+          entity's);
+        - a string `_id` is not one that a lowered id could spell:
+          a rewrite of mixed-type files (compaction, `optimize`)
+          stores `_id` lowered to string in every output file while
+          each row keeps its tagged iid, and the footers cannot show
+          it — so `-?[0-9]+`, `true`/`false` (a lowered integer or
+          boolean) and any 16-byte string (a lowered UUID's raw
+          bytes) keep the full scan;
+        - the files `lookup` reads carry every column of the table,
+          so `SELECT *` and unqualified names resolve as over the
+          full scan (checked on the current-state file list, a
+          subset of the lists of the other bounds)."""
+        import pyarrow as pa
+
+        files = self.table_files(table)
+        schemas = [self._file_footer(f)[2] for f in files]
+        if not files or any(sc is None for sc in schemas):
+            return False
+        types: dict = {}
+        for sc in schemas:
+            for fld in sc:
+                if types.setdefault(fld.name, fld.type) != fld.type:
+                    return False
+        is_kind = {int: pa.types.is_integer,
+                   str: pa.types.is_string}.get(type(_id))
+        if is_kind is None or "_id" not in types \
+                or not is_kind(types["_id"]):
+            return False
+        if isinstance(_id, str) and (
+                re.fullmatch(r"-?\d+|true|false", _id)
+                or len(_id.encode()) == 16):
+            return False
+        point = set(self.point_files(table, _id, current_only=True))
+        return {fld.name for f, sc in zip(files, schemas) if f in point
+                for fld in sc} == set(types)
 
     def _file_footer_info(self, path: str):
         """(min `_system_from`, may-contain-erase) for a file, read
@@ -1638,6 +1700,12 @@ class TableStore:
         (size, mtime). min=None = stats unavailable → never prune;
         may-contain-erase uses the `op` column's min/max range and
         defaults True when stats are missing."""
+        return self._file_footer(path)[:2]
+
+    def _file_footer(self, path: str):
+        """`_file_footer_info`'s pair plus the file's Arrow schema
+        (None when the footer is unreadable), from one cached footer
+        read."""
         import pyarrow.parquet as pq
 
         st = os.stat(path)
@@ -1645,7 +1713,7 @@ class TableStore:
         hit = self._footer_cache.get(path)
         if hit is not None and hit[0] == key:
             return hit[1]
-        min_sf, may_erase = None, True
+        min_sf, may_erase, schema = None, True, None
         try:
             md = pq.ParquetFile(path).metadata
             names = {md.schema.column(i).name: i
@@ -1671,10 +1739,11 @@ class TableStore:
                 ops = rg_stats(names["op"])
                 if ops:
                     may_erase = any(lo <= "erase" <= hi for lo, hi in ops)
+            schema = md.schema.to_arrow_schema()
         except Exception:
             min_sf, may_erase = None, True
-        self._footer_cache[path] = (key, (min_sf, may_erase))
-        return min_sf, may_erase
+        self._footer_cache[path] = (key, (min_sf, may_erase, schema))
+        return min_sf, may_erase, schema
 
     def _file_min_system_from(self, path: str):
         return self._file_footer_info(path)[0]
