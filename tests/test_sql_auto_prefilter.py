@@ -111,6 +111,12 @@ def test_unsafe_shapes_bail_out(xt, monkeypatch):
                 "WHERE x = 201")
     assert "LeftSemi" not in _plan(df)
     assert [tuple(r) for r in df.collect()] == [(201, 200)]
+    # ... nor through a derived table whose alias shadows the store
+    # reference inside it: `s.x` is the derived column, not ap's `x`
+    df = xt.sql("SELECT * FROM (SELECT x + 1 AS x, _id FROM ap s) s "
+                "WHERE s.x = 201")
+    assert "LeftSemi" not in _plan(df)
+    assert [tuple(r) for r in df.collect()] == [(201, 200)]
 
 
 def test_prefilter_views_are_query_unique_no_interleave_race(xt):

@@ -11,6 +11,7 @@ from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from xtdb_spark.compactor import live_files
 from xtdb_spark.plans.explain import count_shuffles, formatted_plan
@@ -172,6 +173,21 @@ def test_point_read_scans_exactly_the_point_files(xt):
         assert len(scanned) < len(xt.store.table_files("pnt"))
 
 
+def test_point_read_lists_the_manifest_once(xt, lookups, monkeypatch):
+    # the type guard and the lookup read one listing, so a put or a
+    # compaction between them cannot change the files the guard judged
+    import xtdb_spark.compactor as compactor
+
+    listed = []
+    orig = compactor.live_files
+    monkeypatch.setattr(compactor, "live_files",
+                        lambda p: listed.append(p) or orig(p))
+    df = xt.sql("SELECT _id, x FROM pnt WHERE _id = 5")
+    assert len(lookups) == 1
+    assert listed == [xt.store._path("pnt")]
+    assert _rows(df) == [(5, 1005)]
+
+
 def test_serving_cache_store_routes_current_reads(xt, lookups):
     xt.store.serve_cache = True
     try:
@@ -193,8 +209,8 @@ def test_compacted_mixed_ids_keep_the_scan(xt, lookups):
     st.put("pcmp", [{"_id": "a", "x": 3}])
     st.put("pcmp", [{"_id": "o", "x": 4}])
     st.compact("pcmp", l0_threshold=2)
-    assert all(st._file_footer(f)[2].field("_id").type == "string"
-               for f in st.table_files("pcmp"))
+    assert all(st._file_footer(f).spark_schema["_id"].dataType
+               == StringType() for f in st.table_files("pcmp"))
     assert st.point_files("pcmp", "5", current_only=True)
     assert _rows(xt.sql("SELECT _id, x FROM pcmp WHERE _id = '5'")) == \
         [("5", 1)]

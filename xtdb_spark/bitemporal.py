@@ -73,6 +73,7 @@ def resolve_asof(
     valid_time=None,
     system_time=None,
     keep_meta: bool = False,
+    erases: bool = True,
 ) -> DataFrame:
     """Point-in-time snapshot: rows visible at (valid_time, system_time),
     both defaulting to "now" (reference scan.clj:307-310 default bounds).
@@ -81,8 +82,12 @@ def resolve_asof(
     later events supersede earlier ones wherever their valid ranges
     overlap, so at a single valid point V only the system-latest
     covering event matters.
+
+    `erases=False` (here and in the polygon paths) states that no
+    event is an erase — the store knows it from the file footers —
+    and skips `drop_erased`.
     """
-    ev = drop_erased(events)
+    ev = drop_erased(events) if erases else events
     if system_time is not None:
         ev = ev.filter(F.col("_system_from") <= _ts(system_time))
     v = _ts(valid_time) if valid_time is not None else F.current_timestamp()
@@ -136,7 +141,8 @@ _POLY_FIELDS = [
 ]
 
 
-def polygon_history(events: DataFrame, doc_cols: list[str]) -> DataFrame:
+def polygon_history(events: DataFrame, doc_cols: list[str],
+                    erases: bool = True) -> DataFrame:
     """Full bitemporal rectangle enumeration (`FOR ALL VALID_TIME FOR
     ALL SYSTEM_TIME`): for every put event, the staircase of
     (valid_from, valid_to, system_from, system_to) rectangles during
@@ -176,7 +182,7 @@ def polygon_history(events: DataFrame, doc_cols: list[str]) -> DataFrame:
     FOR ALL VALID_TIME COUNT(*) 214 s → sub-second. At 100 TB this
     is the difference between "history costs what history you have"
     and "every scan pays the worst case"."""
-    ev = drop_erased(events)
+    ev = drop_erased(events) if erases else events
     max_ts = pd.Timestamp("2262-04-10")  # pandas-representable "infinity"
 
     schema = StructType(
@@ -435,6 +441,7 @@ def resolve_valid_range(
     valid_to,
     system_time=None,
     doc_cols: list[str] | None = None,
+    erases: bool = True,
 ) -> DataFrame:
     """FOR VALID_TIME BETWEEN/FROM…TO: all versions whose resolved
     valid rectangle intersects [valid_from, valid_to), as of the given
@@ -443,7 +450,7 @@ def resolve_valid_range(
     if system_time is not None:
         ev = ev.filter(F.col("_system_from") <= _ts(system_time))
     doc_cols = doc_cols or [c for c in events.columns if c not in META_COLS]
-    hist = polygon_history(ev, doc_cols)
+    hist = polygon_history(ev, doc_cols, erases=erases)
     # current system slice + valid-range intersection
     sys_live = hist.filter(F.col("_system_to").isNull()) if system_time is None \
         else hist.filter((F.col("_system_from") <= _ts(system_time))
@@ -459,6 +466,7 @@ def resolve_system_range(
     system_to,
     valid_time=None,
     doc_cols: list[str] | None = None,
+    erases: bool = True,
 ) -> DataFrame:
     """FOR SYSTEM_TIME BETWEEN/FROM…TO: every version visible at the
     (given or current) valid point at *some* system time in
@@ -467,7 +475,7 @@ def resolve_system_range(
     a fixed valid point each event's visibility is one system
     interval, so the overlap filter yields each version at most once."""
     doc_cols = doc_cols or [c for c in events.columns if c not in META_COLS]
-    hist = polygon_history(events, doc_cols)
+    hist = polygon_history(events, doc_cols, erases=erases)
     v = F.current_timestamp() if valid_time is None else _ts(valid_time)
     return hist.filter(
         (F.col("_valid_from") <= v) & (v < _end_or_inf(F.col("_valid_to")))

@@ -319,28 +319,34 @@ def norm_instant(s):
 
 
 def scan_with_bounds(store, table: str, b: TemporalBounds,
-                     keep_meta: bool = False, point=None, **scan_opts):
+                     keep_meta: bool = False, point=None, live=None,
+                     **scan_opts):
     """The resolved scan for one table reference. `point` (an `_id`)
-    reads that one entity through TableStore.lookup instead;
-    `scan_opts` (`prefilter=`/`prefilter_mode=`) pass through to
+    reads that one entity through TableStore.lookup instead, over
+    the manifest listing `live` its guard approved; `scan_opts`
+    (`prefilter=`/`prefilter_mode=`) pass through to
     TableStore.scan; range bounds resolve from the events instead
     and take neither."""
     from xtdb_spark import bitemporal
 
+    if b.valid_range is not None or b.system_range is not None:
+        files = store.table_files(table)
+        ev = store.events(table, files=files)
+        erases = store._may_erase(files)
     if b.valid_range is not None:
-        ev = store.events(table)
         df = bitemporal.resolve_valid_range(
-            ev, b.valid_range[0], b.valid_range[1], b.system_asof)
+            ev, b.valid_range[0], b.valid_range[1], b.system_asof,
+            erases=erases)
     elif b.system_range is not None:
-        ev = store.events(table)
         df = bitemporal.resolve_system_range(
-            ev, b.system_range[0], b.system_range[1], b.valid_asof)
+            ev, b.system_range[0], b.system_range[1], b.valid_asof,
+            erases=erases)
     else:
         bounds = {"valid_time": b.valid_asof, "system_time": b.system_asof,
                   "all_valid_time": b.all_valid,
                   "all_system_time": b.all_system, "keep_meta": keep_meta}
         df = (store.scan(table, **bounds, **scan_opts) if point is None
-              else store.lookup(table, point, **bounds))
+              else store.lookup(table, point, live=live, **bounds))
     if getattr(store, "scan_order_ref_iid", False):
         df = _ref_iid_order(df)
     return df
@@ -861,8 +867,7 @@ class _Rewriter:
         for s in sites:
             if s["qual"]:
                 r = metas.get(s["qual"].strip('"').lower())
-                if r is None or \
-                        self._ref_aliases.count(r["alias"]) > 1:
+                if r is None or self._shadowed(r["alias"]):
                     continue
                 doc = [c for c in r["cols"]
                        if c.lower() not in _TEMPORAL_COL_WORDS]
@@ -1206,11 +1211,13 @@ class _Rewriter:
             # a derived table is a FROM item whose columns the
             # conjunct attribution cannot see: it holds a place in
             # _ref_aliases, so no unqualified conjunct is given to a
-            # store table beside (or inside) it
-            self._ref_aliases.append(None)
+            # store table beside (or inside) it, and its alias shadows
+            # a store reference of the same alias inside it
+            self._ref_aliases.append(self._group_alias())
             return flush_verbatim(False)
         if kind == "word" and text.upper() in _NOT_TABLE_START:
-            self._ref_aliases.append(None)      # LATERAL / UNNEST / …
+            # LATERAL / UNNEST / …
+            self._ref_aliases.append(self._group_alias())
             return flush_verbatim(False)
         if kind not in ("word", "qident"):
             # emit any whitespace we swallowed, let the walk continue
@@ -1226,7 +1233,7 @@ class _Rewriter:
         if self._peek() == ("punct", "("):
             # table-valued function: emit the name, let the main walk
             # handle the argument list (and anything inside it)
-            self._ref_aliases.append(None)
+            self._ref_aliases.append(self._group_alias())
             return flush_verbatim(True)
         # unquoted identifiers FOLD to lowercase (SQL identifier
         # folding; the reference normalizes unquoted table idents —
@@ -1322,7 +1329,8 @@ class _Rewriter:
         for n, r in enumerate(self._scan_refs):
             df = None
             if n in points:
-                opts = {"point": points[n]}
+                k, live = points[n]
+                opts = {"point": k, "live": live}
             elif n in decided:
                 pred, mode, jd = decided[n]
                 opts = {"prefilter": pred, "prefilter_mode": mode}
@@ -1354,7 +1362,8 @@ class _Rewriter:
 
     def _point_refs(self) -> dict:
         """Point reads (reference operator/scan.clj:127-140 iid
-        selection): {reference index: `_id` value} for the store
+        selection): {reference index: (`_id` value, manifest
+        listing)} for the store
         table references that a top-level WHERE conjunct
         `[alias.]_id = <literal>` pins to one entity. Their scan is
         TableStore.lookup — the files of one iid bucket, that iid's
@@ -1373,7 +1382,9 @@ class _Rewriter:
         `TableStore.lookup_matches_scan` guards types and columns: the
         literal must carry the stored `_id`'s iid type tag, no column
         may be lowered by a mixed-type read, and the lookup's files
-        must carry every column of the table."""
+        must carry every column of the table. The guard and the
+        lookup read one `TableStore.live_files` listing, so a put or
+        compaction between them cannot change the approved files."""
         if sum(1 for k, t in self.toks
                if k == "word" and t.upper() == "SELECT") != 1:
             return {}
@@ -1390,9 +1401,20 @@ class _Rewriter:
             keys = {k for _, k in self._mine(r, conjs)}
             if len(keys) == 1:
                 k = keys.pop()
-                if self.xt.store.lookup_matches_scan(r["table"], k):
-                    points[n] = k
+                live = self.xt.store.live_files(r["table"])
+                if self.xt.store.lookup_matches_scan(r["table"], k,
+                                                     live=live):
+                    points[n] = (k, live)
         return points
+
+    def _shadowed(self, alias: str) -> bool:
+        """Whether `alias` names more than one FROM item — a
+        self-join, or a derived table shadowing a store reference
+        inside it. Names compare case-insensitively, as Spark
+        resolves them."""
+        a = alias.lower()
+        return sum(1 for x in self._ref_aliases
+                   if x is not None and x.lower() == a) > 1
 
     def _mine(self, r, conjs) -> list:
         """The conjuncts (`(qualifier|None, ...)` tuples) attributed
@@ -1400,7 +1422,7 @@ class _Rewriter:
         unqualified when the query has one FROM item. Empty for a
         self-joined or shadowed alias (it appears twice in
         _ref_aliases), whose qualifier cannot tell the two apart."""
-        if self._ref_aliases.count(r["alias"]) > 1:
+        if self._shadowed(r["alias"]):
             return []
         single = len(self._ref_aliases) == 1
         return [c for c in conjs
@@ -1474,7 +1496,7 @@ class _Rewriter:
             return {}
         decided = {}
         for n, r in refs:
-            if self._ref_aliases.count(r["alias"]) > 1:
+            if self._shadowed(r["alias"]):
                 continue          # self-join / shadowed alias
             # (same table+bounds twice is fine: each ref rewrites its
             #  own out slot to its own query-unique __pf view)
@@ -1562,7 +1584,7 @@ class _Rewriter:
                 continue          # duplicate equi conjunct
             seen_pairs.add((ca, qb, cb))
             builds = [s for s in self._scan_refs if s["alias"] == qb]
-            if len(builds) != 1 or self._ref_aliases.count(qb) != 1:
+            if len(builds) != 1 or self._shadowed(qb):
                 continue
             bref = builds[0]
             bconj = [c for c in conjs if c[0] == qb]
@@ -1765,6 +1787,35 @@ class _Rewriter:
         return _FAIL
 
     # -- alias
+
+    def _group_alias(self) -> str | None:
+        """The alias after the parenthesized group that starts at (or
+        after leading keywords from) self.i — `(SELECT …) s`,
+        `LATERAL (…) AS s`, `range(10) r` — read ahead without
+        consuming; None when there is no group or no alias."""
+        j, depth = self.i, 0
+        while j < len(self.toks):
+            k, t = self.toks[j]
+            j += 1
+            if k == "punct" and t == "(":
+                depth += 1
+            elif k == "punct" and t == ")":
+                depth -= 1
+                if depth == 0:
+                    break
+            elif depth == 0 and k not in ("ws", "comment", "word"):
+                return None
+        else:
+            return None
+        after = (tok for tok in self.toks[j:]
+                 if tok[0] not in ("ws", "comment"))
+        tok = next(after, (None, ""))
+        if tok[0] == "word" and tok[1].upper() == "AS":
+            tok = next(after, (None, ""))
+        if tok[0] == "qident" or (tok[0] == "word"
+                                  and tok[1].upper() not in _NOT_ALIAS):
+            return _unquote(tok)
+        return None
 
     def _alias(self, cap_take, cap_skip_ws) -> str | None:
         cp = self._checkpoint()

@@ -22,9 +22,11 @@ Spark design:
   point lookups touch one bucket and as-of scans skip old files.
   Locally we write `repartition(_iid)`-sorted files to keep the same
   read pattern.
-- schema evolution: parquet mergeSchema on read; new columns null-fill
-  (the reference's dynamic-document model, SURVEY §1.2 — we take the
-  widest-type merge strategy, option (c) of SURVEY §1.3).
+- schema evolution: the per-file schemas merge on read (folded from
+  cached footers, Spark's mergeSchema read as the fallback); new
+  columns null-fill (the reference's dynamic-document model, SURVEY
+  §1.2 — we take the widest-type merge strategy, option (c) of
+  SURVEY §1.3).
 """
 
 from __future__ import annotations
@@ -38,6 +40,7 @@ import threading
 import time
 import uuid as _uuid
 from datetime import datetime, timezone
+from typing import NamedTuple
 
 try:
     import fcntl as _fcntl
@@ -187,6 +190,63 @@ def _parse_numeric_conjunction(text: str):
     except (ValueError, KeyError, IndexError):
         return None
     return bounds or None
+
+
+# the key Spark stores its own schema under in every parquet footer it
+# writes, and prefers over the parquet schema when reading
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+class _Footer(NamedTuple):
+    """What one parquet footer tells a read (TableStore._file_footer)."""
+
+    min_system_from: datetime | None
+    may_erase: bool
+    spark_schema: object      # pyspark StructType | None = unknown
+
+
+def _spark_file_schema(kv: dict, arrow_schema):
+    """The schema Spark reads one parquet file as: the Spark schema
+    stored in its footer, or, for a file without one (the pyarrow
+    fast path, `_append_local_fast`), its columns mapped from the
+    closed type set that path writes. None for any other type."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    raw = kv.get(_SPARK_ROW_METADATA)
+    if raw is not None:
+        return T.StructType.fromJson(_json.loads(raw))
+    plain = {pa.bool_(): T.BooleanType(), pa.int64(): T.LongType(),
+             pa.float64(): T.DoubleType(), pa.string(): T.StringType(),
+             pa.binary(): T.BinaryType(), pa.date32(): T.DateType()}
+    fields = []
+    for fld in arrow_schema:
+        t = fld.type
+        if pa.types.is_timestamp(t) and t.unit == "us" and t.tz == "UTC":
+            st = T.TimestampType()
+        elif t in plain:
+            st = plain[t]
+        else:
+            return None
+        fields.append(T.StructField(fld.name, st, fld.nullable))
+    return T.StructType(fields)
+
+
+def _as_nullable(dt):
+    """`dt` with every nested field, array element and map value
+    nullable, as Spark reads parquet files."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _as_nullable(f.dataType),
+                                           True, f.metadata)
+                             for f in dt.fields])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType),
+                         _as_nullable(dt.valueType), True)
+    return dt
 
 
 class TableStore:
@@ -1567,7 +1627,16 @@ class TableStore:
                       if os.path.isdir(os.path.join(self.warehouse, d))
                       and not d.startswith("_"))
 
-    def table_files(self, table: str, current_only: bool = False) -> list[str]:
+    def live_files(self, table: str) -> tuple[list[str], list[dict]]:
+        """One listing of the table's manifest: (live L0 paths, live
+        level entries), as `compactor.live_files` reads them. Handing
+        one listing to a guard and to the read it approves
+        (`lookup_matches_scan`, `lookup`) keeps a put or compaction
+        between the two from changing the files the guard judged."""
+        return compactor.live_files(self._path(table))
+
+    def table_files(self, table: str, current_only: bool = False,
+                    live=None) -> list[str]:
         """The table's manifest: its live parquet files, listed NOW —
         raw L0 appends plus the leveled compaction outputs registered
         in the per-table manifest (compactor.py; the trie-catalog
@@ -1575,9 +1644,10 @@ class TableStore:
         scan.clj:108-113 clamps every scan to the snapshot) — passing
         this list to `events()` pins a whole multi-statement query to
         one state. `current_only` drops `hist` files — sound ONLY for
-        pure current-state reads (see compactor.py recency notes)."""
+        pure current-state reads (see compactor.py recency notes).
+        `live`: a `live_files` listing to use instead of a new one."""
         path = self._path(table)
-        l0, entries = compactor.live_files(path)
+        l0, entries = live or compactor.live_files(path)
         if current_only:
             entries = [e for e in entries if not e["hist"]]
         return sorted(l0 + [compactor.entry_path(path, e) for e in entries])
@@ -1600,16 +1670,17 @@ class TableStore:
                 "differ between engines — query via scan instead)")
         return hashlib.md5((tag + ":" + s).encode()).digest()
 
-    def point_files(self, table: str, _id,
-                    current_only: bool = False) -> list[str]:
+    def point_files(self, table: str, _id, current_only: bool = False,
+                    live=None) -> list[str]:
         """Manifest pruned to the files that can contain `_id`: all
         live L0 files plus, per level, only the bucket whose
         iid-prefix part matches — the trie-channel walk
         (Bucketer.kt compareToPath / reference
         operator/scan.clj:127-140 iid selection). At 100 TB a point
-        lookup opens one bucket chain instead of the table."""
+        lookup opens one bucket chain instead of the table. `live`:
+        a `live_files` listing to use instead of a new one."""
         path = self._path(table)
-        l0, entries = compactor.live_files(path)
+        l0, entries = live or compactor.live_files(path)
         h = self.iid_py(_id).hex()
         keep = [e for e in entries if h.startswith(e["part"])
                 and not (current_only and e["hist"])]
@@ -1617,7 +1688,8 @@ class TableStore:
 
     def lookup(self, table: str, _id, valid_time=None,
                system_time=None, all_valid_time=False,
-               all_system_time=False, keep_meta: bool = False) -> DataFrame:
+               all_system_time=False, keep_meta: bool = False,
+               live=None) -> DataFrame:
         """Point lookup by `_id`: bucket-pruned manifest + an `_iid`
         equality filter that reaches the parquet scan (files are
         sorted by `_iid`, so row-group stats prune inside the kept
@@ -1629,10 +1701,14 @@ class TableStore:
         matters only when the point files are many (every live L0
         file is one; on 4 cores a read over 10 or 50 small files
         costs the same either way, over 200 it is ~10-20 % slower
-        in one task)."""
+        in one task). With the schema and erase presence taken from
+        the cached footers (`events`, `_resolve`), the read is one
+        Spark job. `live`: the `live_files` listing a caller's guard
+        (`lookup_matches_scan`) approved."""
         current_only = (valid_time is None and system_time is None
                         and not all_valid_time and not all_system_time)
-        files = self.point_files(table, _id, current_only=current_only)
+        files = self.point_files(table, _id, current_only=current_only,
+                                 live=live)
         if not files:
             return self.scan(table, valid_time=valid_time,
                              system_time=system_time,
@@ -1642,16 +1718,17 @@ class TableStore:
         ev = (self.events(table, files=files)
               .filter(F.col("_iid") == F.lit(self.iid_py(_id)))
               .coalesce(1))
-        return self._resolve(ev, valid_time, system_time,
+        return self._resolve(ev, files, valid_time, system_time,
                              all_valid_time, all_system_time,
                              keep_meta=keep_meta)
 
-    def lookup_matches_scan(self, table: str, _id) -> bool:
+    def lookup_matches_scan(self, table: str, _id, live=None) -> bool:
         """Whether `lookup(table, _id)` returns the rows AND columns
         an SQL read keeps from the full scan under `WHERE _id =
         <_id>`, judged from cached parquet footers (no Spark job):
 
-        - every column has one type across the live files, so no read
+        - every column has one type across the live files
+          (`_footer_schema` settles the table's schema), so no read
           of the table lowers a column through `_events_lub` (an
           `_id` lowered to string compares equal to ids of both type
           tags, which one tagged iid cannot find);
@@ -1669,30 +1746,29 @@ class TableStore:
         - the files `lookup` reads carry every column of the table,
           so `SELECT *` and unqualified names resolve as over the
           full scan (checked on the current-state file list, a
-          subset of the lists of the other bounds)."""
-        import pyarrow as pa
+          subset of the lists of the other bounds).
 
-        files = self.table_files(table)
-        schemas = [self._file_footer(f)[2] for f in files]
-        if not files or any(sc is None for sc in schemas):
+        `live`: the `live_files` listing to judge (listed here when
+        None); pass the same one to `lookup`."""
+        from pyspark.sql.types import IntegralType, StringType
+
+        live = live or self.live_files(table)
+        files = self.table_files(table, live=live)
+        schema = self._footer_schema(files) if files else None
+        if schema is None:
             return False
-        types: dict = {}
-        for sc in schemas:
-            for fld in sc:
-                if types.setdefault(fld.name, fld.type) != fld.type:
-                    return False
-        is_kind = {int: pa.types.is_integer,
-                   str: pa.types.is_string}.get(type(_id))
-        if is_kind is None or "_id" not in types \
-                or not is_kind(types["_id"]):
+        kind = {int: IntegralType, str: StringType}.get(type(_id))
+        if kind is None or "_id" not in schema.names \
+                or not isinstance(schema["_id"].dataType, kind):
             return False
         if isinstance(_id, str) and (
                 re.fullmatch(r"-?\d+|true|false", _id)
                 or len(_id.encode()) == 16):
             return False
-        point = set(self.point_files(table, _id, current_only=True))
-        return {fld.name for f, sc in zip(files, schemas) if f in point
-                for fld in sc} == set(types)
+        point = self.point_files(table, _id, current_only=True, live=live)
+        return {fld.name for f in point
+                for fld in self._file_footer(f).spark_schema} \
+            == set(schema.names)
 
     def _file_footer_info(self, path: str):
         """(min `_system_from`, may-contain-erase) for a file, read
@@ -1702,10 +1778,12 @@ class TableStore:
         defaults True when stats are missing."""
         return self._file_footer(path)[:2]
 
-    def _file_footer(self, path: str):
-        """`_file_footer_info`'s pair plus the file's Arrow schema
-        (None when the footer is unreadable), from one cached footer
-        read."""
+    def _file_footer(self, path: str) -> _Footer:
+        """One cached footer read per file version (keyed by size and
+        mtime, so an upsert reads only its new file's footer): the
+        `_file_footer_info` pair and the schema Spark reads the file
+        as (`_spark_file_schema`). Any part the footer cannot give is
+        None (may_erase: True)."""
         import pyarrow.parquet as pq
 
         st = os.stat(path)
@@ -1713,7 +1791,7 @@ class TableStore:
         hit = self._footer_cache.get(path)
         if hit is not None and hit[0] == key:
             return hit[1]
-        min_sf, may_erase, schema = None, True, None
+        min_sf, may_erase, spark_schema = None, True, None
         try:
             md = pq.ParquetFile(path).metadata
             names = {md.schema.column(i).name: i
@@ -1739,16 +1817,49 @@ class TableStore:
                 ops = rg_stats(names["op"])
                 if ops:
                     may_erase = any(lo <= "erase" <= hi for lo, hi in ops)
-            schema = md.schema.to_arrow_schema()
+            spark_schema = _spark_file_schema(
+                md.metadata or {}, md.schema.to_arrow_schema())
         except Exception:
             min_sf, may_erase = None, True
-        self._footer_cache[path] = (key, (min_sf, may_erase, schema))
-        return min_sf, may_erase, schema
+        out = _Footer(min_sf, may_erase, spark_schema)
+        self._footer_cache[path] = (key, out)
+        return out
+
+    def _may_erase(self, files: list[str]) -> bool:
+        """Whether any of `files` may hold an erase event (footer
+        `op` min/max, the test `prune_manifest` relies on). False
+        lets resolution skip `bitemporal.drop_erased`'s self-join."""
+        return any(self._file_footer(f).may_erase for f in files)
+
+    def _footer_schema(self, files: list[str]):
+        """The schema `spark.read.option("mergeSchema", "true")`
+        infers for `files`, folded from the cached footers instead of
+        a Spark job: Spark merges the per-file schemas in path order,
+        keeps the first spelling of each column (names match
+        case-insensitively) and reads every column nullable. None —
+        the caller keeps Spark's merge read — when a file's schema is
+        unknown, two files type a column differently (Spark may widen
+        a nested struct, or fail and reach `_events_lub`), or a
+        column's spelling differs between files."""
+        from pyspark.sql.types import StructField, StructType
+
+        fields: dict = {}
+        for f in sorted(files):
+            sc = self._file_footer(f).spark_schema
+            if sc is None:
+                return None
+            for fld in sc.fields:
+                fld = StructField(fld.name, _as_nullable(fld.dataType),
+                                  True, fld.metadata)
+                if fields.setdefault(fld.name.lower(), fld) != fld:
+                    return None
+        return StructType(list(fields.values()))
 
     def _file_min_system_from(self, path: str):
         return self._file_footer_info(path)[0]
 
-    def prune_manifest(self, table: str, system_time) -> list[str]:
+    def prune_manifest(self, table: str, system_time,
+                       live=None) -> list[str]:
         """Manifest restricted to files that can contain rows visible
         at `system_time`: appends are monotone in `_system_from`, so a
         file whose footer min exceeds the bound holds ONLY
@@ -1767,8 +1878,9 @@ class TableStore:
         (reference: erase wipes the id from history entirely), so a
         later erase must still suppress rows in an earlier AS-OF
         scan. The `op` column's footer min/max range detects
-        erase-free files (the overwhelmingly common case)."""
-        files = self.table_files(table)
+        erase-free files (the overwhelmingly common case). `live`: a
+        `live_files` listing to use instead of a new one."""
+        files = self.table_files(table, live=live)
         t = system_time
         if t is None:
             return files
@@ -1791,13 +1903,23 @@ class TableStore:
         isolation, api basis.clj + Snapshot.kt). At 100 TB the listing
         comes from a transactional manifest (Delta/Iceberg) instead of
         a directory glob; `optimize()` must not run concurrently with
-        pinned readers (documented there)."""
+        pinned readers (documented there).
+
+        The schema comes from the cached parquet footers
+        (`_footer_schema`) — the reference likewise reads its trie
+        catalog's metadata before opening data (scan.clj:62-140) — so
+        building the scan runs no Spark job. Files whose schema the
+        footers cannot settle take Spark's `mergeSchema` read (one
+        footer job), and a type conflict there takes `_events_lub`."""
         if files is None:
             files = self.table_files(table)
         if not files:
             # empty/missing table: keep the directory-read error shape
             return self.spark.read.option("mergeSchema", "true") \
                 .parquet(self._path(table))
+        schema = self._footer_schema(files)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(*files)
         try:
             return self.spark.read.option("mergeSchema", "true") \
                 .parquet(*files)
@@ -2128,9 +2250,9 @@ class TableStore:
                 [StructField("_iid", BinaryType())]
                 + [StructField(c, NullType()) for c in cols])
             return self.spark.createDataFrame([], schema)
-        files = None
         if system_time is not None and not all_system_time:
-            files = self.prune_manifest(table, system_time)
+            files = self.prune_manifest(table, system_time,
+                                        live=(l0, entries))
             if not files:
                 # bound precedes every append: empty result with the
                 # table's schema, zero I/O (filter(false) folds to an
@@ -2138,17 +2260,17 @@ class TableStore:
                 return self.scan(table, valid_time=valid_time,
                                  all_valid_time=all_valid_time) \
                     .filter(F.lit(False))
-        elif (valid_time is None and system_time is None
-              and not all_valid_time and not all_system_time):
-            # pure current-state scan: skip `hist` compaction outputs
+        else:
+            # a pure current-state scan skips `hist` compaction outputs
             # — every event in them is shadowed at every valid point
             # by a later covering event, or already valid-expired
             # (compactor.py recency split; reference
             # *recency-partition*, compactor.clj) — reusing the one
             # listing above, no second glob/manifest read
-            files = sorted(
-                l0 + [compactor.entry_path(path, e)
-                      for e in entries if not e["hist"]]) or None
+            current = (valid_time is None and system_time is None
+                       and not all_valid_time and not all_system_time)
+            files = self.table_files(table, current_only=current,
+                                     live=(l0, entries))
         ev = self.events(table, files=files)
         if prefilter is not None:
             if prefilter_mode not in ("force", "auto", "auto-stats",
@@ -2182,16 +2304,14 @@ class TableStore:
             cand_src = ev.where(cond)
             use = True
             est = None
-            efiles = (files if files is not None
-                      else self.table_files(table))
             if prefilter_mode in ("auto", "auto-stats"):
-                est = self._stats_selectivity(efiles, cond)
+                est = self._stats_selectivity(files, cond)
                 if est is None and prefilter_mode == "auto":
                     # "auto-stats" skips the Arrow-batch sampling
                     # fallback: metadata-only cost (~ms), for callers
                     # that inject prefilters speculatively (the SQL
                     # rewriter) and can't afford a per-query sample
-                    est = self._prefilter_selectivity(efiles, cond)
+                    est = self._prefilter_selectivity(files, cond)
                 use = est is not None and est <= prefilter_threshold
             if use:
                 cand = cand_src.select("_iid").distinct()
@@ -2211,17 +2331,23 @@ class TableStore:
                 # OOM footgun for broad force-mode predicates).
                 if prefilter_mode == "force-selective" or (
                         est is not None and self._prefilter_fits_broadcast(
-                            est, efiles)):
+                            est, files)):
                     cand = F.broadcast(cand)
                 ev = ev.join(cand, "_iid", "left_semi")
-        return self._resolve(ev, valid_time, system_time,
+        return self._resolve(ev, files, valid_time, system_time,
                              all_valid_time, all_system_time,
                              keep_meta=keep_meta)
 
-    def _resolve(self, ev: DataFrame, valid_time=None, system_time=None,
-                 all_valid_time=False, all_system_time=False,
+    def _resolve(self, ev: DataFrame, files: list[str], valid_time=None,
+                 system_time=None, all_valid_time=False,
+                 all_system_time=False,
                  keep_meta: bool = False) -> DataFrame:
-        """keep_meta=True surfaces `_valid_from/_valid_to/
+        """Resolve the events `ev` read from `files` at the bounds.
+        When no footer of `files` admits an erase event, every
+        strategy skips `bitemporal.drop_erased` (a self-join: a
+        second read of the events and a broadcast job).
+
+        keep_meta=True surfaces `_valid_from/_valid_to/
         _system_from/_system_to` on the POINT path too (the range /
         ALL paths always carry them) — the reference exposes these as
         queryable columns on every table (its SELECT * just excludes
@@ -2232,20 +2358,22 @@ class TableStore:
         not computed (documented approximation — the range spellings
         are exact via the polygon paths)."""
         doc_cols = [c for c in ev.columns if c not in bitemporal.META_COLS]
+        erases = self._may_erase(files)
         if all_valid_time and all_system_time:
-            return bitemporal.polygon_history(ev, doc_cols)
+            return bitemporal.polygon_history(ev, doc_cols, erases=erases)
         if all_valid_time:
             return bitemporal.resolve_valid_range(
-                ev, "0001-01-01", bitemporal.MAX_TS, system_time, doc_cols)
+                ev, "0001-01-01", bitemporal.MAX_TS, system_time, doc_cols,
+                erases=erases)
         if all_system_time:
-            hist = bitemporal.polygon_history(ev, doc_cols)
+            hist = bitemporal.polygon_history(ev, doc_cols, erases=erases)
             v = F.current_timestamp() if valid_time is None \
                 else F.lit(valid_time).cast("timestamp")
             return hist.filter((F.col("_valid_from") <= v)
                                & (v < F.coalesce(F.col("_valid_to"),
                                                  F.lit(bitemporal.MAX_TS).cast("timestamp"))))
         out = bitemporal.resolve_asof(ev, valid_time, system_time,
-                                      keep_meta=keep_meta)
+                                      keep_meta=keep_meta, erases=erases)
         if keep_meta:
             out = out.drop("op").withColumn(
                 "_system_to", F.lit(None).cast("timestamp"))
