@@ -30,6 +30,10 @@ pytestmark = pytest.mark.skipif(
 
 
 def _load(name):
+    """The named fixture, or {} without the reference docs (the
+    module-level skipif then skips every test)."""
+    if not os.path.isdir(DOCS):
+        return {}
     with open(os.path.join(DOCS, name)) as f:
         return yaml.safe_load(f)
 

@@ -89,7 +89,10 @@ def test_prefilter_rejects_temporal_predicates(store):
         store.scan("pf", prefilter=F.col("nope") < 5)
 
 
-def test_prefilter_auto_enables_on_selective_skips_on_broad(store):
+def test_prefilter_auto_enables_on_selective_skips_on_broad(store,
+                                                           monkeypatch):
+    from xtdb_spark import tx
+
     _setup(store)
     selective = F.col("_id") == 7          # ~1.7% (1 of 60 ids)
     broad = F.col("x") >= 0                # everything
@@ -103,14 +106,14 @@ def test_prefilter_auto_enables_on_selective_skips_on_broad(store):
     for pred, thresh, expect_semi in [(selective, 0.05, True),
                                       (selective, 0.005, False),
                                       (broad, 0.05, False)]:
-        auto = store.scan("pf", prefilter=pred, prefilter_mode="auto",
-                          prefilter_threshold=thresh)
+        monkeypatch.setattr(tx, "PREFILTER_THRESHOLD", thresh)
+        auto = store.scan("pf", prefilter=pred, prefilter_mode="auto")
         assert ("LeftSemi" in plan(auto)) == expect_semi, (pred, thresh)
         assert _rows(auto.filter(pred)) == \
             _rows(store.scan("pf").filter(pred))
     # a predicate the stats parser can't bound (string equality)
-    # falls back to the sampling estimator and still decides
-    s_pred = F.col("s") == "s1"            # 1/3 of rows → broad
+    # gets no footer estimate, hence no candidate pass
+    s_pred = F.col("s") == "s1"
     auto = store.scan("pf", prefilter=s_pred, prefilter_mode="auto")
     assert "LeftSemi" not in plan(auto)
     assert _rows(auto.filter(s_pred)) == \

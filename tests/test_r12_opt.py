@@ -255,30 +255,3 @@ def test_hashed_gram_arrays_injective_encoding(spark):
     new = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
            dedup._jaccard_for_pairs_arrays(gh, pairs).collect()}
     assert old == new and (1, 4) in new and new[(1, 4)] == 1.0
-
-
-@pytest.mark.parametrize("name", [
-    "pipe_contamination_check", "pipe_repetition_score",
-    "pipe_perplexity_filter", "pipe_dedup_substring",
-    "pipe_dedup_span_pairs", "pipe_dedup_ngram_jaccard",
-    "pipe_ann_lsh"])
-def test_no_expensive_exprs_in_filter_conditions(spark, name):
-    """r12 pass 3: no Filter condition re-derives a tokenize/gram
-    tree. Plain explode over an aliased computed array makes
-    InferFiltersFromGenerate add `size(col) > 0`, and predicate
-    pushdown substitutes the column's FULL definition into the
-    condition (pipe_contamination_check paid the 5-gram pass twice:
-    52 split trees in its Filters — 1.82x once removed). Same trap
-    via explicit pre-explode size filters (perplexity/spans). The
-    explode_outer spellings keep these conditions clean of regex,
-    split, zip_with and gram-hash transforms."""
-    from xtdb_spark.queries import QUERIES
-
-    df = QUERIES[name].fn(spark, SF_DIR)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted")
-    conds = [l for l in plan.splitlines() if l.startswith("Condition")]
-    for fn_name in ("split(", "regexp_replace(", "zip_with(",
-                    "regexp_extract_all(", "transform("):
-        bad = [c for c in conds if fn_name in c]
-        assert not bad, f"{fn_name} in Filter condition: {bad[0][:200]}"

@@ -227,7 +227,8 @@ def test_system_time_file_pruning(store):
     # every kept file's footer min is within the bound
     from datetime import datetime
     bound = datetime.fromisoformat("2024-02-01 12:00:00")
-    assert all(store._file_min_system_from(f) <= bound for f in pruned)
+    assert all(store._file_footer(f).min_system_from <= bound
+               for f in pruned)
 
     hist = store.scan("pr", system_time="2024-02-01 12:00:00")
     # the built plan reads only the pruned files
@@ -255,7 +256,8 @@ def test_prune_keeps_retroactive_erase_files(store):
     store.put("pe", [{"_id": 1, "v": 10}], system_from="2024-03-02")
     store.erase("pe", [1], system_from="2024-03-03")
     pruned = store.prune_manifest("pe", "2024-03-01 12:00:00")
-    infos = [store._file_footer_info(f) for f in pruned]
+    infos = [(ft.min_system_from, ft.may_erase)
+             for ft in map(store._file_footer, pruned)]
     # the erase file (min_sf Mar 3) is kept; the Mar 2 put file is not
     assert any(me for _, me in infos)
     assert all(me or mn.day == 1 for mn, me in infos)

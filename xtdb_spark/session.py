@@ -133,9 +133,10 @@ class XtdbSession:
     def scan(self, table, valid_time=None, system_time=None, all_valid_time=False,
              all_system_time=False, **scan_opts):
         """`scan_opts` passes through to TableStore.scan — notably
-        `prefilter=`/`prefilter_mode=` (sideways candidate pruning;
-        the SQL path injects these automatically, DataFrame/XTQL
-        callers reach them here)."""
+        `prefilter=`/`prefilter_mode=` (sideways candidate pruning,
+        mode "force", "auto" or "force-selective"; the SQL path
+        injects these automatically, DataFrame/XTQL callers reach
+        them here)."""
         return self.store.scan(table, valid_time=valid_time, system_time=system_time,
                                all_valid_time=all_valid_time,
                                all_system_time=all_system_time,
@@ -158,9 +159,9 @@ class XtdbSession:
     def status(self) -> dict:
         """Node status (reference `xtdb.api/status`: latest tx +
         storage summary): latest committed tx id/system-time, table
-        count, and total bytes under management — all from driver-side
-        manifests (no Spark job)."""
-        import glob
+        count, and the bytes of every table's live files — all from
+        driver-side manifests and the cached footer records (no Spark
+        job)."""
         import json as _json
         import os
 
@@ -177,8 +178,8 @@ class XtdbSession:
         tables = [d for d in sorted(os.listdir(wh))
                   if os.path.isdir(os.path.join(wh, d))
                   and not d.startswith(("_", "."))]
-        n_bytes = sum(os.path.getsize(p) for t in tables
-                      for p in glob.glob(os.path.join(wh, t, "*.parquet")))
+        n_bytes = sum(self.store._file_footer(p).n_bytes for t in tables
+                      for p in self.store.table_files(t.replace("__", ".")))
         return {
             "latest_completed_tx": (
                 {"tx_id": latest["tx_id"],

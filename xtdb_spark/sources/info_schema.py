@@ -44,6 +44,17 @@ def _tables(store) -> list[tuple[str, str]]:
     return out
 
 
+def _footer_rows(store, s: str, t: str) -> int:
+    """Table `s`.`t`'s event count from its live files' cached footer
+    records (`TableStore._file_footer`), never a scan. 0 for a table
+    whose files cannot be listed."""
+    try:
+        files = store.table_files(f"{s}.{t}" if s != "public" else t)
+        return sum(store._file_footer(f).n_rows or 0 for f in files)
+    except Exception:
+        return 0
+
+
 def information_schema_tables(spark: SparkSession, store) -> DataFrame:
     rows = [(("xtdb"), s, t, "BASE TABLE") for s, t in _tables(store)]
     return spark.createDataFrame(
@@ -94,16 +105,13 @@ def xt_table_stats(spark: SparkSession, store) -> DataFrame:
     views (information_schema.clj:231-508). Event counts come from the
     parquet FOOTERS (row-group metadata), never a data scan —
     registering introspection views must stay O(files), not O(rows)."""
-    import pyarrow.parquet as pq
-
     rows = []
     for s, t in _tables(store):
         full = f"{s}.{t}" if s != "public" else t
-        files = store.table_files(full)  # live manifest: L0 + levels
-        n_bytes = sum(os.path.getsize(f) for f in files)
-        n_events = sum(pq.ParquetFile(f).metadata.num_rows
-                       for f in files)
-        rows.append((s, t, len(files), n_bytes, n_events))
+        # live manifest: L0 + levels, one cached footer record each
+        feet = [store._file_footer(f) for f in store.table_files(full)]
+        rows.append((s, t, len(feet), sum(ft.n_bytes for ft in feet),
+                     sum(ft.n_rows or 0 for ft in feet)))
     return spark.createDataFrame(
         rows or [("", "", 0, 0, 0)],
         "schema string, table_name string, n_files int, n_bytes long, "
@@ -281,12 +289,10 @@ def xt_trie_stats(spark: SparkSession, store) -> DataFrame:
     these stats exist — they also drive `TableStore.prune_manifest`'s
     file-level temporal pruning; files written by other tools with
     INT96 timestamps show NULL here and are never pruned). O(files),
-    never a data scan."""
-    import pyarrow.parquet as pq
-
-    rows = []
+    never a data scan: each row is the file's cached footer record."""
     import re as _re
 
+    rows = []
     for s, t in _tables(store):
         full = f"{s}.{t}" if s != "public" else t
         for p in store.table_files(full):
@@ -295,21 +301,9 @@ def xt_trie_stats(spark: SparkSession, store) -> DataFrame:
             # the name (compactor.py): l<level>-p<part>-<cur|hist>-…
             lm = _re.match(r"l(\d+)-p", fname)
             level = int(lm.group(1)) if lm else 0
-            meta = pq.ParquetFile(p).metadata
-            sys_min = sys_max = None
-            try:
-                idx = {meta.schema.column(i).name: i
-                       for i in range(meta.num_columns)}["_system_from"]
-                stats = [meta.row_group(g).column(idx).statistics
-                         for g in range(meta.num_row_groups)]
-                mins = [st.min for st in stats if st and st.has_min_max]
-                maxs = [st.max for st in stats if st and st.has_min_max]
-                if mins:
-                    sys_min, sys_max = str(min(mins)), str(max(maxs))
-            except KeyError:
-                pass
-            rows.append((s, t, fname, level, meta.num_rows,
-                         os.path.getsize(p), sys_min, sys_max))
+            ft = store._file_footer(p)
+            rows.append((s, t, fname, level, ft.n_rows, ft.n_bytes,
+                         *(ft.system_from_range or (None, None))))
     return spark.createDataFrame(
         rows or [("", "", "", 0, 0, 0, None, None)],
         "schema string, table_name string, file string, level int, "
@@ -339,7 +333,7 @@ def xt_metrics(spark: SparkSession, store) -> DataFrame:
     for s, t in tables:
         for f in store.table_files(f"{s}.{t}" if s != "public" else t):
             n_files += 1
-            n_bytes += os.path.getsize(f)
+            n_bytes += store._file_footer(f).n_bytes
     rows = [("txs_total", float(n_txs)),
             ("txs_committed", float(n_committed)),
             ("txs_aborted", float(n_txs - n_committed)),
@@ -419,16 +413,8 @@ def pg_stat_user_tables(spark: SparkSession, store=None) -> DataFrame:
     rows = []
     if store is not None:
         for s, t in _tables(store):
-            n = 0
-            try:
-                import pyarrow.parquet as pq
-
-                for f in store.table_files(f"{s}.{t}"
-                                           if s != "public" else t):
-                    n += pq.ParquetFile(f).metadata.num_rows
-            except Exception:
-                pass
-            rows.append((_name_oid(f"{s}.{t}"), s, t, n))
+            rows.append((_name_oid(f"{s}.{t}"), s, t,
+                         _footer_rows(store, s, t)))
     return spark.createDataFrame(
         rows, "relid int, schemaname string, relname string, "
               "n_live_tup long")
@@ -475,18 +461,7 @@ def xt_live_tables(spark: SparkSession, store) -> DataFrame:
     the reference reports the in-memory live index; our appends are
     durable immediately (no unflushed state), so live == committed —
     the row counts come from parquet footers, zero scan."""
-    rows = []
-    for s, t in _tables(store):
-        n = 0
-        try:
-            import pyarrow.parquet as pq
-
-            for f in store.table_files(f"{s}.{t}" if s != "public"
-                                       else t):
-                n += pq.ParquetFile(f).metadata.num_rows
-        except Exception:
-            pass
-        rows.append((s, t, n))
+    rows = [(s, t, _footer_rows(store, s, t)) for s, t in _tables(store)]
     return spark.createDataFrame(
         rows or [("", "", 0)],
         "schema_name string, table_name string, row_count long"

@@ -43,6 +43,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import functions as F
 
+from xtdb_spark.tx import PREFILTER_THRESHOLD, _parse_numeric_conjunction
+
 # ---------------------------------------------------------------- tokens
 
 _TOKEN_RE = re.compile(
@@ -1453,7 +1455,7 @@ class _Rewriter:
         literal, attribute each to a scanned store table by alias
         (or to a single-relation query's one table), and decide that
         the reference's scan takes scan(prefilter=...,
-        prefilter_mode="auto-stats") — parquet footer statistics
+        prefilter_mode="auto") — parquet footer statistics
         decide in ~ms whether the candidate semi-join pays; anything
         unparseable, ambiguous, temporal-column, or non-selective
         leaves the plain scan. SAFE BY CONSTRUCTION: the semi-join is
@@ -1513,8 +1515,8 @@ class _Rewriter:
             # inside _join_derived_pred) — "force-selective" makes
             # the scan broadcast-hint the candidate semi-join so the
             # resolution shuffle itself shrinks; literal-only
-            # predicates keep the auto-stats gate
-            mode = "force-selective" if jd is not None else "auto-stats"
+            # predicates keep the "auto" footer gate
+            mode = "force-selective" if jd is not None else "auto"
             decided[n] = (pred, mode, jd)
         return decided
 
@@ -1552,21 +1554,17 @@ class _Rewriter:
         budget (the scan broadcast-hints it under "force-selective"
         so the resolution shuffle itself shrinks — without the hint
         AQE converts the semi-join only after the full probe shuffle
-        exists). Numeric keys only (strings have no footer
-        point-mass estimate). An empty build key set lowers to
+        exists). Integer keys only (strings and floats have no
+        footer point-mass estimate). An empty build key set lowers to
         `false` — the inner join is provably empty. Kill switch:
         store.sql_join_prefilter = False; at most
         JOIN_PREFILTER_KEY_CAP (64) keys."""
-        import os
-
-        from pyspark.sql import functions as F
-
         store = self.xt.store
         if not getattr(store, "sql_join_prefilter", True):
             return None
         try:
             ffiles = store.table_files(r["table"])
-            fact_bytes = sum(os.path.getsize(f) for f in ffiles)
+            fact_bytes = sum(store._file_footer(f).n_bytes for f in ffiles)
         except Exception:
             return None
         if fact_bytes < JOIN_PREFILTER_MIN_FACT_BYTES:
@@ -1596,7 +1594,8 @@ class _Rewriter:
                 " AND ".join(f"({c[2]})" for c in bconj))
             try:
                 bfiles = store.table_files(bref["table"])
-                est_b = store._stats_selectivity(bfiles, F.expr(bpred))
+                est_b = store._stats_selectivity(
+                    bfiles, _parse_numeric_conjunction(F.expr(bpred)))
             except Exception:
                 continue
             if est_b is None or est_b > 0.05:
@@ -1620,14 +1619,17 @@ class _Rewriter:
                            if row[0] is not None})
             if not keys:
                 return "false"    # inner join provably empty
-            if not all(isinstance(k, (int, float))
+            # integer keys only: the point mass 1/(max-min+1) assumes
+            # an integer-dense domain, arbitrary for a float column
+            if not all(isinstance(k, int)
                        and not isinstance(k, bool) for k in keys):
                 continue
             try:
-                est_in = store._stats_in_selectivity(ffiles, ca, keys)
+                est_in = store._stats_selectivity(
+                    ffiles, {ca: [(k, k) for k in keys]})
             except Exception:
                 continue
-            if est_in is None or est_in > 0.005:
+            if est_in is None or est_in > PREFILTER_THRESHOLD:
                 continue
             if not store._prefilter_fits_broadcast(est_in, ffiles):
                 continue          # candidate set too big to

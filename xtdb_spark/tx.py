@@ -54,6 +54,12 @@ from xtdb_spark import bitemporal, compactor
 
 FORBIDDEN_SCHEMAS = ("xt", "information_schema", "pg_catalog")
 
+# the footer-estimated selectivity at or below which an "auto"
+# prefilter (and a SQL join-derived IN list) is injected — calibrated
+# from the 20M-row A/B grid: the candidate pass's win at 0.1%
+# selectivity flips to a loss by 2%
+PREFILTER_THRESHOLD = 0.005
+
 # tokens of a Column/SQL predicate rendering; Spark prints Column
 # expressions in call style (`and(>=(x, -50), <=(x, 49))`) while
 # F.expr keeps the raw SQL infix text (`x < 3`, `x between 1 and 5`)
@@ -64,14 +70,18 @@ _PRED_TOK = re.compile(
 _FLIP = {"<": ">", ">": "<", "<=": ">=", ">=": "<=", "=": "="}
 
 
-def _parse_numeric_conjunction(text: str):
-    """Parse a predicate rendering into per-column [lo, hi] interval
-    bounds — ONLY when it is a pure conjunction of numeric
-    comparisons (col <op> literal, either operand order, call-style
-    or infix, BETWEEN included). Anything else (OR, NOT, strings,
-    function calls, IS NULL, …) returns None: the caller then falls
-    back to sample-based estimation rather than risk a wrong
-    metadata-only guess."""
+def _parse_numeric_conjunction(pred):
+    """Parse a predicate (a Column or its SQL text) into the
+    `{column: [(lo, hi)]}` intervals `TableStore._stats_selectivity`
+    takes — ONLY when it is a pure conjunction of numeric comparisons
+    (col <op> literal, either operand order, call-style or infix,
+    BETWEEN included). Anything else (OR, NOT, strings, function
+    calls, IS NULL, …) returns None: the caller then injects nothing
+    rather than risk a wrong metadata-only guess."""
+    text = str(pred)
+    m = re.match(r"^Column<'(.*)'>$", text, re.DOTALL)
+    if m:
+        text = m.group(1)
     toks = []
     i = 0
     while i < len(text):
@@ -189,7 +199,7 @@ def _parse_numeric_conjunction(text: str):
             return None
     except (ValueError, KeyError, IndexError):
         return None
-    return bounds or None
+    return {c: [(lo, hi)] for c, (lo, hi) in bounds.items()} or None
 
 
 # the key Spark stores its own schema under in every parquet footer it
@@ -198,9 +208,19 @@ _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class _Footer(NamedTuple):
-    """What one parquet footer tells a read (TableStore._file_footer)."""
+    """What one store file's size and parquet footer tell a read, an
+    estimate or a system view (TableStore._file_footer)."""
 
+    n_bytes: int
+    n_rows: int | None        # None: the footer could not be read
+    rg_rows: tuple            # rows per row group
+    # column → per row group (min, max) as floats, None where the
+    # row group has no numeric min/max (columns with none are absent)
+    rg_numeric: dict
     min_system_from: datetime | None
+    # (min, max) `_system_from` over the row groups with stats, as
+    # `xt.trie_stats` prints them; None without such stats
+    system_from_range: tuple | None
     may_erase: bool
     spark_schema: object      # pyspark StructType | None = unknown
 
@@ -1256,12 +1276,27 @@ class TableStore:
 
     # ---- maintenance ----
 
+    def _maintain(self, table: str, step, *args):
+        """Run one maintenance `step(table, *args)` under the commit
+        lock (maintenance serializes with writers across processes),
+        then drop the cached footers of the files that left the live
+        manifest — compaction inputs, a full rewrite's old files,
+        vacuumed files — so a long-lived process (a pgwire server
+        under upserts) caches only live files."""
+        with self._ipc_lock():
+            out = step(table, *args)
+            live = set(self.table_files(table))
+            prefix = os.path.join(self._path(table), "")
+            for f in list(self._footer_cache):
+                if f.startswith(prefix) and f not in live:
+                    self._footer_cache.pop(f, None)
+            return out
+
     def compact(self, table: str,
                 file_size_target: int = compactor.FILE_SIZE_TARGET,
                 l0_threshold: int = compactor.L0_THRESHOLD) -> int:
-        with self._ipc_lock():      # maintenance serializes with
-            return self._compact_unlocked(  # writers across processes
-                table, file_size_target, l0_threshold)
+        return self._maintain(table, self._compact_unlocked,
+                              file_size_target, l0_threshold)
 
     def _compact_unlocked(self, table, file_size_target, l0_threshold):
         """LEVELED background compaction (reference compactor.clj +
@@ -1278,8 +1313,8 @@ class TableStore:
     def optimize(self, table: str, n_files: int | None = None,
                  full: bool | None = None,
                  cluster_by: list[str] | None = None) -> int:
-        with self._ipc_lock():
-            return self._optimize_unlocked(table, n_files, full, cluster_by)
+        return self._maintain(table, self._optimize_unlocked, n_files,
+                              full, cluster_by)
 
     def _optimize_unlocked(self, table: str, n_files: int | None = None,
                            full: bool | None = None,
@@ -1335,7 +1370,7 @@ class TableStore:
         # physical erase: keep only what an erase didn't wipe
         ev = bitemporal.drop_erased(self.events(table))
         if n_files is None:
-            n_bytes = sum(os.path.getsize(f)
+            n_bytes = sum(self._file_footer(f).n_bytes
                           for f in glob.glob(os.path.join(path, "*.parquet")))
             n_files = max(1, n_bytes // (128 * 1024 * 1024) + 1)
         tmp = path + "__compacting"
@@ -1382,8 +1417,8 @@ class TableStore:
         self._pins.pop(token, None)
 
     def vacuum(self, table: str, retain_system_time=None) -> list[str]:
-        with self._ipc_lock():
-            return self._vacuum_unlocked(table, retain_system_time)
+        return self._maintain(table, self._vacuum_unlocked,
+                              retain_system_time)
 
     def _vacuum_unlocked(self, table: str, retain_system_time=None) -> list[str]:
         """Garbage-collect WHOLLY-SUPERSEDED event files (reference
@@ -1770,20 +1805,18 @@ class TableStore:
                 for fld in self._file_footer(f).spark_schema} \
             == set(schema.names)
 
-    def _file_footer_info(self, path: str):
-        """(min `_system_from`, may-contain-erase) for a file, read
-        from the parquet FOOTER only (no data pages), cached by
-        (size, mtime). min=None = stats unavailable → never prune;
-        may-contain-erase uses the `op` column's min/max range and
-        defaults True when stats are missing."""
-        return self._file_footer(path)[:2]
-
     def _file_footer(self, path: str) -> _Footer:
-        """One cached footer read per file version (keyed by size and
-        mtime, so an upsert reads only its new file's footer): the
-        `_file_footer_info` pair and the schema Spark reads the file
-        as (`_spark_file_schema`). Any part the footer cannot give is
-        None (may_erase: True)."""
+        """The one place a store file is sized and its parquet footer
+        opened, cached per file version (keyed by size and mtime, so
+        an upsert reads only its new file's footer). Every reader
+        takes this record: the schema fold (`_footer_schema`), the
+        erase gate (`_may_erase`), AS-OF pruning (`prune_manifest`),
+        the selectivity estimate (`_stats_selectivity`), the
+        broadcast and join-probe size gates, the point-route column
+        guard, the system views (`sources/info_schema.py`) and
+        `XtdbSession.status`. Any part the footer cannot give is None
+        (may_erase: True). `_maintain` drops the entries of files
+        that leave the live manifest."""
         import pyarrow.parquet as pq
 
         st = os.stat(path)
@@ -1791,37 +1824,51 @@ class TableStore:
         hit = self._footer_cache.get(path)
         if hit is not None and hit[0] == key:
             return hit[1]
-        min_sf, may_erase, spark_schema = None, True, None
         try:
             md = pq.ParquetFile(path).metadata
             names = {md.schema.column(i).name: i
                      for i in range(md.num_columns)}
+            groups = [md.row_group(g) for g in range(md.num_row_groups)]
+            stats = {c: [rg.column(i).statistics for rg in groups]
+                     for c, i in names.items()}
 
-            def rg_stats(col):
-                out = []
-                for rg in range(md.num_row_groups):
-                    s = md.row_group(rg).column(col).statistics
-                    if s is None or not s.has_min_max:
-                        return None
-                    out.append((s.min, s.max))
-                return out
+            def has(s):
+                return s is not None and s.has_min_max
 
-            if "_system_from" in names:
-                sf = rg_stats(names["_system_from"])
-                if sf:
-                    m = min(lo for lo, _ in sf)
-                    if getattr(m, "tzinfo", None) is not None:
-                        m = m.astimezone(timezone.utc).replace(tzinfo=None)
-                    min_sf = m
-            if "op" in names:
-                ops = rg_stats(names["op"])
-                if ops:
-                    may_erase = any(lo <= "erase" <= hi for lo, hi in ops)
-            spark_schema = _spark_file_schema(
-                md.metadata or {}, md.schema.to_arrow_schema())
+            def numeric(s):
+                try:
+                    lo, hi = (s.min, s.max) if has(s) else (None, None)
+                except Exception:     # a type pyarrow cannot decode
+                    return None
+                return ((float(lo), float(hi))
+                        if isinstance(lo, (int, float))
+                        and not isinstance(lo, bool) else None)
+
+            rg_numeric = {}
+            for c, ss in stats.items():
+                nums = tuple(map(numeric, ss))
+                if any(nums):
+                    rg_numeric[c] = nums
+            min_sf, sf_range, may_erase = None, None, True
+            sf = stats.get("_system_from", [])
+            if sf and all(map(has, sf)):
+                m = min(s.min for s in sf)
+                if getattr(m, "tzinfo", None) is not None:
+                    m = m.astimezone(timezone.utc).replace(tzinfo=None)
+                min_sf = m
+            if any(map(has, sf)):
+                sf_range = (str(min(s.min for s in sf if has(s))),
+                            str(max(s.max for s in sf if has(s))))
+            ops = stats.get("op", [])
+            if ops and all(map(has, ops)):
+                may_erase = any(s.min <= "erase" <= s.max for s in ops)
+            out = _Footer(st.st_size, md.num_rows,
+                          tuple(rg.num_rows for rg in groups), rg_numeric,
+                          min_sf, sf_range, may_erase,
+                          _spark_file_schema(md.metadata or {},
+                                             md.schema.to_arrow_schema()))
         except Exception:
-            min_sf, may_erase = None, True
-        out = _Footer(min_sf, may_erase, spark_schema)
+            out = _Footer(st.st_size, None, (), {}, None, None, True, None)
         self._footer_cache[path] = (key, out)
         return out
 
@@ -1855,9 +1902,6 @@ class TableStore:
                     return None
         return StructType(list(fields.values()))
 
-    def _file_min_system_from(self, path: str):
-        return self._file_footer_info(path)[0]
-
     def prune_manifest(self, table: str, system_time,
                        live=None) -> list[str]:
         """Manifest restricted to files that can contain rows visible
@@ -1890,8 +1934,9 @@ class TableStore:
             t = t.astimezone(timezone.utc).replace(tzinfo=None)
         kept = []
         for f in files:
-            mn, may_erase = self._file_footer_info(f)
-            if mn is None or mn <= t or may_erase:
+            ft = self._file_footer(f)
+            if ft.min_system_from is None or ft.min_system_from <= t \
+                    or ft.may_erase:
                 kept.append(f)
         return kept
 
@@ -1977,62 +2022,52 @@ class TableStore:
     _PREFILTER_NONDOC = ("_valid_from", "_valid_to", "_system_from",
                          "_system_to", "op")
 
-    def _stats_selectivity(self, files, cond, max_footers: int = 8):
-        """Footer-statistics selectivity for predicates that are pure
-        conjunctions of numeric comparisons (col <op> literal) — the
+    def _stats_selectivity(self, files, bounds, max_footers: int = 8):
+        """Footer-statistics selectivity of `bounds`, a
+        `{column: [(lo, hi), ...]}` map of numeric intervals — the
         reference derives its automatic bloom sideways pushdown from
-        metadata the same way (join.clj:172-226). Reads a bounded
-        number of parquet FOOTERS only (no data): per row group,
-        clamp the predicate's implied [lo,hi] per column against the
-        column's [min,max] under a uniform assumption and multiply
-        across conjuncts, weighting by row count. Returns None for
-        any predicate shape it can't parse (caller falls back to the
-        Arrow-batch sampling estimator)."""
-        import pyarrow.parquet as pq
+        metadata the same way (join.clj:172-226). A conjunction
+        (`_parse_numeric_conjunction`) gives each column one
+        interval; `col IN (k1, k2, …)` gives one column its point
+        intervals (k, k).
 
-        text = str(cond)
-        m = re.match(r"^Column<'(.*)'>$", text, re.DOTALL)
-        if m:
-            text = m.group(1)
-        bounds = _parse_numeric_conjunction(text)
-        if not bounds:
-            return None
+        Walks the cached footers of at most `max_footers` files spread
+        over `files`. Per row group, each column's intervals are
+        clamped against its [min, max] under a uniform assumption:
+        a range adds its overlap share; a point inside adds the
+        discrete-uniform mass 1/(max-min+1); against a constant
+        column an interval holding the value counts 1. A column's
+        masses add, capped at 1; columns multiply; row groups weight
+        by rows. A column without numeric stats in a row group counts
+        as broad (1.0), biasing against injection. None when `bounds`
+        is empty or no footer gives a row group."""
         fs = sorted(files or [])
-        if not fs:
+        if not bounds or not fs:
             return None
         step = max(1, len(fs) // max_footers)
         est_rows = tot_rows = 0.0
         for f in fs[::step][:max_footers]:
-            try:
-                meta = pq.ParquetFile(f).metadata
-            except Exception:
-                continue
-            names = {meta.schema.column(i).name: i
-                     for i in range(meta.num_columns)}
-            for g in range(meta.num_row_groups):
-                rg = meta.row_group(g)
+            ft = self._file_footer(f)
+            for g, n in enumerate(ft.rg_rows):
                 frac = 1.0
-                for col, (lo, hi) in bounds.items():
-                    idx = names.get(col)
-                    st = (rg.column(idx).statistics
-                          if idx is not None else None)
-                    if st is None or not st.has_min_max \
-                            or not isinstance(st.min, (int, float)) \
-                            or isinstance(st.min, bool):
+                for col, ivs in bounds.items():
+                    mm = ft.rg_numeric.get(col)
+                    if mm is None or mm[g] is None:
                         continue       # unknown → assume broad (safe)
-                    cmin, cmax = float(st.min), float(st.max)
-                    if cmax <= cmin:           # constant column
-                        ov = 1.0 if lo <= cmin <= hi else 0.0
-                    elif lo == hi:             # point (equality):
-                        #                        discrete-uniform mass
-                        ov = (1.0 / (cmax - cmin + 1)
-                              if cmin <= lo <= cmax else 0.0)
+                    cmin, cmax = mm[g]
+                    if cmax <= cmin:            # constant column
+                        mass = 1.0 if any(lo <= cmin <= hi
+                                          for lo, hi in ivs) else 0.0
                     else:
-                        ov = max(0.0, (min(hi, cmax) - max(lo, cmin))
-                                 / (cmax - cmin))
-                    frac *= min(1.0, ov)
-                est_rows += frac * rg.num_rows
-                tot_rows += rg.num_rows
+                        points = sum(1 for lo, hi in ivs
+                                     if lo == hi and cmin <= lo <= cmax)
+                        mass = points / (cmax - cmin + 1) + sum(
+                            max(0.0, (min(hi, cmax) - max(lo, cmin))
+                                / (cmax - cmin))
+                            for lo, hi in ivs if lo != hi)
+                    frac *= min(1.0, mass)
+                est_rows += frac * n
+                tot_rows += n
         return (est_rows / tot_rows) if tot_rows else None
 
     def _prefilter_fits_broadcast(self, est: float, files,
@@ -2045,131 +2080,14 @@ class TableStore:
         candidate set is too big to broadcast and the hint stays
         off, leaving AQE's runtime decision."""
         try:
-            total = sum(os.path.getsize(f) for f in (files or []))
+            total = sum(self._file_footer(f).n_bytes for f in files or [])
         except OSError:
             return False
         return est * total <= budget
 
-    def _stats_in_selectivity(self, files, col: str, keys,
-                              max_footers: int = 8):
-        """Footer-statistics selectivity of `col IN (keys)` for
-        NUMERIC keys (the join-derived sideways-pushdown estimator —
-        reference join.clj:172-226 builds its bloom from the same
-        build-side metadata reasoning): per row group, each key
-        inside the column's [min,max] contributes a discrete-uniform
-        point mass 1/(max-min+1); masses sum (capped at 1) and weight
-        by row count. Returns None for non-numeric keys or when no
-        file yields usable stats — the caller then skips the
-        injection (conservative: unknown means don't pay the
-        candidate pass). Row groups without stats count as broad
-        (frac 1.0), biasing AGAINST injection."""
-        import pyarrow.parquet as pq
-
-        # INTEGER keys only: the per-key point mass 1/(max-min+1)
-        # assumes an integer-dense domain — for float columns with
-        # fractional ranges (min 0.0, max 0.9) the denominator is ~the
-        # raw range and the estimate is arbitrary relative to the
-        # injection threshold, so floats return None (skip injection)
-        if not keys or not all(
-                isinstance(k, int) and not isinstance(k, bool)
-                for k in keys):
-            return None
-        fs = sorted(files or [])
-        if not fs:
-            return None
-        step = max(1, len(fs) // max_footers)
-        est_rows = tot_rows = 0.0
-        for f in fs[::step][:max_footers]:
-            try:
-                meta = pq.ParquetFile(f).metadata
-            except Exception:
-                continue
-            names = {meta.schema.column(i).name: i
-                     for i in range(meta.num_columns)}
-            idx = names.get(col)
-            for g in range(meta.num_row_groups):
-                rg = meta.row_group(g)
-                st = (rg.column(idx).statistics
-                      if idx is not None else None)
-                if st is None or not st.has_min_max \
-                        or not isinstance(st.min, (int, float)) \
-                        or isinstance(st.min, bool):
-                    frac = 1.0        # unknown → broad (safe)
-                else:
-                    cmin, cmax = float(st.min), float(st.max)
-                    if cmax <= cmin:  # constant column
-                        frac = 1.0 if any(k == cmin for k in keys) \
-                            else 0.0
-                    else:
-                        inside = sum(1 for k in keys
-                                     if cmin <= k <= cmax)
-                        frac = min(1.0, inside / (cmax - cmin + 1))
-                est_rows += frac * rg.num_rows
-                tot_rows += rg.num_rows
-        return (est_rows / tot_rows) if tot_rows else None
-
-    def _prefilter_selectivity(self, files, cond, max_files: int = 3,
-                               rows_per_file: int = 4096):
-        """Cheap selectivity estimate for a document-column predicate:
-        the first Arrow batch of a few spread-out event files,
-        evaluated with the SAME Spark expression on one tiny local
-        DataFrame. Footer min/max alone can't bound arbitrary
-        predicates (strings, IN-lists, function calls); a bounded
-        sample evaluated by the real expression handles any of them
-        at fixed cost — ≤ max_files × rows_per_file rows and one
-        local job per distinct sampled schema, noise next to the
-        scan being sized. Returns matched/total in [0,1], or None
-        when nothing could be sampled (caller falls back to the
-        plain scan)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        fs = sorted(files or [])
-        if not fs:
-            return None
-        picks = list(dict.fromkeys(
-            [fs[0], fs[len(fs) // 2], fs[-1]]))[:max_files] \
-            if len(fs) > max_files else fs
-        drop = set(self._PREFILTER_NONDOC) | {"_iid"}
-        tables = []
-        for f in picks:
-            try:
-                pf = pq.ParquetFile(f)
-                batch = next(pf.iter_batches(batch_size=rows_per_file),
-                             None)
-            except Exception:
-                continue          # unreadable file — skip it
-            if batch is None or batch.num_rows == 0:
-                continue
-            t = pa.Table.from_batches([batch])
-            tables.append(t.drop_columns(
-                [c for c in t.schema.names if c in drop]))
-        if not tables:
-            return None
-        # one evaluation over the union (promote fills schema drift
-        # with nulls); per-table fallback if a sample won't convert
-        groups = [tables]
-        try:
-            merged = pa.concat_tables(tables,
-                                      promote_options="permissive")
-            groups = [[merged]]
-        except Exception:
-            groups = [[t] for t in tables]
-        matched = total = 0
-        for g in groups:
-            try:
-                pdf = g[0].to_pandas()
-                matched += self.spark.createDataFrame(pdf) \
-                    .where(cond).count()
-                total += g[0].num_rows
-            except Exception:
-                continue
-        return (matched / total) if total > 0 else None
-
     def scan(self, table: str, valid_time=None, system_time=None,
              all_valid_time=False, all_system_time=False,
              prefilter=None, prefilter_mode: str = "force",
-             prefilter_threshold: float = 0.005,
              keep_meta: bool = False) -> DataFrame:
         """The :scan operator (reference operator/scan.clj:46-368):
         temporal bounds → resolution strategy. Column pruning +
@@ -2202,18 +2120,19 @@ class TableStore:
         passing" (join.clj:172-226) plays this role between
         operators; here it prunes the scan itself.
 
-        `prefilter_mode="auto"` decides whether the candidate pass
+        `prefilter_mode` takes three values. "force" (default)
+        always applies the candidate pass. "auto" decides whether it
         pays for itself (it wins 1.8-2.2× on selective predicates,
-        costs ~25% on broad ones — BENCH_NOTES round 7): parquet
-        FOOTER min/max statistics estimate the predicate's
-        selectivity for simple numeric conjunctions (metadata only,
-        no I/O jobs), a bounded Arrow-batch sample covers every
-        other predicate shape, and the semi-join is applied only
-        at/below `prefilter_threshold` (calibrated from the 20M-row
-        A/B grid: the win at 0.1% selectivity flips to a loss by
-        2%). The reference injects its bloom pushdown automatically
-        the same way (join.clj:172-226). "force" (default) always
-        applies it — existing callers unchanged."""
+        costs ~25% on broad ones — BENCH_NOTES round 7): the cached
+        parquet FOOTER min/max statistics estimate the selectivity of
+        a pure numeric conjunction (`_stats_selectivity`, no Spark
+        job), and the semi-join is applied only at/below
+        `PREFILTER_THRESHOLD`; a predicate the footers cannot bound
+        gets no candidate pass. The reference injects its bloom
+        pushdown automatically the same way (join.clj:172-226).
+        "force-selective" applies it with the candidate set
+        broadcast-hinted, for callers that sized it themselves (the
+        SQL rewriter's join-derived IN lists)."""
         if (self.serve_cache and prefilter is None and valid_time is None
                 and system_time is None and not all_valid_time
                 and not all_system_time and not keep_meta):
@@ -2273,11 +2192,9 @@ class TableStore:
                                      live=(l0, entries))
         ev = self.events(table, files=files)
         if prefilter is not None:
-            if prefilter_mode not in ("force", "auto", "auto-stats",
-                                      "force-selective"):
+            if prefilter_mode not in ("force", "auto", "force-selective"):
                 raise ValueError("prefilter_mode must be 'force', "
-                                 "'auto', 'auto-stats' or "
-                                 "'force-selective', got "
+                                 "'auto' or 'force-selective', got "
                                  f"{prefilter_mode!r}")
             cond = (F.expr(prefilter) if isinstance(prefilter, str)
                     else prefilter)
@@ -2304,15 +2221,10 @@ class TableStore:
             cand_src = ev.where(cond)
             use = True
             est = None
-            if prefilter_mode in ("auto", "auto-stats"):
-                est = self._stats_selectivity(files, cond)
-                if est is None and prefilter_mode == "auto":
-                    # "auto-stats" skips the Arrow-batch sampling
-                    # fallback: metadata-only cost (~ms), for callers
-                    # that inject prefilters speculatively (the SQL
-                    # rewriter) and can't afford a per-query sample
-                    est = self._prefilter_selectivity(files, cond)
-                use = est is not None and est <= prefilter_threshold
+            if prefilter_mode == "auto":
+                est = self._stats_selectivity(
+                    files, _parse_numeric_conjunction(cond))
+                use = est is not None and est <= PREFILTER_THRESHOLD
             if use:
                 cand = cand_src.select("_iid").distinct()
                 # BROADCAST the candidate set when it is known-small:

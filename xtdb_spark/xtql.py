@@ -41,8 +41,9 @@ def from_(table: str, bind: dict[str, str] | None = None, **temporal) -> Step:
     optional temporal opts (valid_time=, system_time=, all_valid_time=,
     all_system_time=) and optional column renames `bind`. Extra
     kwargs pass through to scan — `prefilter=`/`prefilter_mode=`
-    give XTQL pipelines the same sideways candidate pruning the SQL
-    path injects automatically (reference join.clj:172-226 applies
+    ("force", "auto" or "force-selective") give XTQL pipelines the
+    same sideways candidate pruning the SQL path injects
+    automatically (reference join.clj:172-226 applies
     it to every query surface); renames in `bind` happen AFTER the
     scan, so the prefilter uses the table's own column names.
 
