@@ -6,11 +6,10 @@ the record."""
 import os
 
 import pyarrow.parquet as pq
-import pytest
-from pyspark.sql import functions as F
 
 from xtdb_spark.sources import info_schema
-from xtdb_spark.tx import _parse_numeric_conjunction
+from xtdb_spark.sql.rewriter import (_numeric_bounds, _simple_conjunct,
+                                     _tokenize, _where_conjuncts)
 
 
 def _est_table(store):
@@ -25,11 +24,17 @@ def _est_table(store):
     return store.table_files("est")
 
 
+def _bounds(where):
+    """The SQL rewriter's interval fold of a WHERE conjunction."""
+    parts = _where_conjuncts(_tokenize(f"SELECT * FROM est WHERE {where}"))
+    return _numeric_bounds([_simple_conjunct(p) for p in parts])
+
+
 # the figures the two estimators this one replaced gave on the
 # fixture above (the conjunction estimator, then the IN estimator)
 _CONJUNCTIONS = [("x < 50", 0.20973272648314523),
                  ("x = 7", 0.004173646007816862),
-                 ("x BETWEEN 10 AND 30", 0.0838930905932581),
+                 ("x >= 10 AND x <= 30", 0.0838930905932581),
                  ("x >= 20 AND k < 10", 0.2686505087797263)]
 _IN_LISTS = [("k", [3], 0.17777777777777778),
              ("k", [3, 17, 40], 0.2111111111111111),
@@ -41,18 +46,13 @@ def test_one_estimator_keeps_both_figures(store, monkeypatch):
     assert len(files) == 3
 
     def estimates():
-        conj = [store._stats_selectivity(
-            files, _parse_numeric_conjunction(F.expr(p)))
-            for p, _ in _CONJUNCTIONS]
-        # the Column rendering (call style) parses to the same bounds
-        call_style = (F.col("x") >= 20) & (F.col("k") < 10)
-        conj.append(store._stats_selectivity(
-            files, _parse_numeric_conjunction(call_style)))
+        conj = [store._stats_selectivity(files, _bounds(p))
+                for p, _ in _CONJUNCTIONS]
         ins = [store._stats_selectivity(files, {c: [(k, k) for k in keys]})
                for c, keys, _ in _IN_LISTS]
         return conj, ins
 
-    want = ([e for _, e in _CONJUNCTIONS] + [_CONJUNCTIONS[-1][1]],
+    want = ([e for _, e in _CONJUNCTIONS],
             [e for _, _, e in _IN_LISTS])
     assert estimates() == want
     # a second estimate over unchanged files opens no footer
@@ -69,8 +69,7 @@ def test_one_estimator_keeps_both_figures(store, monkeypatch):
 
 def test_estimator_refuses_what_footers_cannot_bound(store):
     files = _est_table(store)
-    assert _parse_numeric_conjunction(F.col("x") == "a") is None
-    assert _parse_numeric_conjunction("x < 3 OR x > 5") is None
+    assert _bounds("x = 'a'") is None
     assert store._stats_selectivity(files, None) is None
     assert store._stats_selectivity([], {"x": [(1, 1)]}) is None
     # a column no footer has numeric stats for counts as broad
@@ -153,11 +152,3 @@ def test_system_views_equal_direct_footer_reads(spark, store):
     store.put("sv", [{"_id": 99, "v": 1}], system_from="2024-02-01")
     _check_views(spark, store)
 
-
-def test_prefilter_mode_takes_three_values(store):
-    store.put("pm", [{"_id": 1, "x": 1}])
-    for ok in ("force", "auto", "force-selective"):
-        store.scan("pm", prefilter="x = 1", prefilter_mode=ok)
-    for bad in ("auto-stats", "sample"):
-        with pytest.raises(ValueError, match="prefilter_mode"):
-            store.scan("pm", prefilter="x = 1", prefilter_mode=bad)

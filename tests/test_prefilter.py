@@ -89,37 +89,6 @@ def test_prefilter_rejects_temporal_predicates(store):
         store.scan("pf", prefilter=F.col("nope") < 5)
 
 
-def test_prefilter_auto_enables_on_selective_skips_on_broad(store,
-                                                           monkeypatch):
-    from xtdb_spark import tx
-
-    _setup(store)
-    selective = F.col("_id") == 7          # ~1.7% (1 of 60 ids)
-    broad = F.col("x") >= 0                # everything
-
-    def plan(df):
-        return df._jdf.queryExecution().optimizedPlan().toString()
-
-    # footer-stats estimate ≈ 2.2% for the equality (weighted over
-    # the three version files): below a 5% threshold the semi-join
-    # engages, above the default 0.5% it does not
-    for pred, thresh, expect_semi in [(selective, 0.05, True),
-                                      (selective, 0.005, False),
-                                      (broad, 0.05, False)]:
-        monkeypatch.setattr(tx, "PREFILTER_THRESHOLD", thresh)
-        auto = store.scan("pf", prefilter=pred, prefilter_mode="auto")
-        assert ("LeftSemi" in plan(auto)) == expect_semi, (pred, thresh)
-        assert _rows(auto.filter(pred)) == \
-            _rows(store.scan("pf").filter(pred))
-    # a predicate the stats parser can't bound (string equality)
-    # gets no footer estimate, hence no candidate pass
-    s_pred = F.col("s") == "s1"
-    auto = store.scan("pf", prefilter=s_pred, prefilter_mode="auto")
-    assert "LeftSemi" not in plan(auto)
-    assert _rows(auto.filter(s_pred)) == \
-        _rows(store.scan("pf").filter(s_pred))
-
-
 def test_prefilter_pushes_to_parquet(store):
     _setup(store)
     plan = store.scan("pf", prefilter=F.col("x") < 5) \

@@ -20,13 +20,17 @@ def xt(spark, tmp_path):
     s.store = TableStore(spark, str(tmp_path / "wh"))
     s.sql = XtdbSession.sql.__get__(s)
     s.scan = XtdbSession.scan.__get__(s)
-    s.store.put("ap", [{"_id": i, "x": i, "s": f"s{i % 3}"}
-                       for i in range(300)], system_from="2024-01-01")
-    s.store.put("ap", [{"_id": i, "x": i + 1000, "s": f"s{i % 3}"}
-                       for i in range(100)], system_from="2024-06-01")
-    s.store.put("ap_dim", [{"_id": i, "x": i, "grp": i % 5}
-                           for i in range(50)], system_from="2024-01-01")
+    _tables(s.store)
     return s
+
+
+def _tables(store):
+    store.put("ap", [{"_id": i, "x": i, "s": f"s{i % 3}"}
+                     for i in range(300)], system_from="2024-01-01")
+    store.put("ap", [{"_id": i, "x": i + 1000, "s": f"s{i % 3}"}
+                     for i in range(100)], system_from="2024-06-01")
+    store.put("ap_dim", [{"_id": i, "x": i, "grp": i % 5}
+                         for i in range(50)], system_from="2024-01-01")
 
 
 def _plan(df):
@@ -243,3 +247,75 @@ def test_each_table_reference_builds_one_scan(xt, monkeypatch):
     df = xt.sql("SELECT a._id FROM ap a, ap b WHERE a._id = b._id")
     assert builds == [("ap", None)]
     assert len(_ids(df)) == 300
+
+
+def test_prefilter_enables_on_selective_skips_on_broad(xt, monkeypatch):
+    """The rewriter's footer estimate decides the injection: `k = 7`
+    estimates ≈ 2.2% (1/60 of the first file's rows, 1/30 of the
+    second's), so it injects under a 5% threshold and not under the
+    default 0.5%; a broad range never injects, nor does a string
+    equality (the footers cannot bound it, so it gets no estimate).
+    `_id = 7` would take the point route, hence the document column
+    `k`. Results equal the uninjected read's either way."""
+    from xtdb_spark.sql import rewriter
+
+    xt.store.put("pf", [{"_id": i, "k": i, "x": i % 10, "s": f"s{i % 3}"}
+                        for i in range(60)], system_from="2024-01-01")
+    xt.store.put("pf", [{"_id": i, "k": i, "x": (i % 10) * 2,
+                         "s": f"s{i % 3}"}
+                        for i in range(30)], system_from="2024-06-01")
+    for where, thresh, expect in [("k = 7", 0.05, True),
+                                  ("k = 7", 0.005, False),
+                                  ("x >= 0", 0.05, False),
+                                  ("s = 's1'", 0.05, False)]:
+        monkeypatch.setattr(rewriter, "PREFILTER_THRESHOLD", thresh)
+        q = f"SELECT _id, k, x, s FROM pf WHERE {where}"
+        df = xt.sql(q)
+        assert ("LeftSemi" in _plan(df)) == expect, (where, thresh)
+        assert bool(rewriter.LAST_PREFILTERS) == expect, (where, thresh)
+        on = sorted(map(tuple, df.collect()))
+        xt.store.sql_auto_prefilter = False
+        try:
+            assert sorted(map(tuple, xt.sql(q).collect())) == on
+        finally:
+            xt.store.sql_auto_prefilter = True
+
+
+def test_declined_prefilter_reads_the_shared_view(xt):
+    # a broad conjunct is declined before any scan is built: no
+    # prefilter record, no query-unique view
+    from xtdb_spark.sql.rewriter import LAST_PREFILTERS, rewrite
+
+    sql = rewrite(xt, "SELECT _id FROM ap WHERE x >= 0")
+    assert LAST_PREFILTERS == []
+    assert "__pf" not in sql
+    assert len(_ids(xt.spark.sql(sql))) == 300
+
+
+def test_each_reference_lists_the_manifest_once(xt, monkeypatch):
+    # the footer estimate and the read take one listing, so a put or
+    # compaction between them cannot change the files the estimate
+    # judged
+    import xtdb_spark.compactor as compactor
+    from xtdb_spark.sql.rewriter import LAST_PREFILTERS
+
+    listed = []
+    orig = compactor.live_files
+    monkeypatch.setattr(compactor, "live_files",
+                        lambda p: listed.append(p) or orig(p))
+    ap, dim = xt.store._path("ap"), xt.store._path("ap_dim")
+    df = xt.sql("SELECT _id, x FROM ap WHERE x = 1007")
+    assert [e["table"] for e in LAST_PREFILTERS] == ["ap"]
+    assert listed == [ap]
+    assert [(r["_id"], r["x"]) for r in df.collect()] == [(7, 1007)]
+
+    listed.clear()
+    xt.sql("SELECT _id FROM ap WHERE x >= 0")
+    assert LAST_PREFILTERS == [] and listed == [ap]
+
+    listed.clear()
+    df = xt.sql("SELECT a._id FROM ap a JOIN ap_dim d "
+                "ON a._id = d._id WHERE a.x = 1007 AND d.grp >= 0")
+    assert [e["table"] for e in LAST_PREFILTERS] == ["ap"]
+    assert sorted(listed) == sorted([ap, dim])
+    assert _ids(df) == [7]

@@ -31,19 +31,33 @@ def xt(spark, tmp_path, monkeypatch):
     s.store = TableStore(spark, str(tmp_path / "wh"))
     s.sql = XtdbSession.sql.__get__(s)
     s.scan = XtdbSession.scan.__get__(s)
-    # fact: 1000 rows, key `ref` ranging 0..499 (IN estimate for one
-    # key = 1/500 = 0.002, under the 0.005 injection threshold)
-    s.store.put("jf", [{"_id": i, "ref": i % 500, "x": i}
-                       for i in range(1000)], system_from="2024-01-01")
-    # dim: 500 rows (one-key predicate est = 1/500 = 0.002, under the
-    # 0.05 build-side gate)
-    s.store.put("jd", [{"_id": i, "grp": i % 5, "tag": f"t{i % 3}"}
-                       for i in range(500)], system_from="2024-01-01")
+    _tables(s.store)
     # the production floor (256 MB of fact parquet) exists because
     # the planning probe costs more than a full scan of a small
     # table; tests exercise the mechanism, not the economics
     monkeypatch.setattr(rewriter, "JOIN_PREFILTER_MIN_FACT_BYTES", 0)
     return s
+
+
+def _tables(store):
+    # fact: 1000 rows, key `ref` ranging 0..499 (IN estimate for one
+    # key = 1/500 = 0.002, under the 0.005 injection threshold)
+    store.put("jf", [{"_id": i, "ref": i % 500, "x": i}
+                     for i in range(1000)], system_from="2024-01-01")
+    # dim: 500 rows (one-key predicate est = 1/500 = 0.002, under the
+    # 0.05 build-side gate)
+    store.put("jd", [{"_id": i, "grp": i % 5, "tag": f"t{i % 3}"}
+                     for i in range(500)], system_from="2024-01-01")
+
+
+def _star_tables(store):
+    # a fact with two keys into two dims
+    store.put("jf3", [{"_id": i, "ra": i % 500, "rb": (i * 7) % 400}
+                      for i in range(1000)], system_from="2024-01-01")
+    store.put("jda", [{"_id": i} for i in range(500)],
+              system_from="2024-01-01")
+    store.put("jdb", [{"_id": i} for i in range(400)],
+              system_from="2024-01-01")
 
 
 def _plan(df):
@@ -60,7 +74,7 @@ def test_inner_join_where_equi_injects_in_list(xt):
                 "WHERE f.ref = d._id AND d._id = 7")
     inj = _jd_injections("jf")
     assert len(inj) == 1 and "ref IN (7)" in inj[0]["pred"] \
-        and inj[0]["mode"] == "force-selective"
+        and inj[0]["broadcast"]
     assert "LeftSemi" in _plan(df)
     assert _ids(df) == [7, 507]
 
@@ -152,12 +166,7 @@ def test_star_join_composes_multiple_in_filters(xt):
     """Star joins compose: with TWO selective dims, the fact scan's
     prefilter carries BOTH derived IN lists (each is a superset, so
     their AND is too)."""
-    xt.store.put("jf3", [{"_id": i, "ra": i % 500, "rb": (i * 7) % 400}
-                         for i in range(1000)], system_from="2024-01-01")
-    xt.store.put("jda", [{"_id": i} for i in range(500)],
-                 system_from="2024-01-01")
-    xt.store.put("jdb", [{"_id": i} for i in range(400)],
-                 system_from="2024-01-01")
+    _star_tables(xt.store)
     df = xt.sql("SELECT f._id FROM jf3 f "
                 "JOIN jda a ON f.ra = a._id "
                 "JOIN jdb b ON f.rb = b._id "

@@ -133,10 +133,10 @@ class XtdbSession:
     def scan(self, table, valid_time=None, system_time=None, all_valid_time=False,
              all_system_time=False, **scan_opts):
         """`scan_opts` passes through to TableStore.scan — notably
-        `prefilter=`/`prefilter_mode=` (sideways candidate pruning,
-        mode "force", "auto" or "force-selective"; the SQL path
-        injects these automatically, DataFrame/XTQL callers reach
-        them here)."""
+        `prefilter=` (sideways candidate pruning, always applied) and
+        `broadcast=` (hint the candidate set); the SQL path decides
+        and injects these itself, DataFrame/XTQL callers reach them
+        here."""
         return self.store.scan(table, valid_time=valid_time, system_time=system_time,
                                all_valid_time=all_valid_time,
                                all_system_time=all_system_time,

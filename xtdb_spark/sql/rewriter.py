@@ -40,10 +40,9 @@ import re
 import threading
 from collections import deque
 from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import functions as F
-
-from xtdb_spark.tx import PREFILTER_THRESHOLD, _parse_numeric_conjunction
 
 # ---------------------------------------------------------------- tokens
 
@@ -77,6 +76,12 @@ _PF_SEQ = itertools.count(1)
 _PF_VIEWS: deque = deque()
 _PF_LOCK = threading.Lock()
 _PF_VIEW_CAP = 1024
+
+# the footer-estimated selectivity at or below which a literal
+# prefilter (_Rewriter._auto_prefilters) or a join-derived IN list is
+# injected — calibrated from the 20M-row A/B grid: the candidate
+# pass's win at 0.1% selectivity flips to a loss by 2%
+PREFILTER_THRESHOLD = 0.005
 
 # Join-derived prefilter gates (_Rewriter._join_derived_pred): the most
 # build-side keys an injected IN list carries, and the smallest fact
@@ -298,6 +303,14 @@ class TemporalBounds:
     system_range: tuple | None = None
     all_system: bool = False
 
+    def scan_kwargs(self) -> dict:
+        """The bounds as TableStore.scan/lookup/scan_files keywords
+        (point and all-time bounds; ranges resolve elsewhere)."""
+        return {"valid_time": self.valid_asof,
+                "system_time": self.system_asof,
+                "all_valid_time": self.all_valid,
+                "all_system_time": self.all_system}
+
     def view_suffix(self) -> str:
         parts = []
         for v in (self.valid_asof, self.valid_range, self.system_asof,
@@ -323,16 +336,17 @@ def norm_instant(s):
 def scan_with_bounds(store, table: str, b: TemporalBounds,
                      keep_meta: bool = False, point=None, live=None,
                      **scan_opts):
-    """The resolved scan for one table reference. `point` (an `_id`)
-    reads that one entity through TableStore.lookup instead, over
-    the manifest listing `live` its guard approved; `scan_opts`
-    (`prefilter=`/`prefilter_mode=`) pass through to
+    """The resolved scan for one table reference, read from the
+    manifest listing `live` (TableStore.live_files; None lists anew).
+    `point` (an `_id`) reads that one entity through
+    TableStore.lookup instead, over the listing its guard approved;
+    `scan_opts` (`prefilter=`, `broadcast=`) pass through to
     TableStore.scan; range bounds resolve from the events instead
     and take neither."""
     from xtdb_spark import bitemporal
 
     if b.valid_range is not None or b.system_range is not None:
-        files = store.table_files(table)
+        files = store.table_files(table, live=live)
         ev = store.events(table, files=files)
         erases = store._may_erase(files)
     if b.valid_range is not None:
@@ -344,11 +358,9 @@ def scan_with_bounds(store, table: str, b: TemporalBounds,
             ev, b.system_range[0], b.system_range[1], b.valid_asof,
             erases=erases)
     else:
-        bounds = {"valid_time": b.valid_asof, "system_time": b.system_asof,
-                  "all_valid_time": b.all_valid,
-                  "all_system_time": b.all_system, "keep_meta": keep_meta}
+        bounds = {**b.scan_kwargs(), "keep_meta": keep_meta, "live": live}
         df = (store.scan(table, **bounds, **scan_opts) if point is None
-              else store.lookup(table, point, live=live, **bounds))
+              else store.lookup(table, point, **bounds))
     if getattr(store, "scan_order_ref_iid", False):
         df = _ref_iid_order(df)
     return df
@@ -461,12 +473,29 @@ def _where_conjuncts(toks):
     return parts
 
 
+class _Conjunct(NamedTuple):
+    """One top-level WHERE/ON term `[qual.]col <op> literal`, with
+    the column on the left (`literal <op> col` is mirrored)."""
+
+    qual: str | None
+    col: str
+    op: str                   # <, >, =, <= or >=
+    lit: str                  # the literal's SQL text
+    num: float | None         # its value when it is a plain decimal
+
+    def sql(self) -> str:
+        return f"{self.col} {self.op} {self.lit}"
+
+
+_MIRROR = {"<": ">", ">": "<", "<=": ">=", ">=": "<=", "=": "="}
+_DECIMAL = re.compile(r"-?\d+(?:\.\d+)?")
+
+
 def _simple_conjunct(part):
-    """(qualifier|None, column, 'col <op> literal' SQL) for a
-    conjunct of shape [alias.]col <op> literal or literal <op>
-    [alias.]col — plain/signed numbers, strings, TIMESTAMP/DATE
-    literals. None for anything else (function calls, 3VL operators,
-    subqueries, quoted identifiers…)."""
+    """The `_Conjunct` of a term of shape [alias.]col <op> literal or
+    literal <op> [alias.]col — plain/signed numbers, strings,
+    TIMESTAMP/DATE literals. None for anything else (function calls,
+    3VL operators, subqueries, quoted identifiers…)."""
     sig = [(k, t) for k, t in part if k not in ("ws", "comment")]
     if any(k == "word" and t.upper() in _CONJ_BAD for k, t in sig):
         return None
@@ -498,7 +527,11 @@ def _simple_conjunct(part):
                 and sig[j][1] in "<>=":
             s += sig[j][1]
             j += 1
-        return (s, j) if s in ("<", ">", "=", "<=", ">=") else (None, j)
+        return (s, j) if s in _MIRROR else (None, j)
+
+    def conjunct(qual, col, op, lit):
+        num = float(lit) if _DECIMAL.fullmatch(lit) else None
+        return _Conjunct(qual, col, op, lit, num)
 
     qual, col, j = ident(0)
     if col is not None:
@@ -506,7 +539,7 @@ def _simple_conjunct(part):
         if op is not None:
             lit, j = literal(j)
             if lit is not None and j == len(sig):
-                return qual, col, f"{col} {op} {lit}"
+                return conjunct(qual, col, op, lit)
         return None
     lit, j = literal(0)
     if lit is not None:
@@ -514,30 +547,42 @@ def _simple_conjunct(part):
         if op is not None:
             qual, col, j = ident(j)
             if col is not None and j == len(sig):
-                return qual, col, f"{lit} {op} {col}"
+                return conjunct(qual, col, _MIRROR[op], lit)
     return None
 
 
-def _point_conjunct(part):
+def _point_conjunct(c):
     """(qualifier|None, value) for a conjunct `[alias.]_id = <literal>`
-    (either side) whose literal is an int64 integer or a plain string
-    (no doubled quote, no backslash) — the `_id` values `iid_py`
-    hashes exactly as the stored iid. None for anything else."""
-    c = _simple_conjunct(part)
-    if c is None or c[1].lower() != "_id":
+    whose literal is an int64 integer or a plain string (no doubled
+    quote, no backslash) — the `_id` values `iid_py` hashes exactly
+    as the stored iid. None for anything else."""
+    if c.col.lower() != "_id" or c.op != "=":
         return None
-    qual, col, text = c
-    if text.startswith(col + " = "):
-        lit = text[len(col) + 3:]
-    elif text.endswith(" = " + col):
-        lit = text[:-len(col) - 3]
-    else:
-        return None
+    lit = c.lit
     if re.fullmatch(r"-?\d+", lit) and -2 ** 63 <= int(lit) < 2 ** 63:
-        return qual, int(lit)
+        return c.qual, int(lit)
     if lit[0] == "'" and not re.search(r"['\\]", lit[1:-1]):
-        return qual, lit[1:-1]
+        return c.qual, lit[1:-1]
     return None
+
+
+def _numeric_bounds(conjs):
+    """The `{column: [(lo, hi)]}` intervals of a conjunction, each
+    column's terms intersected, for `TableStore._stats_selectivity`
+    — None unless every conjunct compares a column with a plain
+    decimal (strings, TIMESTAMP/DATE and exponent literals get no
+    metadata-only guess)."""
+    bounds: dict = {}
+    for c in conjs:
+        if c.num is None:
+            return None
+        lo, hi = bounds.get(c.col, (float("-inf"), float("inf")))
+        if c.op in (">", ">=", "="):
+            lo = max(lo, c.num)
+        if c.op in ("<", "<=", "="):
+            hi = min(hi, c.num)
+        bounds[c.col] = (lo, hi)
+    return {c: [iv] for c, iv in bounds.items()} or None
 
 
 def _equi_conjunct(part):
@@ -1316,26 +1361,39 @@ class _Rewriter:
     def _build_scans(self) -> None:
         """Build each recorded store table reference's scan exactly
         once, after the point and prefilter decisions (_point_refs,
-        _auto_prefilters): a point or prefiltered reference registers
-        under a query-unique `__pf<n>` view and its out slot is
-        pointed there; any other reference registers the plain scan
-        under its shared view (built once per distinct view — a
-        shared name always holds identical content). A point or
-        prefiltered build that raises (temporal/unknown column etc.)
-        falls back to the plain scan. Fills each reference's `cols`
-        for _strip_meta_stars and _null_missing_columns."""
+        _auto_prefilters), which read the statement's top-level WHERE
+        and inner-join ON terms parsed once into `_Conjunct`s: a
+        point or prefiltered reference registers under a query-unique
+        `__pf<n>` view and its out slot is pointed there; any other
+        reference registers the plain scan under its shared view
+        (built once per distinct view — a shared name always holds
+        identical content). A point or prefiltered build that raises
+        (temporal/unknown column etc.) falls back to the plain scan.
+        Every read of a reference takes the one manifest listing its
+        decisions read (`_live`). Fills each reference's `cols` for
+        _strip_meta_stars and _null_missing_columns."""
         LAST_PREFILTERS.clear()
-        points = self._point_refs()
-        decided = self._auto_prefilters(skip=points)
+        if not self._scan_refs:
+            return
+        parts = _where_conjuncts(self.toks) or []
+        on_parts = _inner_on_conjuncts(self.toks)
+        where = [c for c in map(_simple_conjunct, parts) if c]
+        # inner-join ON literal conjuncts constrain every output row
+        # exactly like WHERE conjuncts — but only QUALIFIED ones can
+        # be attributed (no single-relation fallback for ON)
+        on = [c for c in map(_simple_conjunct, on_parts)
+              if c and c.qual is not None]
+        equi = [e for e in map(_equi_conjunct, parts + on_parts) if e]
+        points = self._point_refs(where)
+        decided = self._auto_prefilters(where + on, equi, skip=points)
         plain: dict = {}
         for n, r in enumerate(self._scan_refs):
             df = None
             if n in points:
-                k, live = points[n]
-                opts = {"point": k, "live": live}
+                opts = {"point": points[n]}
             elif n in decided:
-                pred, mode, jd = decided[n]
-                opts = {"prefilter": pred, "prefilter_mode": mode}
+                pred, broadcast, jd = decided[n]
+                opts = {"prefilter": pred, "broadcast": broadcast}
             else:
                 opts = None
             if opts:
@@ -1358,19 +1416,28 @@ class _Rewriter:
                 if n in decided:
                     LAST_PREFILTERS.append(
                         {"table": r["table"], "alias": r["alias"],
-                         "pred": pred, "mode": mode,
+                         "pred": pred, "broadcast": broadcast,
                          "join_derived": jd is not None, "view": uview})
             r["cols"] = list(df.columns)
 
-    def _point_refs(self) -> dict:
+    def _live(self, r):
+        """Reference `r`'s one manifest listing
+        (TableStore.live_files), taken on first use: the point guard,
+        the footer estimates and the read itself all judge the same
+        files, so a put or compaction in between cannot change the
+        files a decision approved."""
+        if "live" not in r:
+            r["live"] = self.xt.store.live_files(r["table"])
+        return r["live"]
+
+    def _point_refs(self, conjs) -> dict:
         """Point reads (reference operator/scan.clj:127-140 iid
-        selection): {reference index: (`_id` value, manifest
-        listing)} for the store
-        table references that a top-level WHERE conjunct
-        `[alias.]_id = <literal>` pins to one entity. Their scan is
-        TableStore.lookup — the files of one iid bucket, that iid's
-        events, resolved on one partition — instead of every live
-        file, the prefilter's candidate pass and the resolution
+        selection): {reference index: `_id` value} for the store
+        table references that a top-level WHERE conjunct (of
+        `conjs`) `[alias.]_id = <literal>` pins to one entity. Their
+        scan is TableStore.lookup — the files of one iid bucket, that
+        iid's events, resolved on one partition — instead of every
+        live file, the prefilter's candidate pass and the resolution
         shuffle. The conjunct still runs in the WHERE, and the
         lookup's rows are exactly the events of that one iid, so
         results are unchanged.
@@ -1385,13 +1452,11 @@ class _Rewriter:
         literal must carry the stored `_id`'s iid type tag, no column
         may be lowered by a mixed-type read, and the lookup's files
         must carry every column of the table. The guard and the
-        lookup read one `TableStore.live_files` listing, so a put or
-        compaction between them cannot change the approved files."""
+        lookup read the reference's one listing (`_live`)."""
         if sum(1 for k, t in self.toks
                if k == "word" and t.upper() == "SELECT") != 1:
             return {}
-        conjs = [c for c in map(_point_conjunct,
-                                _where_conjuncts(self.toks) or []) if c]
+        conjs = [c for c in map(_point_conjunct, conjs) if c]
         if not conjs:
             return {}
         points = {}
@@ -1403,10 +1468,9 @@ class _Rewriter:
             keys = {k for _, k in self._mine(r, conjs)}
             if len(keys) == 1:
                 k = keys.pop()
-                live = self.xt.store.live_files(r["table"])
                 if self.xt.store.lookup_matches_scan(r["table"], k,
-                                                     live=live):
-                    points[n] = (k, live)
+                                                     live=self._live(r)):
+                    points[n] = k
         return points
 
     def _shadowed(self, alias: str) -> bool:
@@ -1431,11 +1495,13 @@ class _Rewriter:
                 if c[0] == r["alias"] or (c[0] is None and single)]
 
     def _view_df(self, r, **scan_opts):
-        """One reference's SQL-visible scan: resolved at its bounds,
-        meta columns and derived column list applied."""
+        """One reference's SQL-visible scan: resolved at its bounds
+        from its manifest listing, meta columns and derived column
+        list applied."""
         df = self._visible(scan_with_bounds(self.xt.store, r["table"],
                                             r["bounds"],
                                             keep_meta=r["meta"],
+                                            live=r.get("live"),
                                             **scan_opts))
         if r["meta"]:
             df = _with_period_meta(df)
@@ -1447,25 +1513,33 @@ class _Rewriter:
                 for c in r["dcl"]])
         return df
 
-    def _auto_prefilters(self, skip=()) -> dict:
+    def _auto_prefilters(self, conjs, equi, skip=()) -> dict:
         """Automatic sideways pushdown for temporal-store scans in
         SQL (the reference injects its bloom pushdown automatically,
-        join.clj:172-226): conservatively extract the query's
-        top-level WHERE conjuncts of the form [alias.]col <op>
-        literal, attribute each to a scanned store table by alias
-        (or to a single-relation query's one table), and decide that
-        the reference's scan takes scan(prefilter=...,
-        prefilter_mode="auto") — parquet footer statistics
-        decide in ~ms whether the candidate semi-join pays; anything
-        unparseable, ambiguous, temporal-column, or non-selective
-        leaves the plain scan. SAFE BY CONSTRUCTION: the semi-join is
-        a result superset and the same conjunct still runs in the
-        WHERE, so results are unchanged either way
-        (tests/test_sql_auto_prefilter.py). Kill switch:
+        join.clj:172-226), decided here from the statement's parsed
+        conjuncts: the literal `conjs` ([alias.]col <op> literal) are
+        attributed to a scanned store table by alias (or to a
+        single-relation query's one table); `equi` feeds the
+        join-derived IN lists (_join_derived_pred). A reference with
+        a join-derived list takes it, broadcast-hinted (its gates
+        sized the candidate set). A literal-only reference takes its
+        conjunction when every conjunct is numeric and the cached
+        parquet FOOTER statistics of the files its scan will read
+        (`TableStore.scan_files`, from its one listing) estimate it
+        at or below PREFILTER_THRESHOLD — metadata only, no Spark
+        job; the candidate set is broadcast-hinted when
+        `_prefilter_fits_broadcast` holds. Anything unparseable,
+        ambiguous, non-numeric or broad leaves the plain scan (and a
+        temporal-column conjunct makes the scan raise, which does
+        too). SAFE BY CONSTRUCTION: the semi-join is a result
+        superset and the same conjunct still runs in the WHERE, so
+        results are unchanged either way
+        (tests/test_sql_auto_prefilter.py,
+        tests/test_sql_prefilter_parity.py). Kill switch:
         store.sql_auto_prefilter = False. References in `skip` (the
         point reads) take no decision and no footer estimate.
-        Returns {reference index: (pred, mode, join-derived pred or
-        None)}; builds no scan.
+        Returns {reference index: (pred, broadcast, join-derived pred
+        or None)} for the injected references only; builds no scan.
 
         CONCURRENCY: the prefiltered scan registers under a
         query-UNIQUE view name (__pf<n> suffix, _build_scans) and the
@@ -1477,47 +1551,37 @@ class _Rewriter:
         query's prefilter and drop rows. Unique pf views are evicted
         FIFO past a generous cap so a long-lived pgwire server
         doesn't leak catalog entries."""
-        if not getattr(self.xt.store, "sql_auto_prefilter", True):
-            return {}
-        refs = [(n, r) for n, r in enumerate(self._scan_refs)
-                if n not in skip and r["bounds"].valid_range is None
-                and r["bounds"].system_range is None]
-        if not refs:
-            return {}
-        parts = _where_conjuncts(self.toks) or []
-        on_parts = _inner_on_conjuncts(self.toks)
-        conjs = [c for c in (_simple_conjunct(p) for p in parts) if c]
-        # inner-join ON literal conjuncts constrain every output row
-        # exactly like WHERE conjuncts — but only QUALIFIED ones can
-        # be attributed (no single-relation fallback for ON)
-        conjs += [c for c in (_simple_conjunct(p) for p in on_parts)
-                  if c and c[0] is not None]
-        equi = [e for e in (_equi_conjunct(p)
-                            for p in [*parts, *on_parts]) if e]
-        if not conjs and not equi:
+        store = self.xt.store
+        if not getattr(store, "sql_auto_prefilter", True) \
+                or not (conjs or equi):
             return {}
         decided = {}
-        for n, r in refs:
-            if self._shadowed(r["alias"]):
-                continue          # self-join / shadowed alias
+        for n, r in enumerate(self._scan_refs):
+            if n in skip or r["bounds"].valid_range is not None \
+                    or r["bounds"].system_range is not None \
+                    or self._shadowed(r["alias"]):
+                continue          # range bounds; self-join / shadowed
             # (same table+bounds twice is fine: each ref rewrites its
             #  own out slot to its own query-unique __pf view)
             mine = self._mine(r, conjs)
             jd = self._join_derived_pred(r, equi, conjs) if equi else None
-            if jd is None and not mine:
-                continue
+            if jd is not None:
+                broadcast = True  # its gates sized the candidate set
+            else:
+                bounds = _numeric_bounds(mine)
+                if bounds is None:
+                    continue
+                files = store.scan_files(r["table"],
+                                         **r["bounds"].scan_kwargs(),
+                                         live=self._live(r))
+                est = store._stats_selectivity(files, bounds)
+                if est is None or est > PREFILTER_THRESHOLD:
+                    continue
+                broadcast = store._prefilter_fits_broadcast(est, files)
             pred = spark_escape_strings(
-                " AND ".join([f"({c[2]})" for c in mine]
+                " AND ".join([f"({c.sql()})" for c in mine]
                              + ([f"({jd})"] if jd else [])))
-            # join-derived predicates carry their own footer-stats
-            # decision (fact-side IN estimate ≤ threshold AND the
-            # candidate set under the broadcast budget, both checked
-            # inside _join_derived_pred) — "force-selective" makes
-            # the scan broadcast-hint the candidate semi-join so the
-            # resolution shuffle itself shrinks; literal-only
-            # predicates keep the "auto" footer gate
-            mode = "force-selective" if jd is not None else "auto"
-            decided[n] = (pred, mode, jd)
+            decided[n] = (pred, broadcast, jd)
         return decided
 
     def _join_derived_pred(self, r, equi, conjs):
@@ -1551,8 +1615,8 @@ class _Rewriter:
         than it saves below that), (b) the fact-side footer estimate
         for the IN is at/below the calibrated prefilter threshold,
         and (c) the estimated candidate set fits the broadcast
-        budget (the scan broadcast-hints it under "force-selective"
-        so the resolution shuffle itself shrinks — without the hint
+        budget (the scan broadcast-hints it, so the resolution
+        shuffle itself shrinks — without the hint
         AQE converts the semi-join only after the full probe shuffle
         exists). Integer keys only (strings and floats have no
         footer point-mass estimate). An empty build key set lowers to
@@ -1563,7 +1627,7 @@ class _Rewriter:
         if not getattr(store, "sql_join_prefilter", True):
             return None
         try:
-            ffiles = store.table_files(r["table"])
+            ffiles = store.table_files(r["table"], live=self._live(r))
             fact_bytes = sum(store._file_footer(f).n_bytes for f in ffiles)
         except Exception:
             return None
@@ -1591,11 +1655,12 @@ class _Rewriter:
                 #                   whole dim is rarely selective on
                 #                   the fact — don't pay the probe
             bpred = spark_escape_strings(
-                " AND ".join(f"({c[2]})" for c in bconj))
+                " AND ".join(f"({c.sql()})" for c in bconj))
             try:
-                bfiles = store.table_files(bref["table"])
-                est_b = store._stats_selectivity(
-                    bfiles, _parse_numeric_conjunction(F.expr(bpred)))
+                bfiles = store.table_files(bref["table"],
+                                           live=self._live(bref))
+                est_b = store._stats_selectivity(bfiles,
+                                                 _numeric_bounds(bconj))
             except Exception:
                 continue
             if est_b is None or est_b > 0.05:

@@ -54,154 +54,6 @@ from xtdb_spark import bitemporal, compactor
 
 FORBIDDEN_SCHEMAS = ("xt", "information_schema", "pg_catalog")
 
-# the footer-estimated selectivity at or below which an "auto"
-# prefilter (and a SQL join-derived IN list) is injected — calibrated
-# from the 20M-row A/B grid: the candidate pass's win at 0.1%
-# selectivity flips to a loss by 2%
-PREFILTER_THRESHOLD = 0.005
-
-# tokens of a Column/SQL predicate rendering; Spark prints Column
-# expressions in call style (`and(>=(x, -50), <=(x, 49))`) while
-# F.expr keeps the raw SQL infix text (`x < 3`, `x between 1 and 5`)
-_PRED_TOK = re.compile(
-    r"\s*(?:(?P<num>-?\d+(?:\.\d+)?)|(?P<id>[A-Za-z_][\w]*)"
-    r"|(?P<op>>=|<=|!=|=|<|>)|(?P<lp>\()|(?P<rp>\))|(?P<comma>,))")
-
-_FLIP = {"<": ">", ">": "<", "<=": ">=", ">=": "<=", "=": "="}
-
-
-def _parse_numeric_conjunction(pred):
-    """Parse a predicate (a Column or its SQL text) into the
-    `{column: [(lo, hi)]}` intervals `TableStore._stats_selectivity`
-    takes — ONLY when it is a pure conjunction of numeric comparisons
-    (col <op> literal, either operand order, call-style or infix,
-    BETWEEN included). Anything else (OR, NOT, strings, function
-    calls, IS NULL, …) returns None: the caller then injects nothing
-    rather than risk a wrong metadata-only guess."""
-    text = str(pred)
-    m = re.match(r"^Column<'(.*)'>$", text, re.DOTALL)
-    if m:
-        text = m.group(1)
-    toks = []
-    i = 0
-    while i < len(text):
-        m = _PRED_TOK.match(text, i)
-        if m is None or m.end() == i:
-            if text[i:].strip():
-                return None       # unrecognized token (string, !, …)
-            break                 # trailing whitespace
-        i = m.end()
-        toks.append((m.lastgroup, m.group(m.lastgroup)))
-    pos = 0
-    bounds: dict[str, list] = {}
-
-    def peek(k=0):
-        return toks[pos + k] if pos + k < len(toks) else (None, "")
-
-    def take():
-        nonlocal pos
-        t = toks[pos]
-        pos += 1
-        return t
-
-    def add(col, op, num):
-        lo_hi = bounds.setdefault(col, [float("-inf"), float("inf")])
-        if op in (">", ">="):
-            lo_hi[0] = max(lo_hi[0], num)
-        elif op in ("<", "<="):
-            lo_hi[1] = min(lo_hi[1], num)
-        elif op == "=":
-            lo_hi[0] = max(lo_hi[0], num)
-            lo_hi[1] = min(lo_hi[1], num)
-        else:                     # != carries ~no range information
-            raise ValueError
-
-    def operand():
-        k, v = peek()
-        if k in ("num", "id"):
-            take()
-            return k, v
-        raise ValueError
-
-    def expr():
-        k, v = peek()
-        if k == "id" and v.lower() == "and" and peek(1)[0] == "lp":
-            take(); take()                       # and (
-            expr()
-            if take() != ("comma", ","):
-                raise ValueError
-            expr()
-            if take()[0] != "rp":
-                raise ValueError
-            return
-        if k == "op" and peek(1)[0] == "lp":     # >=(x, -50)
-            take(); take()
-            ka, va = operand()
-            if take() != ("comma", ","):
-                raise ValueError
-            kb, vb = operand()
-            if take()[0] != "rp":
-                raise ValueError
-            _cmp(ka, va, v, kb, vb)
-            return
-        if k == "lp":                            # ( infix )
-            take()
-            expr()
-            if take()[0] != "rp":
-                raise ValueError
-            _tail()
-            return
-        # infix comparison / BETWEEN
-        ka, va = operand()
-        nk, nv = peek()
-        if nk == "id" and nv.lower() == "between":
-            take()
-            if ka != "id":
-                raise ValueError
-            lk, lv = operand()
-            bk, bv = peek()
-            if not (bk == "id" and bv.lower() == "and"):
-                raise ValueError
-            take()
-            hk, hv = operand()
-            if lk != "num" or hk != "num":
-                raise ValueError
-            add(va, ">=", float(lv))
-            add(va, "<=", float(hv))
-        elif nk == "op":
-            take()
-            kb, vb = operand()
-            _cmp(ka, va, nv, kb, vb)
-        else:
-            raise ValueError
-        _tail()
-
-    def _tail():
-        k, v = peek()
-        if k == "id" and v.lower() == "and":
-            take()
-            expr()
-        elif k is not None and k != "rp" and k != "comma":
-            raise ValueError
-
-    def _cmp(ka, va, op, kb, vb):
-        if ka == "id" and kb == "num":
-            add(va, op, float(vb))
-        elif ka == "num" and kb == "id":
-            add(vb, _FLIP[op], float(va))
-        else:
-            raise ValueError
-
-    try:
-        expr()
-        _tail()
-        if pos != len(toks):
-            return None
-    except (ValueError, KeyError, IndexError):
-        return None
-    return {c: [(lo, hi)] for c, (lo, hi) in bounds.items()} or None
-
-
 # the key Spark stores its own schema under in every parquet footer it
 # writes, and prefers over the parquet schema when reading
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
@@ -965,12 +817,20 @@ class TableStore:
                           table=table), self._ipc_lock():
             st = system_from or self._next_system_time()
             with self._commit_journal(st, [table]):
-                if isinstance(rows, DataFrame) or not self._append_local_fast(
-                        table, rows, "put", valid_from, valid_to, st):
-                    self._append(table, self._events_df(rows, "put",
-                                                        valid_from,
-                                                        valid_to, st), st)
+                self._append_rows(table, rows, "put", valid_from,
+                                  valid_to, st)
         return st
+
+    def _append_rows(self, table, rows, op, valid_from, valid_to,
+                     st) -> None:
+        """Append one op's events at system time `st`: literal rows
+        through the pyarrow fast path (`_append_local_fast`), a
+        DataFrame or rows outside its envelope through the Spark
+        writer (`_events_df`)."""
+        if isinstance(rows, DataFrame) or not self._append_local_fast(
+                table, rows, op, valid_from, valid_to, st):
+            self._append(table, self._events_df(rows, op, valid_from,
+                                                valid_to, st), st)
 
     @staticmethod
     def _check_literal_ids(rows) -> None:
@@ -1004,11 +864,8 @@ class TableStore:
             st = system_from or self._next_system_time()
             id_rows = self._id_rows(ids)
             with self._commit_journal(st, [table]):
-                if isinstance(id_rows, DataFrame) or not self._append_local_fast(
-                        table, id_rows, "delete", valid_from, valid_to, st):
-                    self._append(table, self._events_df(id_rows, "delete",
-                                                        valid_from,
-                                                        valid_to, st), st)
+                self._append_rows(table, id_rows, "delete", valid_from,
+                                  valid_to, st)
         return st
 
     def erase(self, table, ids, system_from=None):
@@ -1016,10 +873,7 @@ class TableStore:
             st = system_from or self._next_system_time()
             id_rows = self._id_rows(ids)
             with self._commit_journal(st, [table]):
-                if isinstance(id_rows, DataFrame) or not self._append_local_fast(
-                        table, id_rows, "erase", None, None, st):
-                    self._append(table, self._events_df(id_rows, "erase",
-                                                        None, None, st), st)
+                self._append_rows(table, id_rows, "erase", None, None, st)
         return st
 
     def copy_from(self, table, path, fmt: str = "parquet",
@@ -1097,11 +951,7 @@ class TableStore:
             with self._commit_journal(st, [t for t, _ in staged]):
                 for table, ev in staged:
                     if isinstance(ev, tuple) and ev[0] == "raw":
-                        _, rows, opk, vf, vt = ev
-                        if not self._append_local_fast(table, rows, opk,
-                                                       vf, vt, st):
-                            self._append(table, self._events_df(
-                                rows, opk, vf, vt, st), st)
+                        self._append_rows(table, *ev[1:], st)
                     else:
                         self._append(table, ev, st)
         return st
@@ -2026,8 +1876,8 @@ class TableStore:
         """Footer-statistics selectivity of `bounds`, a
         `{column: [(lo, hi), ...]}` map of numeric intervals — the
         reference derives its automatic bloom sideways pushdown from
-        metadata the same way (join.clj:172-226). A conjunction
-        (`_parse_numeric_conjunction`) gives each column one
+        metadata the same way (join.clj:172-226). A conjunction (the
+        SQL rewriter's `_numeric_bounds`) gives each column one
         interval; `col IN (k1, k2, …)` gives one column its point
         intervals (k, k).
 
@@ -2085,19 +1935,39 @@ class TableStore:
             return False
         return est * total <= budget
 
+    def scan_files(self, table: str, valid_time=None, system_time=None,
+                   all_valid_time=False, all_system_time=False,
+                   live=None) -> list[str]:
+        """The files a `scan` at these bounds reads, from one
+        `live_files` listing (`live`, or a new one). A historical
+        `system_time` bound prunes the manifest (`prune_manifest`); a
+        pure current-state read skips `hist` compaction outputs —
+        every event in them is shadowed at every valid point by a
+        later covering event, or already valid-expired (compactor.py
+        recency split; reference *recency-partition*,
+        compactor.clj). The SQL rewriter estimates a prefilter over
+        the same list the scan it decides for will read."""
+        live = live or self.live_files(table)
+        if system_time is not None and not all_system_time:
+            return self.prune_manifest(table, system_time, live=live)
+        current = (valid_time is None and system_time is None
+                   and not all_valid_time and not all_system_time)
+        return self.table_files(table, current_only=current, live=live)
+
     def scan(self, table: str, valid_time=None, system_time=None,
              all_valid_time=False, all_system_time=False,
-             prefilter=None, prefilter_mode: str = "force",
-             keep_meta: bool = False) -> DataFrame:
+             prefilter=None, broadcast: bool = False,
+             keep_meta: bool = False, live=None) -> DataFrame:
         """The :scan operator (reference operator/scan.clj:46-368):
         temporal bounds → resolution strategy. Column pruning +
         predicate pushdown on the returned DataFrame reach the parquet
         scan via Catalyst (the reference's metadata page pruning ≈
         parquet row-group stats). Historical `system_time` bounds
         additionally prune whole FILES from the manifest before the
-        Spark scan is built (`prune_manifest` — the trie-catalog
-        walk); `FOR ALL SYSTEM_TIME` needs the full history, so it
-        never prunes.
+        Spark scan is built (`scan_files`, `prune_manifest` — the
+        trie-catalog walk); `FOR ALL SYSTEM_TIME` needs the full
+        history, so it never prunes. `live`: the `live_files` listing
+        to read instead of a new one.
 
         `prefilter` (Column or SQL string over the table's DOCUMENT
         columns): sideways candidate pruning for SELECTIVE queries.
@@ -2120,24 +1990,17 @@ class TableStore:
         passing" (join.clj:172-226) plays this role between
         operators; here it prunes the scan itself.
 
-        `prefilter_mode` takes three values. "force" (default)
-        always applies the candidate pass. "auto" decides whether it
-        pays for itself (it wins 1.8-2.2× on selective predicates,
-        costs ~25% on broad ones — BENCH_NOTES round 7): the cached
-        parquet FOOTER min/max statistics estimate the selectivity of
-        a pure numeric conjunction (`_stats_selectivity`, no Spark
-        job), and the semi-join is applied only at/below
-        `PREFILTER_THRESHOLD`; a predicate the footers cannot bound
-        gets no candidate pass. The reference injects its bloom
-        pushdown automatically the same way (join.clj:172-226).
-        "force-selective" applies it with the candidate set
-        broadcast-hinted, for callers that sized it themselves (the
-        SQL rewriter's join-derived IN lists)."""
+        A given prefilter is always applied: whether it pays for
+        itself (it wins 1.8-2.2× on selective predicates, costs ~25%
+        on broad ones — BENCH_NOTES round 7) is the caller's
+        decision; the SQL rewriter makes it from footer statistics
+        (`_auto_prefilters`). `broadcast=True` broadcast-hints the
+        candidate set, for callers that sized it (the rewriter, under
+        `_prefilter_fits_broadcast`)."""
         if (self.serve_cache and prefilter is None and valid_time is None
                 and system_time is None and not all_valid_time
                 and not all_system_time and not keep_meta):
-            p = self._path(table)
-            cl0, cents = compactor.live_files(p)
+            cl0, cents = live or compactor.live_files(self._path(table))
             tok = (tuple(sorted(cl0)),
                    tuple(sorted(str(e) for e in cents)))
             hit = self._scan_cache.get(table)
@@ -2145,7 +2008,7 @@ class TableStore:
                 return hit[1]
             self.serve_cache = False     # recurse through the normal
             try:                         # build path exactly once
-                df = self.scan(table).cache()
+                df = self.scan(table, live=(cl0, cents)).cache()
             finally:
                 self.serve_cache = True
             if hit is not None:
@@ -2156,7 +2019,8 @@ class TableStore:
             self._scan_cache[table] = (tok, df)
             return df
         path = self._path(table)
-        l0, entries = compactor.live_files(path)
+        live = live or compactor.live_files(path)
+        l0, entries = live
         if not l0 and not entries and os.path.isdir(path):
             # declared (CREATE TABLE) but never written: empty
             # relation with the declared columns (void-typed — types
@@ -2169,33 +2033,17 @@ class TableStore:
                 [StructField("_iid", BinaryType())]
                 + [StructField(c, NullType()) for c in cols])
             return self.spark.createDataFrame([], schema)
-        if system_time is not None and not all_system_time:
-            files = self.prune_manifest(table, system_time,
-                                        live=(l0, entries))
-            if not files:
-                # bound precedes every append: empty result with the
-                # table's schema, zero I/O (filter(false) folds to an
-                # empty LocalRelation)
-                return self.scan(table, valid_time=valid_time,
-                                 all_valid_time=all_valid_time) \
-                    .filter(F.lit(False))
-        else:
-            # a pure current-state scan skips `hist` compaction outputs
-            # — every event in them is shadowed at every valid point
-            # by a later covering event, or already valid-expired
-            # (compactor.py recency split; reference
-            # *recency-partition*, compactor.clj) — reusing the one
-            # listing above, no second glob/manifest read
-            current = (valid_time is None and system_time is None
-                       and not all_valid_time and not all_system_time)
-            files = self.table_files(table, current_only=current,
-                                     live=(l0, entries))
+        files = self.scan_files(table, valid_time, system_time,
+                                all_valid_time, all_system_time, live=live)
+        if not files and system_time is not None and not all_system_time:
+            # bound precedes every append: empty result with the
+            # table's schema, zero I/O (filter(false) folds to an
+            # empty LocalRelation)
+            return self.scan(table, valid_time=valid_time,
+                             all_valid_time=all_valid_time,
+                             live=live).filter(F.lit(False))
         ev = self.events(table, files=files)
         if prefilter is not None:
-            if prefilter_mode not in ("force", "auto", "force-selective"):
-                raise ValueError("prefilter_mode must be 'force', "
-                                 "'auto' or 'force-selective', got "
-                                 f"{prefilter_mode!r}")
             cond = (F.expr(prefilter) if isinstance(prefilter, str)
                     else prefilter)
             # guard probe: a Project over the doc-only view — .schema
@@ -2218,34 +2066,20 @@ class TableStore:
                     "re-derives _valid_from), so an any-event-matches "
                     "candidate pass is not a superset for them — "
                     "filter the resolved result instead") from e
-            cand_src = ev.where(cond)
-            use = True
-            est = None
-            if prefilter_mode == "auto":
-                est = self._stats_selectivity(
-                    files, _parse_numeric_conjunction(cond))
-                use = est is not None and est <= PREFILTER_THRESHOLD
-            if use:
-                cand = cand_src.select("_iid").distinct()
-                # BROADCAST the candidate set when it is known-small:
+            cand = ev.where(cond).select("_iid").distinct()
+            if broadcast:
                 # without the hint, AQE converts the semi-join to
-                # broadcast only AFTER the probe-side exchange
-                # already exists, so the FULL event table still
-                # shuffles for the resolution window and the
-                # prefilter saves only the sort (measured: the 20M
-                # join A/B execution win was ~nothing). With the
-                # static hint the semi-join sits BELOW the window
-                # exchange and the shuffle itself shrinks to the
-                # candidates. Known-small = selectivity × table bytes
-                # under a broadcast budget ("force-selective" callers
-                # made that check themselves — the SQL join-derived
-                # injector; an unconditional hint would be a driver
-                # OOM footgun for broad force-mode predicates).
-                if prefilter_mode == "force-selective" or (
-                        est is not None and self._prefilter_fits_broadcast(
-                            est, files)):
-                    cand = F.broadcast(cand)
-                ev = ev.join(cand, "_iid", "left_semi")
+                # broadcast only AFTER the probe-side exchange already
+                # exists, so the FULL event table still shuffles for
+                # the resolution window and the prefilter saves only
+                # the sort (measured: the 20M join A/B execution win
+                # was ~nothing). With the static hint the semi-join
+                # sits BELOW the window exchange and the shuffle
+                # itself shrinks to the candidates. Never hinted
+                # unasked: for a broad predicate it would be a driver
+                # OOM footgun.
+                cand = F.broadcast(cand)
+            ev = ev.join(cand, "_iid", "left_semi")
         return self._resolve(ev, files, valid_time, system_time,
                              all_valid_time, all_system_time,
                              keep_meta=keep_meta)

@@ -40,8 +40,8 @@ def from_(table: str, bind: dict[str, str] | None = None, **temporal) -> Step:
     """Source step (reference xtql.clj From): scan a store table with
     optional temporal opts (valid_time=, system_time=, all_valid_time=,
     all_system_time=) and optional column renames `bind`. Extra
-    kwargs pass through to scan — `prefilter=`/`prefilter_mode=`
-    ("force", "auto" or "force-selective") give XTQL pipelines the
+    kwargs pass through to scan — `prefilter=` (and `broadcast=`,
+    hinting its candidate set) give XTQL pipelines the
     same sideways candidate pruning the SQL path injects
     automatically (reference join.clj:172-226 applies
     it to every query surface); renames in `bind` happen AFTER the
