@@ -262,3 +262,130 @@ def test_supersede_deterministic_under_perturbation(spark):
         outs.append(got)
     assert outs[0] == outs[1] == outs[2]
     assert any(h for *_, h in outs[0]) and any(not h for *_, h in outs[0])
+
+
+# --- full jobs: optimize(full=True) / optimize(cluster_by=...) ---------------
+
+def test_full_optimize_keeps_pinned_reads(store):
+    """A full rewrite is a compaction job: a pinned frame keeps
+    reading its files, which go only after unpin plus cleanup."""
+    for batch in range(3):
+        put_n(store, "pf", range(40), f"b{batch}")
+    store.compact("pf", file_size_target=1, l0_threshold=2)
+    put_n(store, "pf", range(5), "late")          # plus one live L0 file
+    tok = store.pin("pf")
+    files = store.pinned_files(tok)
+    pinned = store.events("pf", files=files)
+    n = pinned.count()
+    store.optimize("pf", full=True)
+    assert not set(files) & set(store.table_files("pf"))
+    assert pinned.count() == n
+    compactor.cleanup(store, "pf")
+    assert all(os.path.exists(f) for f in files)
+    store.unpin(tok)
+    compactor.cleanup(store, "pf")
+    assert not any(os.path.exists(f) for f in files)
+
+
+def test_full_optimize_commits_through_manifest(store):
+    """The outputs are level-1 bucket files listed in the manifest:
+    compaction has nothing left to do, a point read opens one bucket,
+    and superseded versions land in hist files."""
+    store.put("fm", [{"_id": i, "v": f"old-{i}"} for i in range(100)],
+              valid_from="2020-01-01")
+    store.put("fm", [{"_id": i, "v": f"new-{i}"} for i in range(100)],
+              valid_from="2020-01-01")
+    put_n(store, "fm", range(100, 120), "x")
+    before = current(store, "fm")
+    n = store.optimize("fm", full=True)
+    path = store._path("fm")
+    m = load_manifest(path)
+    assert n == len(m["files"]) > 1
+    assert store.table_files("fm") == sorted(
+        compactor.entry_path(path, e) for e in m["files"])
+    assert store.compact("fm") == 0
+    assert len(store.point_files("fm", 7)) < len(store.table_files("fm"))
+    assert len(store.table_files("fm", current_only=True)) \
+        < len(store.table_files("fm"))
+    assert current(store, "fm") == before
+
+
+def test_full_optimize_fault_at_commit_keeps_old_state(spark, store,
+                                                      monkeypatch):
+    """A full job that dies at its manifest swap leaves the table as
+    it was: a reopened store reads the pre-optimize state."""
+    from xtdb_spark.tx import TableStore
+
+    for batch in range(3):
+        put_n(store, "fc", range(20), f"b{batch}")
+    store.compact("fc", file_size_target=1, l0_threshold=2)
+    store.erase("fc", [3])
+    put_n(store, "fc", [50], "late")
+    tables = store.tables()
+    before = current(store, "fc")
+    hist = store.scan("fc", all_system_time=True,
+                      all_valid_time=True).count()
+
+    def boom(*a, **k):
+        raise OSError("injected manifest fault")
+
+    monkeypatch.setattr(compactor, "save_manifest", boom)
+    with pytest.raises(OSError, match="injected"):
+        store.optimize("fc", full=True)
+    monkeypatch.undo()
+    reopened = TableStore(spark, store.warehouse)
+    assert reopened.tables() == tables
+    assert current(reopened, "fc") == before
+    assert reopened.scan("fc", all_system_time=True,
+                         all_valid_time=True).count() == hist
+    assert reopened.events("fc").filter("op = 'erase'").count() == 1
+
+
+def test_full_optimize_of_wholly_erased_table_keeps_columns(store):
+    store.put("we", [{"_id": 1, "v": "a"}, {"_id": 2, "v": "b"}])
+    store.erase("we", [1, 2])
+    assert store.optimize("we", full=True) == 1
+    df = store.scan("we")
+    assert "v" in df.columns and df.count() == 0
+    assert store.events("we").count() == 0
+
+
+def test_optimize_n_files_needs_cluster_by(store):
+    put_n(store, "nf", range(3), "a")
+    with pytest.raises(ValueError, match="cluster_by"):
+        store.optimize("nf", n_files=2)
+
+
+def test_zorder_outputs_are_partless_level1_files(store):
+    """z-order boxes may hold any iid: level 1, part "", kept by every
+    point read."""
+    for batch in range(2):
+        store.put("zo", [{"_id": i, "x": i % 50, "v": f"{batch}-{i}"}
+                         for i in range(200)])
+    before = current(store, "zo")
+    assert store.optimize("zo", cluster_by=["x"], n_files=3) == 3
+    _, entries = live_files(store._path("zo"))
+    assert {(e["level"], e["part"]) for e in entries} == {(1, "")}
+    assert sorted(store.point_files("zo", 7)) == store.table_files("zo")
+    assert [(r["_id"], r["v"]) for r in
+            store.lookup("zo", 7).select("_id", "v").collect()] \
+        == [(7, "1-7")]
+    assert current(store, "zo") == before
+
+
+def test_crashed_job_temp_dir_is_cleaned_and_not_exported(store, tmp_path):
+    """A job's `.compact-*` output dir outlives a crash; cleanup
+    removes it and a full export never copies it."""
+    import shutil
+
+    put_n(store, "tc", range(10), "a")
+    path = store._path("tc")
+    planted = os.path.join(path, ".compact-x", "__bucket=0",
+                           "__hist=false", "a.parquet")
+    os.makedirs(os.path.dirname(planted))
+    shutil.copy(store.table_files("tc")[0], planted)
+    snap = store.export_warehouse(str(tmp_path / "snap"))
+    assert not os.path.exists(os.path.join(snap, "tc", ".compact-x"))
+    compactor.cleanup(store, "tc")
+    assert not os.path.exists(os.path.join(path, ".compact-x"))
+    assert current(store, "tc") == {(i, f"a-{i}") for i in range(10)}

@@ -2,19 +2,17 @@
 clustered column (that's what makes multi-column pruning work), and
 the rewrite must not change query results."""
 
-import glob
-import os
-
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from xtdb_spark.operators import zorder
 
 
-def _file_spans(path, cols):
-    """Per parquet file: {col: (min, max)} from footer row-group stats."""
+def _file_spans(store, table, cols):
+    """Per live parquet file: {col: (min, max)} from footer row-group
+    stats."""
     spans = []
-    for fp in glob.glob(os.path.join(path, "*.parquet")):
+    for fp in store.table_files(table):
         md = pq.ParquetFile(fp).metadata
         names = {md.schema.column(i).name: i
                  for i in range(len(md.schema))}
@@ -43,7 +41,7 @@ def test_zorder_narrows_both_dims(store):
     store.put("zpoints", df)
     nf = store.optimize("zpoints", cluster_by=["x", "y"], n_files=16)
     assert nf >= 8
-    spans = _file_spans(store._path("zpoints"), ["x", "y"])
+    spans = _file_spans(store, "zpoints", ["x", "y"])
     mx = _mean_span(spans, "x", 200)
     my = _mean_span(spans, "y", n / 200)
     # single-key layouts leave one dimension at ~full domain width;
@@ -61,8 +59,8 @@ def test_single_dim_sort_does_not(store):
         (F.col("id") % 200).alias("x"),
         F.floor(F.col("id") / 200).alias("y"))
     store.put("iidpoints", df)
-    store.optimize("iidpoints", n_files=16)
-    spans = _file_spans(store._path("iidpoints"), ["x", "y"])
+    store.optimize("iidpoints", full=True)
+    spans = _file_spans(store, "iidpoints", ["x", "y"])
     assert _mean_span(spans, "x", 200) > 0.9
     assert _mean_span(spans, "y", n / 200) > 0.9
 

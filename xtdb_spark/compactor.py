@@ -34,11 +34,11 @@ Spark-first re-expression (NOT a translation):
 - erase-at-compaction, partial-job rule: a job may drop events
   superseded by an erase marker IN ITS INPUTS (and older duplicate
   markers), but must RETAIN the latest marker — older events for the
-  iid may live in files the job didn't read. Only a full compaction
-  (`TableStore.optimize(..., n_files=...)`, which reads the whole
-  table) drops markers, matching the reference where a marker dies
-  only when it merges with everything it suppresses
-  (PolygonCalculator.kt:23-24 + compactor.clj).
+  iid may live in files the job didn't read. Only a FULL job
+  (`"full": True`, built by `TableStore.optimize(..., full=True)`
+  with every live file as input) drops markers, matching the
+  reference where a marker dies only when it merges with everything
+  it suppresses (PolygonCalculator.kt:23-24 + compactor.clj).
 
 Job calculator (mirrors job_calculator.clj shapes):
 
@@ -50,6 +50,13 @@ Job calculator (mirrors job_calculator.clj shapes):
   target size for k=1, any size deeper — job_calculator.clj's
   `tiering-compaction-jobs` filter), merge the oldest 16 into
   level-k+1 files bucketed by the next nibble.
+- full (`TableStore.optimize(full=True)`): the L0→L1 job with EVERY
+  live file as input and `"full": True`, run and committed like any
+  other job. With `"cluster_by"` (and `"n_files"` boxes) its frame is
+  z-order clustered (operators/zorder.py) instead of iid-bucketed,
+  into `cur` files of level 1, part "" (a box may hold any iid, so
+  every point lookup keeps them); the next L0→L1 job absorbs those
+  below the size target like any small L1 file.
 
 At 100 TB this is the structure that keeps `optimize` sublinear:
 every job rewrites O(16 × file-size-target) bytes regardless of
@@ -75,6 +82,7 @@ FILE_SIZE_TARGET = 128 << 20
 
 MANIFEST = "_manifest.json"
 LEVELS_DIR = "levels"
+TMP_PREFIX = ".compact-"   # a running job's output dir, under the table
 
 _MAX_TS = "9999-12-31 23:59:59"
 
@@ -171,20 +179,20 @@ def compaction_jobs(l0: list[str], entries: list[dict],
 # --- job execution -----------------------------------------------------------
 
 
-def _within_input_supersede(ev: DataFrame) -> DataFrame:
+def _within_input_supersede(ev: DataFrame, full: bool = False) -> DataFrame:
     """Apply erase + recency classification using only the job's own
     inputs (sound in any superset of files — supersession is
     monotone in the file set). Returns the events to rewrite with a
     boolean `__hist` column; erased events and stale duplicate erase
-    markers are dropped."""
+    markers are dropped. `full`: the inputs hold every event of the
+    table, so the latest erase marker is dropped too."""
     latest_erase = (ev.filter(F.col("op") == "erase").groupBy("_iid")
                     .agg(F.max("_system_from").alias("__e")))
-    ev = (ev.join(latest_erase, "_iid", "left")
-          .filter(F.col("__e").isNull()
-                  | (F.col("_system_from") > F.col("__e"))
-                  | ((F.col("op") == "erase")
-                     & (F.col("_system_from") == F.col("__e"))))
-          .drop("__e"))
+    keep = F.col("__e").isNull() | (F.col("_system_from") > F.col("__e"))
+    if not full:
+        keep = keep | ((F.col("op") == "erase")
+                       & (F.col("_system_from") == F.col("__e")))
+    ev = ev.join(latest_erase, "_iid", "left").filter(keep).drop("__e")
     # per-event supersession keyed by the CONTENT temporal key, not a
     # positional id: this frame fans out into three branches (a, b,
     # and the back-join), and `monotonically_increasing_id` is not
@@ -220,9 +228,9 @@ def _within_input_supersede(ev: DataFrame) -> DataFrame:
 
 
 def run_job(store, table: str, job: dict) -> list[dict]:
-    """Execute one compaction job: read inputs, re-bucket, commit via
-    the manifest, delete unpinned inputs. Returns the new manifest
-    entries."""
+    """Execute one compaction job: read inputs, re-bucket (or z-order
+    cluster, for a job with `cluster_by`), commit via the manifest,
+    delete unpinned inputs. Returns the new manifest entries."""
     path = store._path(table)
     levels = os.path.join(path, LEVELS_DIR)
     os.makedirs(levels, exist_ok=True)
@@ -241,21 +249,38 @@ def run_job(store, table: str, job: dict) -> list[dict]:
                     [t for t in map(txid_of_l0, in_l0) if t is not None])
 
     ev = store.events(table, files=inputs)
-    ev = _within_input_supersede(ev)
-    bucket = F.substring(F.lower(F.hex(F.col("_iid"))), 1, out_level)
-    ev = ev.withColumn("__bucket", bucket)
-    tmp = os.path.join(path, f".compact-{uuid.uuid4().hex}")
-    (ev.repartition(BRANCH_FACTOR, "__bucket")
-     .sortWithinPartitions("__bucket", "_iid", "_system_from")
-     .write.partitionBy("__bucket", "__hist")
-     .mode("overwrite").parquet(tmp))
+    ev = _within_input_supersede(ev, full=job.get("full", False))
+    tmp = os.path.join(path, f"{TMP_PREFIX}{uuid.uuid4().hex}")
+    if job.get("cluster_by"):
+        from xtdb_spark.operators import zorder
 
+        # unpartitioned: each box is one `cur` file of part "" (a
+        # partitionBy would re-sort the boxes by partition columns)
+        (zorder.cluster(ev.drop("__hist"), job["cluster_by"],
+                        job["n_files"], extra_sort=["_iid", "_system_from"])
+         .write.mode("overwrite").parquet(tmp))
+    else:
+        bucket = F.substring(F.lower(F.hex(F.col("_iid"))), 1, out_level)
+        ev = ev.withColumn("__bucket", bucket)
+        (ev.repartition(BRANCH_FACTOR, "__bucket")
+         .sortWithinPartitions("__bucket", "_iid", "_system_from")
+         .write.partitionBy("__bucket", "__hist")
+         .mode("overwrite").parquet(tmp))
+
+    outs = glob.glob(os.path.join(tmp, "**", "*.parquet"), recursive=True)
+    if not outs:
+        # a full job dropped every event (all erased): one empty file
+        # keeps the table's columns
+        (ev.drop("__bucket", "__hist").limit(0)
+         .write.mode("overwrite").parquet(tmp))
+        outs = glob.glob(os.path.join(tmp, "*.parquet"))
     new_entries: list[dict] = []
-    for f in glob.glob(os.path.join(tmp, "__bucket=*", "__hist=*",
-                                    "*.parquet")):
-        hist_dir = os.path.dirname(f)
-        part = os.path.basename(os.path.dirname(hist_dir)).split("=", 1)[1]
-        hist = os.path.basename(hist_dir).split("=", 1)[1] == "true"
+    for f in outs:
+        keys = dict(d.split("=", 1) for d in
+                    os.path.relpath(os.path.dirname(f), tmp).split(os.sep)
+                    if "=" in d)
+        part = keys.get("__bucket", "")
+        hist = keys.get("__hist") == "true"
         name = (f"l{out_level}-p{part}-{'hist' if hist else 'cur'}"
                 f"-{uuid.uuid4().hex}.parquet")
         os.replace(f, os.path.join(levels, name))
@@ -290,9 +315,13 @@ def run_job(store, table: str, job: dict) -> list[dict]:
 
 def cleanup(store, table: str, m: dict | None = None) -> None:
     """Delete no-longer-referenced files once unpinned: obsolete
-    inputs, orphaned outputs of crashed jobs, and consumed-L0 names
-    whose files are gone (manifest hygiene)."""
+    inputs, orphaned outputs of crashed jobs (uncommitted level files
+    and `.compact-*` temp dirs — jobs serialize under the commit
+    lock, so no running job owns one), and consumed-L0 names whose
+    files are gone (manifest hygiene)."""
     path = store._path(table)
+    for d in glob.glob(os.path.join(path, f"{TMP_PREFIX}*")):
+        shutil.rmtree(d, ignore_errors=True)
     mm = m if m is not None else load_manifest(path)
     if mm is None:
         return

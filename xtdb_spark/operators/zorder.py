@@ -27,9 +27,10 @@ Spark-first shape — everything is whole-stage-codegen Column math:
    output file owns a contiguous z-range = a bounded box in every
    clustered dimension.
 
-Used by `TableStore.optimize(table, cluster_by=[...])` (tx.py) for
-the event-store rewrite; `zorder_key` also works on any DataFrame
-for write-path layout of plain analytic tables.
+Used by `TableStore.optimize(table, cluster_by=[...])`, whose full
+compaction job (compactor.run_job) clusters its frame here instead
+of bucketing it by iid; `zorder_key` also works on any DataFrame for
+write-path layout of plain analytic tables.
 """
 
 from __future__ import annotations

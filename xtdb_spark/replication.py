@@ -28,13 +28,14 @@ Kafka protocol):
   (PostgresSource.kt:199-210) from the publisher side.
 
 Compaction interplay (the WAL-retention problem, solved the postgres
-way): the stream replays from live event files, and
-`optimize()`/compaction rewrites them under new names — so both
-compaction paths archive the wal2json rendering of every tx some
-slot hasn't confirmed to `_wal/<txid>.jsonl` BEFORE consuming its
-files (`archive_unacked`; postgres likewise retains WAL segments for
-lagging slots). `changes_for_tx` reads the archive first; acks and
-slot drops trim it; with no slots there is zero overhead.
+way): the stream replays from live event files, and compaction
+(`optimize(full=True)` included) rewrites them under new names — so
+every job (`compactor.run_job`) archives the wal2json rendering of
+every tx some slot hasn't confirmed to `_wal/<txid>.jsonl` BEFORE
+consuming its files (`archive_unacked`; postgres likewise retains
+WAL segments for lagging slots). `changes_for_tx` reads the archive
+first; acks and slot drops trim it; with no slots there is zero
+overhead.
 
 Scale shape: one slot reader streams metadata + row payloads for ONE
 tx at a time (bounded memory); the apply side

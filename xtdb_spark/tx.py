@@ -1130,9 +1130,9 @@ class TableStore:
         """Run one maintenance `step(table, *args)` under the commit
         lock (maintenance serializes with writers across processes),
         then drop the cached footers of the files that left the live
-        manifest — compaction inputs, a full rewrite's old files,
-        vacuumed files — so a long-lived process (a pgwire server
-        under upserts) caches only live files."""
+        manifest — compaction inputs and vacuumed files — so a
+        long-lived process (a pgwire server under upserts) caches
+        only live files."""
         with self._ipc_lock():
             out = step(table, *args)
             live = set(self.table_files(table))
@@ -1161,93 +1161,54 @@ class TableStore:
                                  l0_threshold)
 
     def optimize(self, table: str, n_files: int | None = None,
-                 full: bool | None = None,
+                 full: bool = False,
                  cluster_by: list[str] | None = None) -> int:
+        """Compaction entry point. Default: LEVELED incremental
+        compaction — see `compact()`; returns the number of jobs run.
+
+        `full=True`: one FULL compaction job (compactor.py) — every
+        live file rewritten into level-1 iid buckets, split into
+        `cur`/`hist` recency files — which also physically drops
+        erased data, markers included: a full job merges every marker
+        with everything it suppresses, the only point a marker may
+        die (reference PolygonCalculator.kt:23-24 + compactor.clj), so
+        the erased bytes are gone from storage (the GDPR guarantee
+        `erase` exists for). Until then `drop_erased` hides them at
+        read time.
+
+        `cluster_by=[...]`: the same full job, its frame z-order
+        clustered into `n_files` boxes (operators/zorder.py; default
+        live bytes ÷ the 128 MB file-size target + 1) so footer
+        min/max stats prune scans filtered on any clustered column —
+        Delta's OPTIMIZE ... ZORDER BY. `n_files` without `cluster_by`
+        is a ValueError.
+
+        Like every job it commits by one atomic manifest swap: a
+        crash leaves the old table readable, and files a `pin` holds
+        survive until `unpin` and the next cleanup. Returns the
+        number of files written."""
+        if n_files is not None and not cluster_by:
+            raise ValueError("optimize(n_files=...) sets the z-order box "
+                             "count; pass it with cluster_by")
         return self._maintain(table, self._optimize_unlocked, n_files,
                               full, cluster_by)
 
-    def _optimize_unlocked(self, table: str, n_files: int | None = None,
-                           full: bool | None = None,
-                           cluster_by: list[str] | None = None) -> int:
-        """Compaction entry point. Default (`full=None`, no
-        `n_files`): run LEVELED incremental compaction — see
-        `compact()`. With `n_files` (or `full=True`): FULL
-        compaction — rewrite the whole table's event files clustered
-        by `_iid` and sorted by (`_iid`, `_system_from`) — AND
-        physically drop erased data (markers included: a full rewrite
-        merges every marker with everything it suppresses, the only
-        point a marker may die — reference PolygonCalculator.kt:23-24).
-
-        The reference runs LSM-style background compaction of trie
-        levels bucketed by iid prefix (reference compactor.clj:11-21,
-        trie/Bucketer.kt); the Spark analogue is range-repartitioning
-        on `_iid` so each file owns an iid range — point lookups and
-        the per-iid resolution window then touch few files, and the
-        window shuffle is cheap because data is already clustered.
-        Equivalent to Delta OPTIMIZE ... ZORDER BY (_iid).
-
-        Erase-at-compaction (reference PolygonCalculator.kt:23-24 +
-        compactor.clj): events superseded by an `erase` — and the
-        erase markers themselves, once applied — are NOT rewritten,
-        so the erased bytes are physically gone from storage after
-        optimize (the GDPR guarantee `erase` exists for). Until
-        optimize runs, `drop_erased` hides them at read time.
-
-        Crash safety: the new files are written to a temp dir, the old
-        dir is renamed aside, the temp dir swapped in, and only then
-        is the old data removed — a crash at any point leaves either
-        the old or the new complete table on disk. Must not run
-        concurrently with writers or readers of the same table
-        (single-writer model, same caveat as submit_tx).
-
-        Returns the number of files written."""
-        import glob
-        import shutil
-
-        if n_files is None and not full and not cluster_by:
-            return self.compact(table)
-        path = self._path(table)
-        # slot-retained WAL: the full rewrite erases every tx
-        # attribution in this table — archive what lagging
-        # replication slots still need (replication.py; no-op
-        # without slots)
-        from xtdb_spark.replication import archive_unacked, txid_of_l0
-
-        archive_unacked(self.warehouse, [
-            t for t in (txid_of_l0(f) for f in glob.glob(
-                os.path.join(path, "part-xt*.parquet")))
-            if t is not None])
-        # physical erase: keep only what an erase didn't wipe
-        ev = bitemporal.drop_erased(self.events(table))
-        if n_files is None:
-            n_bytes = sum(self._file_footer(f).n_bytes
-                          for f in glob.glob(os.path.join(path, "*.parquet")))
-            n_files = max(1, n_bytes // (128 * 1024 * 1024) + 1)
-        tmp = path + "__compacting"
-        old = path + "__old"
+    def _optimize_unlocked(self, table, n_files, full, cluster_by):
+        if not full and not cluster_by:
+            return self._compact_unlocked(table, compactor.FILE_SIZE_TARGET,
+                                          compactor.L0_THRESHOLD)
+        l0, entries = compactor.live_files(self._path(table))
+        if not l0 and not entries:
+            return 0
+        job = {"out_level": 1, "part": "", "inputs_l0": l0,
+               "inputs_lvl": entries, "full": True}
         if cluster_by:
-            # multi-column Z-order layout (operators/zorder.py): each
-            # file becomes a bounded box in EVERY clustered dimension,
-            # so footer min/max stats prune scans filtered on any of
-            # them — Delta's OPTIMIZE ... ZORDER BY, re-expressed as
-            # pure Column math + one repartitionByRange
-            from xtdb_spark.operators import zorder
-
-            clustered = zorder.cluster(ev, cluster_by, int(n_files),
-                                       extra_sort=["_iid", "_system_from"])
-        else:
-            clustered = (ev.repartitionByRange(int(n_files), "_iid")
-                         .sortWithinPartitions("_iid", "_system_from"))
-        clustered.write.mode("overwrite").parquet(tmp)
-        # table METADATA survives the data rewrite (declared columns)
-        sj = os.path.join(path, "_schema.json")
-        if os.path.exists(sj):
-            shutil.copy(sj, os.path.join(tmp, "_schema.json"))
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-        return len(glob.glob(os.path.join(path, "*.parquet")))
+            if n_files is None:
+                n_bytes = sum(self._file_footer(f).n_bytes for f in
+                              self.table_files(table, live=(l0, entries)))
+                n_files = n_bytes // compactor.FILE_SIZE_TARGET + 1
+            job.update(cluster_by=list(cluster_by), n_files=int(n_files))
+        return len(compactor.run_job(self, table, job))
 
     def pin(self, table: str) -> int:
         """Pin the table's CURRENT file manifest against garbage
@@ -1342,8 +1303,8 @@ class TableStore:
             # slot-retained WAL (replication.py): a lagging
             # replication slot must still be able to render these
             # txs' changes after their part-xt files are gone —
-            # archive BEFORE deletion, exactly like both compaction
-            # paths (compactor.run_job, full-optimize rewrite)
+            # archive BEFORE deletion, exactly like every compaction
+            # job (compactor.run_job)
             from xtdb_spark.replication import archive_unacked, txid_of_l0
 
             archive_unacked(self.warehouse,
@@ -1428,8 +1389,9 @@ class TableStore:
                     dp = os.path.join(dest, d)
                     shutil.copytree(
                         sp, dp, dirs_exist_ok=True,
-                        ignore=shutil.ignore_patterns(".stage-*",
-                                                      "*.tmp-*"))
+                        ignore=shutil.ignore_patterns(
+                            ".stage-*", "*.tmp-*",
+                            f"{compactor.TMP_PREFIX}*"))
                 return dest
             if not os.path.isdir(base):
                 raise ValueError(f"no base snapshot at {base!r}")
@@ -1797,8 +1759,9 @@ class TableStore:
         later stages of the same query (reference basis/snapshot
         isolation, api basis.clj + Snapshot.kt). At 100 TB the listing
         comes from a transactional manifest (Delta/Iceberg) instead of
-        a directory glob; `optimize()` must not run concurrently with
-        pinned readers (documented there).
+        a directory glob. Compaction and `optimize` delete a rewritten
+        file only when no `pin` holds it, so a frame built from
+        `pinned_files(token)` stays readable until `unpin`.
 
         The schema comes from the cached parquet footers
         (`_footer_schema`) — the reference likewise reads its trie
