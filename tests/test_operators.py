@@ -1,4 +1,5 @@
-"""Tests for as-of join, sessionize, periods, XTQL DSL."""
+"""Tests for as-of join, sessionize, periods, XTQL DSL and the exact
+aggregate primitives."""
 
 from datetime import datetime
 
@@ -7,9 +8,15 @@ from pyspark.sql import functions as F
 from xtdb_spark.functions import periods as P
 from xtdb_spark.operators.asof import asof_join, sessionize
 
+SF_DIR = "/root/testdata/sf0.001"
+
 
 def T(s):
     return datetime.fromisoformat(s)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
 
 
 def test_asof_join_basic(spark):
@@ -153,12 +160,20 @@ def test_asof_join_does_not_blend_right_rows(spark):
     assert (out[0]["x"], out[0]["y"]) == (None, 2)
 
 
-def test_exact_agg_paths_bit_identical(spark):
+def test_exact_agg_paths_bit_identical(spark, monkeypatch):
     """The two-level fixed-point path and the single-level decimal
     path of registry.exact_agg must produce IDENTICAL values — the
-    data-size gate (big_input) is a physical choice only."""
+    data-size gate (explain.is_big) is a physical choice only."""
+    from xtdb_spark.plans import explain
     from xtdb_spark.queries.registry import exact_agg
     from pyspark.sql import functions as F
+
+    def run(big, **kw):
+        monkeypatch.setattr(explain, "BIG_BYTES", 0 if big else 1 << 64)
+        out = exact_agg(df, ["g"], **kw)
+        plan = out._jdf.queryExecution().analyzed().toString()
+        assert ("__pid" in plan) == big
+        return {r["g"]: tuple(r)[1:] for r in out.collect()}
 
     df = spark.range(2000).select(
         (F.col("id") % 3).alias("g"),
@@ -167,22 +182,45 @@ def test_exact_agg_paths_bit_identical(spark):
          .otherwise(F.col("id") / 7.0).alias("y"))
     kw = dict(sums={"sx": F.col("x"), "sy": F.col("y")},
               avgs={"ax": F.col("x")}, counts={"n": None, "ny": F.col("y")})
-    a = {r["g"]: tuple(r)[1:] for r in
-         exact_agg(df, ["g"], two_level=True, **kw).collect()}
-    b = {r["g"]: tuple(r)[1:] for r in
-         exact_agg(df, ["g"], two_level=False, **kw).collect()}
+    a = run(True, **kw)
+    b = run(False, **kw)
     assert a == b
     # round2 (money presentation, the sf10 ulp fix) holds the
     # identity too, and actually rounds
     kw2 = dict(kw, round2={"sx"})
-    a2 = {r["g"]: tuple(r)[1:] for r in
-          exact_agg(df, ["g"], two_level=True, **kw2).collect()}
-    b2 = {r["g"]: tuple(r)[1:] for r in
-          exact_agg(df, ["g"], two_level=False, **kw2).collect()}
+    a2 = run(True, **kw2)
+    b2 = run(False, **kw2)
     assert a2 == b2
     for g, vals in a2.items():
         assert round(vals[0], 2) == vals[0]          # 2dp
         assert abs(vals[0] - a[g][0]) <= 0.005 + 1e-9
+
+
+def test_exact_agg_judges_any_input_by_its_plan(spark, store):
+    """The size gate reads the frame's own plan, not a file under
+    sf_dir: a small store scan takes the single-level aggregate, a
+    frame Spark cannot size takes the two-level one, and a parquet
+    read's estimate is its file's size."""
+    import os
+
+    from xtdb_spark.plans import explain
+    from xtdb_spark.queries.registry import exact_agg
+
+    def per_partition_stage(df):
+        out = exact_agg(df, ["g"], sums={"sx": F.col("x")})
+        return "__pid" in out._jdf.queryExecution().analyzed().toString()
+
+    store.put("t", [{"_id": i, "g": i % 3, "x": i * 0.5}
+                    for i in range(150)])
+    store.put("t", [{"_id": i, "g": i % 3, "x": i * 0.5}
+                    for i in range(150, 300)])
+    assert 0 < explain.size_estimate(store.scan("t")) < 1 << 20
+    assert not per_partition_stage(store.scan("t"))
+    rdd = spark.createDataFrame([(1, 0.5), (2, 1.5)], "g long, x double")
+    assert explain.size_estimate(rdd) == 2 ** 63 - 1
+    assert per_partition_stage(rdd)
+    f = "/root/testdata/sf0.001/lineitem.parquet"
+    assert explain.size_estimate(spark.read.parquet(f)) == os.path.getsize(f)
 
 
 def test_range_join_matches_theta_join(spark):
@@ -274,3 +312,82 @@ def test_xtql_from_binds_temporal_columns(store):
     # without a temporal bind the scan stays clean
     out3 = x.q(xt, x.from_("xq_meta"))
     assert sorted(out3.columns) == ["_id", "v"]
+
+
+def test_asof_same_source_equals_general(spark):
+    """asof_join_same_source ≡ asof_join when both sides filter one
+    relation (ties, strict mode, and null carry included)."""
+    from pyspark.sql import functions as F
+
+    from xtdb_spark.operators.asof import asof_join, asof_join_same_source
+    from xtdb_spark.queries.registry import ld
+
+    e = ld(spark, SF_DIR, "events").select(
+        "user_id", "ts", "event_id", "value", "event_type")
+    for strict in (False, True):
+        clicks = e.filter(F.col("event_type") == "click") \
+            .select("user_id", "ts", "event_id")
+        purchases = e.filter(F.col("event_type") == "purchase") \
+            .select("user_id", "ts", "value")
+        general = asof_join(clicks, purchases, on="user_id",
+                            left_ts="ts", right_ts="ts",
+                            right_cols=["value"], strict=strict) \
+            .select("event_id", "value", "asof_ts")
+        same = asof_join_same_source(
+            e, on="user_id", ts="ts",
+            left_pred=F.col("event_type") == "click",
+            right_pred=F.col("event_type") == "purchase",
+            right_cols=["value"], strict=strict) \
+            .select("event_id", "value", "asof_ts")
+        assert _rows(general) == _rows(same), f"strict={strict}"
+
+
+def test_percentile_array_equals_per_cut_calls(spark):
+    """The shared percentile(col, array(...)) state must reproduce
+    the per-cut percentile() calls bit-for-bit (same sorted map, same
+    interpolation) for op_agg_percentile and
+    an_value_percentiles_by_type."""
+    from pyspark.sql import functions as F
+
+    from xtdb_spark.queries import QUERIES
+    from xtdb_spark.queries.registry import ld
+
+    l = ld(spark, SF_DIR, "lineitem")
+    old_l = l.groupBy("l_linestatus").agg(
+        F.round(F.expr("percentile(l_extendedprice, 0.5)"), 4).alias("median_price"),
+        F.round(F.expr("percentile(l_extendedprice, 0.9)"), 4).alias("p90_price"))
+    assert _rows(old_l) == _rows(
+        QUERIES["op_agg_percentile"].fn(spark, SF_DIR))
+
+    e = ld(spark, SF_DIR, "events")
+    old_e = (e.groupBy("event_type")
+             .agg(F.round(F.expr("percentile(value, 0.50)"), 6).alias("p50"),
+                  F.round(F.expr("percentile(value, 0.95)"), 6).alias("p95"),
+                  F.round(F.expr("percentile(value, 0.99)"), 6).alias("p99"))
+             .orderBy("event_type"))
+    assert _rows(old_e) == _rows(
+        QUERIES["an_value_percentiles_by_type"].fn(spark, SF_DIR))
+
+
+def test_agg_approx_split_equals_fused_aggregate(spark):
+    """op_agg_approx's split (distinct-alone + non-distinct pass,
+    broadcast-joined back) must equal the single fused aggregate it
+    replaced."""
+    from pyspark.sql import functions as F
+
+    from xtdb_spark.queries import QUERIES
+    from xtdb_spark.queries.registry import ld
+
+    e = ld(spark, SF_DIR, "events")
+    fused = (e.groupBy("event_type").agg(
+        F.countDistinct("user_id").alias("n_users_exact"),
+        F.approx_count_distinct("user_id", 0.02).alias("__acd"),
+        F.expr("percentile(value, 0.5)").alias("__em"),
+        F.expr("approx_percentile(value, 0.5, 10000)").alias("__am"))
+    ).select(
+        "event_type", "n_users_exact",
+        (F.abs(F.col("__acd") - F.col("n_users_exact"))
+         <= 0.05 * F.col("n_users_exact") + F.lit(2)).alias("approx_distinct_ok"),
+        (F.abs(F.col("__am") - F.col("__em"))
+         <= 0.05 * F.abs(F.col("__em")) + F.lit(0.01)).alias("approx_median_ok"))
+    assert _rows(fused) == _rows(QUERIES["op_agg_approx"].fn(spark, SF_DIR))

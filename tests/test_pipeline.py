@@ -1,9 +1,12 @@
 """Tests for dedup / similarity / text / multimodal pipeline ops."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from xtdb_spark.pipeline import dedup, similarity, text
 from xtdb_spark.pipeline.multimodal import extract_features, make_fake_media
+
+SF_DIR = "/root/testdata/sf0.001"
 
 
 def docs_df(spark):
@@ -590,3 +593,151 @@ def test_ann_ivfpq_clustered(spark):
     assert len(out) == 12
     for r in out:
         assert (r["nn_id"] - 100) % 4 == r["q_id"]   # own cluster only
+
+
+def test_cosine_kernels_identical(spark, monkeypatch):
+    """pipe_ann_cosine_topk's size gate swaps similarity.cosine for
+    cosine_np, so the two kernels must agree value for value: random
+    64-d pairs, then the edges in the same batch — a null array, an
+    empty array, a zero vector, a NaN component and unequal lengths
+    (each null in both) — and the entry's rows with the gate forced
+    both ways."""
+    import random
+
+    from xtdb_spark.queries import QUERIES
+    from xtdb_spark.queries import pipeline as qp
+
+    rnd = random.Random(11)
+    rows = [(i, [rnd.gauss(0, 1) for _ in range(64)],
+             [rnd.gauss(0, 1) for _ in range(64)]) for i in range(200)]
+    rows += [(200, None, [1.0] * 64), (201, [], []),
+             (202, [0.0] * 64, [1.0] * 64),
+             (203, [float("nan")] + [1.0] * 63, [1.0] * 64),
+             (204, [1.0] * 64, [1.0] * 63)]
+    df = spark.createDataFrame(
+        rows, "id long, a array<double>, b array<double>").coalesce(1)
+    out = df.select(
+        "id", similarity.cosine(F.col("a"), F.col("b")).alias("fold"),
+        similarity.cosine_np(F.col("a"), F.col("b")).alias("np")).collect()
+    assert len(out) == len(rows)
+    assert [r.fold for r in out] == [r.np for r in out]
+    assert sum(r.fold is None for r in out) == 5
+
+    def entry_rows(cosine_np_bytes):
+        monkeypatch.setattr(qp, "COSINE_NP_BYTES", cosine_np_bytes)
+        df = QUERIES["pipe_ann_cosine_topk"].fn(
+            spark, "/root/testdata/sf0.001")
+        assert ("ArrowEvalPython" in df._jdf.queryExecution()
+                .executedPlan().toString()) == (cosine_np_bytes == 0)
+        return sorted(map(tuple, df.collect()))
+
+    fold_rows = entry_rows(1 << 64)
+    assert len(fold_rows) == 50
+    assert entry_rows(0) == fold_rows
+
+
+@pytest.mark.parametrize("name", [
+    "pipe_corpus_prep", "pipe_text_quality", "pipe_lang_id",
+    "pipe_dedup_keep_best"])
+def test_text_heads_single_regex_pass(spark, name):
+    """r12 pass 2: every text signal derives from ONE whitespace-
+    normalization regex pass (text.normalized) and ONE token-array
+    materialization — the plan must contain exactly one
+    regexp_replace and no \\s+ tokenizing split (the old spellings
+    carried up to 3 regex scans / 24 replicated split trees)."""
+    import re
+
+    from xtdb_spark.queries import QUERIES
+
+    df = QUERIES[name].fn(spark, SF_DIR)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    assert len(re.findall(r"regexp_replace", plan)) == 1, plan
+    # the tokenizer must be the literal-space split of the aliased
+    # normal form, evaluated once: no split(..., \s+, ...) anywhere
+    assert not re.search(r"split\([^)]*\\s\+", plan), plan
+
+
+def test_norm_tokens_equivalence_edge_cases(spark):
+    """The literal-split-of-normal-form tokenizer must agree with the
+    old \\s+ tokenizer on edge inputs: empty, all-whitespace, tabs/
+    newlines at the edges (both sides produce the same empty edge
+    tokens), multi-space runs, and unicode text."""
+    from pyspark.sql import functions as F
+
+    from xtdb_spark.pipeline import text
+
+    rows = [("",), ("   ",), ("\t\t",), ("\ta b\t",), ("a  b   c",),
+            ("  left",), ("right  ",), ("Ünïcode  TEXT\nnewline",),
+            ("one",), ("\n\n\n",)]
+    df = spark.createDataFrame(rows, "text string")
+    norm = text.normalized(F.col("text"))
+    out = df.select(
+        text.tokens(F.lower(F.col("text"))).alias("old_toks"),
+        text.norm_tokens(norm).alias("new_toks"),
+        F.length(F.regexp_replace(F.col("text"), r"\s+", ""))
+        .cast("double").alias("old_ns"),
+        text.norm_nonspace_chars(norm, F.size(text.norm_tokens(norm)))
+        .alias("new_ns"),
+        text.fingerprint(F.col("text")).alias("old_fp"),
+        F.md5(norm).alias("new_fp"),
+    ).collect()
+    for r in out:
+        assert r.old_toks == r.new_toks, r
+        assert r.old_ns == r.new_ns, r
+        assert r.old_fp == r.new_fp, r
+
+
+def test_word_ngrams_zipchain_equals_slice_join_spelling(spark):
+    """word_ngrams' zip_with chain (r12, 6.6× on the corpus gram
+    pass) must be element-identical to the slice+array_join spelling
+    it replaced, across n and the short-doc/whitespace/NULL edges —
+    including the [NULL] the old spelling produced for NULL text."""
+    from pyspark.sql import functions as F
+
+    from xtdb_spark.pipeline.dedup import word_ngrams
+
+    def old_word_ngrams(text_col, n=3):
+        words = F.split(F.lower(F.trim(text_col)), r"\s+")
+        idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
+        grams = F.transform(
+            idx, lambda i: F.array_join(F.slice(words, i + 1, n), " "))
+        return F.array_distinct(grams)
+
+    rows = [("",), ("  ",), ("one",), ("one two",), ("one two three",),
+            ("a b c d e f g",), ("  Mixed   CASE  with\textra\nws  ",),
+            ("dup dup dup dup dup",), (None,), ("x " * 50,)]
+    df = spark.createDataFrame(rows, "text string")
+    for n in (1, 2, 3, 5):
+        cmp = df.select(old_word_ngrams(F.col("text"), n).alias("o"),
+                        word_ngrams(F.col("text"), n).alias("n"))
+        for r in cmp.collect():
+            assert r["o"] == r["n"], (n, r["o"], r["n"])
+
+
+def test_hashed_gram_arrays_injective_encoding(spark):
+    """_hashed_gram_arrays must preserve array sizes and every
+    pairwise intersection count (exactness contract of the verify
+    encoding), and keep string arrays verbatim when hashing is not
+    provably injective on the vocabulary."""
+    from pyspark.sql import functions as F
+
+    from xtdb_spark.pipeline import dedup
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c x y z"), (3, "p q r s t u"),
+         (4, "a b c d e f")], "doc_id long, text string")
+    g = dedup._gram_arrays(docs, "doc_id", "text", 3)
+    gh = dedup._hashed_gram_arrays(g)
+    assert dict(gh.dtypes)["grams"] == "array<bigint>"
+    j = (g.alias("s").join(gh.alias("h"), "id")
+         .select("id", F.size("s.grams").alias("ns"),
+                 F.size("h.grams").alias("nh")).collect())
+    assert all(r["ns"] == r["nh"] for r in j)
+    pairs = spark.createDataFrame(
+        [(1, 2), (1, 3), (1, 4)], "id_a long, id_b long")
+    old = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
+           dedup._jaccard_for_pairs_arrays(g, pairs).collect()}
+    new = {(r["id_a"], r["id_b"]): r["jaccard"] for r in
+           dedup._jaccard_for_pairs_arrays(gh, pairs).collect()}
+    assert old == new and (1, 4) in new and new[(1, 4)] == 1.0

@@ -32,6 +32,36 @@ def facts(spark, name):
     return analyze(QUERIES[name].fn(spark, SF_DIR))
 
 
+# AQE on: these two run before the first no_aqe test
+def test_q20_semi_join_has_no_prebuild_distinct(spark):
+    """q20's HAVING subquery feeds the semi join directly — exactly
+    two aggregate exchanges ((suppkey,partkey) partial+final), not a
+    third distinct pass."""
+    from xtdb_spark.queries import QUERIES
+
+    df = QUERIES["tpch_q20_potential_promotion"].fn(spark, SF_DIR)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    # the aggregate side contributes one Exchange; a distinct would
+    # add a second hashpartitioning(l_suppkey...) exchange
+    import re
+    supp_exchanges = re.findall(
+        r"hashpartitioning\(l_suppkey[^)]*\)", plan)
+    assert len(supp_exchanges) <= 1, plan
+
+
+def test_corpus_prep_single_text_scan(spark):
+    """pipe_corpus_prep reads documents ONCE (window dedup), not
+    twice (old aggregate + semi-join spelling)."""
+    from xtdb_spark.queries import QUERIES
+
+    df = QUERIES["pipe_corpus_prep"].fn(spark, SF_DIR)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    assert plan.count("documents.parquet]") == 1
+    assert "Window" in plan
+
+
 def test_q1_filter_pushdown_and_pruning(no_aqe):
     f = facts(no_aqe, "tpch_q1_pricing_summary")
     assert any("l_shipdate" in pf for pf in f.pushed_filters), f.pushed_filters

@@ -1,9 +1,10 @@
 """Round-13 optimization invariants: the Arrow-dict verify kernel
 must be bit-identical to the distributed join kernel, the spill-safe
-exact-percentile path must equal the in-memory aggregate, reliable
-checkpointing must be a pure storage swap, and NO catalog entry may
-carry an expensive expression tree in a Filter/Join/Exchange
-condition (the r12 session-11 probe, now pinned catalog-wide)."""
+exact-percentile path must equal the in-memory aggregate (all-null
+groups included), reliable checkpointing must be a pure storage swap,
+and NO catalog entry may carry an expensive expression tree in a
+Filter/Join/Exchange condition (the r12 session-11 probe, now pinned
+catalog-wide)."""
 
 import os
 
@@ -81,19 +82,33 @@ def test_dict_kernel_drops_foreign_ids_like_inner_join(spark):
 # --------------------------------------------------------- item 6
 
 @pytest.mark.parametrize("sf", [SF_DIR, SF_DIR2])
-def test_exact_percentiles_paths_identical(spark, sf):
+def test_exact_percentiles_paths_identical(spark, sf, monkeypatch):
     from xtdb_spark.operators.percentile import exact_percentiles
+    from xtdb_spark.plans import explain
+
+    def run(big, df, grp, col, qs):
+        monkeypatch.setattr(explain, "BIG_BYTES",
+                            0 if big else 1 << 64)
+        out = exact_percentiles(df, grp, col, qs)
+        assert ("Window" in _plan(out)) == big
+        return {r[grp]: None if r["__p"] is None else list(r["__p"])
+                for r in out.collect()}
 
     e = spark.read.parquet(os.path.join(sf, "events.parquet"))
+    # group "b" has only null values: both arms keep it with null
+    # percentiles; "a" mixes a null among its values
+    nulls = spark.createDataFrame(
+        [("a", 1.0), ("a", 3.0), ("a", None), ("b", None), ("b", None)],
+        "g string, v double")
     for df, grp, col, qs in (
             (e, "event_type", "value", [0.50, 0.95, 0.99]),
             (spark.read.parquet(os.path.join(sf, "lineitem.parquet")),
-             "l_linestatus", "l_extendedprice", [0.5, 0.9])):
-        small = {r[grp]: list(r["__p"]) for r in
-                 exact_percentiles(df, grp, col, qs, False).collect()}
-        big = {r[grp]: list(r["__p"]) for r in
-               exact_percentiles(df, grp, col, qs, True).collect()}
+             "l_linestatus", "l_extendedprice", [0.5, 0.9]),
+            (nulls, "g", "v", [0.0, 0.5, 1.0])):
+        small = run(False, df, grp, col, qs)
+        big = run(True, df, grp, col, qs)
         assert small == big   # bit-identical doubles, not approx
+    assert small == {"a": [1.0, 2.0, 3.0], "b": None}
 
 
 # --------------------------------------------------------- item 5

@@ -9,9 +9,10 @@ every scale by switching the PHYSICAL strategy, never the math:
 - small inputs: one `percentile(col, array(...))` aggregate — the
   fastest spelling at bench scale (r12: sharing one state across cut
   points measured 2× on op_agg_percentile at sf1).
-- big inputs (`spill_safe=True`): pre-aggregate duplicate values
-  (`groupBy(grp, value).count()` — partial map-side aggregation, so
-  the shuffle carries one row per DISTINCT (grp, value)), then ONE
+- big inputs (`explain.is_big` of the input frame): pre-aggregate
+  duplicate values (`groupBy(grp, value)` counting non-null values —
+  partial map-side aggregation, so the shuffle carries one row per
+  DISTINCT (grp, value)), then ONE
   running-count window over the sorted distinct values. The same
   value→count information flows through a sort + WindowExec buffer
   (`ExternalAppendOnlyUnsafeRowArray` — SPILLS gracefully) instead of
@@ -28,10 +29,8 @@ Both paths interpolate with Spark's own formula
 reproduced operation-for-operation in double arithmetic, so the two
 paths return BIT-IDENTICAL doubles (pinned by
 tests/test_r13_opt.py::test_exact_percentiles_paths_identical).
-NULL values are ignored, like the builtin. (Groups whose values are
-ALL null keep a row with null percentiles in the builtin path but
-have no surviving rows in the spill-safe path — the one observable
-difference; the engine's inputs have non-null measure columns.)
+NULL values are ignored, like the builtin; a group whose values are
+all null keeps its row, with a null `__p`.
 """
 
 from __future__ import annotations
@@ -39,19 +38,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from xtdb_spark.plans import explain
+
 
 def exact_percentiles(df: DataFrame, grp: str, col: str,
-                      qs: list[float], spill_safe: bool) -> DataFrame:
+                      qs: list[float]) -> DataFrame:
     """Returns one row per `grp` with `__p` = array<double> of the
     exact interpolated percentiles of `col` at each q in `qs`."""
-    if not spill_safe:
+    if not explain.is_big(df):
         arr = ", ".join(f"{q!r}D" for q in qs)
         return df.groupBy(grp).agg(
             F.expr(f"percentile({col}, array({arr}))").alias("__p"))
 
-    vals = (df.select(grp, F.col(col).cast("double").alias("__v"))
-            .filter(F.col("__v").isNotNull()))
-    cnts = vals.groupBy(grp, "__v").agg(F.count("*").alias("__c"))
+    # a null value counts 0, so an all-null group keeps __n = 0
+    vals = df.select(grp, F.col(col).cast("double").alias("__v"))
+    cnts = vals.groupBy(grp, "__v").agg(F.count("__v").alias("__c"))
     w = Window.partitionBy(grp).orderBy("__v")
     cum = (cnts
            .withColumn("__cum", F.sum("__c").over(
@@ -83,4 +84,5 @@ def exact_percentiles(df: DataFrame, grp: str, col: str,
             F.when(hi == lo, klo)
             .otherwise((hi.cast("double") - p) * klo
                        + (p - lo.cast("double")) * khi))
-    return out.select(grp, F.array(*outs).alias("__p"))
+    return out.select(
+        grp, F.when(F.col("__n") > 0, F.array(*outs)).alias("__p"))

@@ -27,7 +27,11 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """Null where the cosine is undefined, as `cosine_np` answers: a
+    zero-norm input (an empty or all-zero vector; ANSI division would
+    raise) and a NaN result (a NaN component)."""
+    return F.nanvl(F.try_divide(dot(a, b), norm(a) * norm(b)),
+                   F.lit(None).cast("double"))
 
 
 def cosine_np(a: Column, b: Column, single_eval: bool = False) -> Column:
@@ -38,9 +42,11 @@ def cosine_np(a: Column, b: Column, single_eval: bool = False) -> Column:
     are BIT-identical to `cosine`: the numpy loop iterates dimensions
     in order, accumulating `acc += a_d·b_d` across the whole batch —
     the same left-to-right double additions as the fold, then the
-    same sqrt/multiply/divide. Null or empty inputs propagate exactly
-    like the JVM expression (null → null, zero-norm → NaN/±Inf by
-    IEEE division).
+    same sqrt/multiply/divide. Edge inputs answer like `cosine`: a
+    null input, vectors of unequal length (zip_with pads with null),
+    a zero norm (empty or all-zero vector) and a NaN result (Arrow
+    hands a NaN back as null) give null. A batch may mix vector
+    lengths.
 
     `single_eval=True` marks the UDF non-deterministic (guide §4.4):
     when a FILTER references the UDF's output column AND the column
@@ -56,23 +62,31 @@ def cosine_np(a: Column, b: Column, single_eval: bool = False) -> Column:
     def cos_series(va, vb):
         import pandas as pd
 
+        def lengths(vs):
+            return np.array([len(v) if ok else -1
+                             for v, ok in zip(vs, vs.notna())])
+
         out = np.full(len(va), np.nan)
-        mask = va.notna() & vb.notna()
-        if mask.any():
-            x = np.array(va[mask].tolist(), dtype="float64")
-            y = np.array(vb[mask].tolist(), dtype="float64")
-            d = x.shape[1] if x.ndim == 2 else 0
-            ab = np.zeros(len(x))
-            aa = np.zeros(len(x))
-            bb = np.zeros(len(x))
+        na, nb = lengths(va), lengths(vb)
+        ok = (na >= 0) & (na == nb)
+        for d in np.unique(na[ok]):
+            rows = ok & (na == d)
+            k = int(rows.sum())
+            x = np.array(va[rows].tolist(), dtype="float64").reshape(k, d)
+            y = np.array(vb[rows].tolist(), dtype="float64").reshape(k, d)
+            ab = np.zeros(k)
+            aa = np.zeros(k)
+            bb = np.zeros(k)
             for i in range(d):  # dim-ordered: fold-identical sums
                 ab += x[:, i] * y[:, i]
                 aa += x[:, i] * x[:, i]
                 bb += y[:, i] * y[:, i]
+            den = np.sqrt(aa) * np.sqrt(bb)
             with np.errstate(divide="ignore", invalid="ignore"):
-                out[mask.to_numpy()] = ab / (np.sqrt(aa) * np.sqrt(bb))
+                out[rows] = ab / den
+            ok[rows] = den != 0
         res = pd.Series(out)
-        res[~mask.to_numpy()] = None
+        res[~ok] = None
         return res
 
     udf = pandas_udf(cos_series, "double")

@@ -17,6 +17,31 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 
+# `is_big` inputs take the scale-safe arm of every size-gated catalog
+# strategy; read at call time, so a test can patch it
+BIG_BYTES = 64 << 20
+
+
+def size_estimate(df: DataFrame) -> int:
+    """The largest `sizeInBytes` among the leaves of `df`'s optimized
+    plan: a parquet read's file bytes, a pinned view's in-memory
+    bytes, a store scan's live files. A leaf Spark cannot size (an
+    RDD-backed frame) reports Long.MaxValue, so it counts as big. The
+    root's estimate multiplies a join's inputs (9.9e15 B for lineitem
+    ⋈ orders ⋈ customer at sf0.01), so it is not used."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    it = leaves.iterator()
+    size = 0
+    while it.hasNext():
+        size = max(size, int(it.next().stats().sizeInBytes()))
+    return size
+
+
+def is_big(df: DataFrame) -> bool:
+    """The one catalog size rule: `df`'s largest input ≥ BIG_BYTES."""
+    return size_estimate(df) >= BIG_BYTES
+
+
 def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted")

@@ -9,7 +9,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from xtdb_spark.queries.registry import (
-    big_input, dsum, exact_agg, ld, register, sql_dsum,
+    dsum, exact_agg, ld, register, sql_dsum,
 )
 
 
@@ -159,11 +159,11 @@ def q7(spark, sf_dir):
               .join(n2, F.col("c_nationkey") == F.col("nk2"))
               .filter(pair))
     # 2 nation-pairs × years: low-cardinality groups, unbounded rows
-    # per group → two-level exact fixed-point aggregation
+    # per group → exact_agg (two-level fixed-point on a big input)
     return exact_agg(
         joined, ["supp_nation", "cust_nation",
                  F.year("l_shipdate").alias("l_year")],
-        sums={"revenue": vol}, two_level=big_input(sf_dir))
+        sums={"revenue": vol})
 
 
 @register(
@@ -258,16 +258,15 @@ def value_percentiles(spark, sf_dir):
     full value->count map (r12 A/B: 0.8 -> 0.7 s at sf1, identical
     rows; the win scales with group width).
 
-    r13 (guide §2.5): above the big_input gate the same exact math
-    runs through operators.percentile's spill-safe distinct+window
-    path instead of the in-memory value->count map — both paths
-    bit-identical (pinned by test_r13_opt)."""
+    r13 (guide §2.5): from sf10 (events `is_big`) the same exact
+    math runs through the spill-safe distinct+window path instead of
+    the in-memory value->count map — both paths bit-identical
+    (pinned by test_r13_opt)."""
     from xtdb_spark.operators.percentile import exact_percentiles
 
     e = ld(spark, sf_dir, "events")
     g = exact_percentiles(e, "event_type", "value",
-                          [0.50, 0.95, 0.99],
-                          spill_safe=big_input(sf_dir, "events"))
+                          [0.50, 0.95, 0.99])
     return (g.select("event_type",
                      F.round(F.col("__p")[0], 6).alias("p50"),
                      F.round(F.col("__p")[1], 6).alias("p95"),

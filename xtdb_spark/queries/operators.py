@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from xtdb_spark.queries.registry import big_input, dsum, ld, register
+from xtdb_spark.queries.registry import dsum, ld, register
 
 # ---------------------------------------------------------------- joins
 
@@ -346,15 +346,15 @@ def agg_percentile(spark, sf_dir):
     value->count map over every row (r12 A/B at sf1: 4.6 -> 2.3 s,
     rows identical — same sorted map, same interpolation).
 
-    r13 (guide §2.5): above the big_input gate the same exact math
-    runs through operators.percentile's spill-safe distinct+window
-    path instead of the in-memory value->count map — both paths
-    bit-identical (pinned by test_r13_opt)."""
+    r13 (guide §2.5): from sf1 (lineitem `is_big`) the same exact
+    math runs through the spill-safe distinct+window path instead of
+    the in-memory value->count map — both paths bit-identical
+    (pinned by test_r13_opt)."""
     from xtdb_spark.operators.percentile import exact_percentiles
 
     l = ld(spark, sf_dir, "lineitem")
     g = exact_percentiles(l, "l_linestatus", "l_extendedprice",
-                          [0.5, 0.9], spill_safe=big_input(sf_dir))
+                          [0.5, 0.9])
     return g.select(
         "l_linestatus",
         F.round(F.col("__p")[0], 4).alias("median_price"),

@@ -11,7 +11,11 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from xtdb_spark.pipeline import bpe, classify, dedup, similarity, text
+from xtdb_spark.plans import explain
 from xtdb_spark.queries.registry import ld, ldw, register
+
+# pipe_ann_cosine_topk's Arrow-kernel size gate, read at call time
+COSINE_NP_BYTES = 2 << 20
 
 
 @register(
@@ -245,26 +249,23 @@ def ann_cosine_topk(spark, sf_dir):
     ROUNDED similarity in both engines so last-ulp float noise can't
     flip ranks.
 
-    Kernel choice is size-gated like q1/q11/q15 (r12): the Arrow
-    cosine_np kernel wins 2× at the sf1 replica and beyond, but its
-    fixed Python-eval round-trip costs ~60 ms per execution, which
-    DOMINATES at MB-scale corpora (same-day idle bench pair: fold
-    0.165-0.189 s vs np 0.228-0.284 s at sf0.1) — fold below a 2 MB
-    embeddings parquet, Arrow kernel above. Both kernels are
-    bit-identical by construction (cosine_np docstring; r12 session-6
-    equality runs), so the gate changes timing only."""
+    Kernel choice is size-gated: the Arrow cosine_np kernel wins 1.8×
+    at the sf1 replica (1.09 vs 1.94 s, local[2]), but its fixed
+    Python-eval round trip dominates at MB-scale corpora (0.43 vs
+    0.31 s at sf0.01) — fold while the embeddings' size estimate is
+    under COSINE_NP_BYTES, Arrow kernel from there. Both kernels are
+    bit-identical (pinned by tests/test_pipeline.py), so the gate
+    changes timing only."""
     from pyspark.sql import Window
 
-    from xtdb_spark.queries.registry import big_input
-
-    kern = (similarity.cosine_np
-            if big_input(sf_dir, "embeddings", 2 << 20)
-            else similarity.cosine)
     # ldw: the broadcast crossJoin's parallelism is the corpus scan's
     # partition count (1 split at the sf10 replica) — repartitioning
     # the raw rows first runs the cosine kernel full-width (3.42x,
     # r13 §3); bench path (pinned cache) unchanged.
     e = ldw(spark, sf_dir, "embeddings")
+    kern = (similarity.cosine_np
+            if explain.size_estimate(e) >= COSINE_NP_BYTES
+            else similarity.cosine)
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"),
         similarity.as_double_array(F.col("embedding")).alias("qv"))

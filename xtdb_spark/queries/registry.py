@@ -26,6 +26,8 @@ from typing import Callable, Optional
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from xtdb_spark.plans import explain
+
 
 @dataclass
 class QueryDef:
@@ -323,25 +325,9 @@ def fxsum(col: Column, alias: str) -> Column:
         .cast("double").alias(alias)
 
 
-def big_input(sf_dir: str, table: str = "lineitem",
-              threshold: int = 64 << 20) -> bool:
-    """Physical-strategy gate: True when `table`'s parquet is big
-    enough for the two-level `exact_agg` to pay for its extra stage
-    (same data-size-gating philosophy as cache_tables' AQE/shuffle
-    sizing). Missing file (store-backed path) → assume big."""
-    import os
-
-    try:
-        return os.path.getsize(
-            os.path.join(sf_dir, f"{table}.parquet")) >= threshold
-    except OSError:
-        return True
-
-
 def exact_agg(df: DataFrame, keys: list, sums: dict | None = None,
               avgs: dict | None = None,
               counts: dict | None = None,
-              two_level: bool = True,
               round2: set | None = None) -> DataFrame:
     """Two-level exact float aggregation for LOW-cardinality groups:
     stage 1 sums 6dp fixed-point LONGS per (keys, partition) — the
@@ -355,10 +341,10 @@ def exact_agg(df: DataFrame, keys: list, sums: dict | None = None,
 
     sums/avgs/counts map output alias → input Column (counts: None =
     COUNT(*)); avgs divide exact sums by counts in DOUBLE, matching
-    `davg`. `two_level=False` (pass `big_input(sf_dir)` — MB-scale
-    inputs don't amortize the extra stage) emits the plain
-    wide-decimal single-level aggregate instead; both paths are
-    bit-identical (test_operators asserts it).
+    `davg`. Below `explain.BIG_BYTES` of largest input
+    (`explain.is_big`) the extra stage does not pay for itself, so the
+    plain wide-decimal single-level aggregate runs instead; both paths
+    are bit-identical (test_operators asserts it).
 
     `round2` names sum aliases whose EXACT DECIMAL rounds to 2dp
     (money) before the double cast. Needed when a sum's magnitude
@@ -376,7 +362,7 @@ def exact_agg(df: DataFrame, keys: list, sums: dict | None = None,
             dec = F.round(dec, 2)
         return dec.cast("double").alias(a)
 
-    if not two_level:
+    if not explain.is_big(df):
         aggs = [_final(F.sum(c.cast("decimal(38,6)")), a)
                 for a, c in sums.items()]
         aggs += [davg(c, a) for a, c in avgs.items()]

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from xtdb_spark.queries.registry import (
-    big_input, davg, dsum, exact_agg, fx, fxsum, ld, register,
+    davg, dsum, exact_agg, fx, fxsum, ld, register,
     sql_davg, sql_dsum, sql_dsum2,
 )
 
@@ -47,17 +47,16 @@ _REV = "l_extendedprice * (1 - l_discount)"
     """,
 )
 def q1(spark, sf_dir):
-    """Two-level exact aggregation (registry.exact_agg): the full
-    lineitem pass sums fixed-point longs in the primitive fast path;
-    wide-decimal arithmetic only touches the per-partition partials.
-    Bit-identical to the decimal(38,6) route, ~1.7× faster at sf10."""
+    """registry.exact_agg: from sf1 (lineitem `is_big`) the full pass
+    sums fixed-point longs and wide-decimal arithmetic only touches
+    the per-partition partials (1.6× at the sf1 replica); below, one
+    decimal(38,6) aggregate."""
     l = ld(spark, sf_dir, "lineitem")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     filtered = l.filter(
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
     out = exact_agg(
         filtered, ["l_returnflag", "l_linestatus"],
-        two_level=big_input(sf_dir),
         round2={"sum_base_price", "sum_disc_price", "sum_charge"},
         sums={"sum_qty": F.col("l_quantity"),
               "sum_base_price": F.col("l_extendedprice"),
@@ -171,12 +170,11 @@ def q5(spark, sf_dir):
         .join(s, (l.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey))
         .join(n, s.s_nationkey == n.n_nationkey)
         .join(r, n.n_regionkey == r.r_regionkey))
-    # 5 nation groups, unbounded rows per group at scale: the
-    # two-level exact_agg keeps the data pass on long sums (no
-    # overflow — stage-1 groups are partition-bounded, stage-2 merge
-    # is decimal) instead of a wide-decimal sum over every row
-    return (exact_agg(joined, ["n_name"], sums={"revenue": rev},
-                      two_level=big_input(sf_dir))
+    # 5 nation groups, unbounded rows per group at scale: a big input
+    # takes exact_agg's two-level path, long sums over the data pass
+    # (no overflow — stage-1 groups are partition-bounded, stage-2
+    # merge is decimal) instead of a wide-decimal sum over every row
+    return (exact_agg(joined, ["n_name"], sums={"revenue": rev})
             .orderBy(F.desc("revenue"), "n_name"))
 
 

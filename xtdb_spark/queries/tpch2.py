@@ -27,8 +27,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from xtdb_spark.plans import explain
 from xtdb_spark.queries.registry import (
-    big_input, dsum, exact_agg, ld, register, sql_dsum,
+    dsum, exact_agg, ld, register, sql_dsum,
 )
 
 _REV = "l_extendedprice * (1 - l_discount)"
@@ -194,8 +195,7 @@ def q9(spark, sf_dir):
                     amount.alias("amount"))
             .transform(lambda df: exact_agg(
                 df, ["nation", "o_year"],
-                sums={"sum_profit": F.col("amount")},
-                two_level=big_input(sf_dir)))
+                sums={"sum_profit": F.col("amount")}))
             .orderBy("nation", F.desc("o_year")))
 
 
@@ -216,11 +216,10 @@ def q9(spark, sf_dir):
     ORDER BY part_value DESC, partkey
     """,
 )
-def q11(spark, sf_dir, big=None):
+def q11(spark, sf_dir):
     """Q11 adapted: lineitem value per part for one nation's
     suppliers, kept if above a fraction of the national total
-    (global scalar subquery; see the size-gated strategy note
-    below)."""
+    (global scalar subquery)."""
     l = ld(spark, sf_dir, "lineitem")
     s = ld(spark, sf_dir, "supplier")
     n = F.broadcast(ld(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3"))
@@ -228,28 +227,14 @@ def q11(spark, sf_dir, big=None):
              .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
              .groupBy(F.col("l_partkey").alias("partkey"))
              .agg(F.sum(F.col("l_extendedprice").cast("decimal(38,6)")).alias("val")))
-    # r12 (guide §2.5): global-scalar strategy is SIZE-GATED on the
-    # grouping dimension (part): while per-part rows comfortably fit
-    # one task (part.parquet ≤ 256 MB ≈ 10^8 keys), the single-pass
-    # empty-partition window wins (the broadcast spelling serializes
-    # two jobs over the same subtree — measured 0.91× at sf10);
-    # beyond that the window is a one-task straggler over |part| rows
-    # and the broadcast 1-row aggregate takes over, re-reading the
-    # aggregate's shuffle via ReuseExchange instead of re-computing
-    # (tests/test_r12_opt.py::test_global_scalar_big_path_reuses_exchange).
-    # Both paths produce identical rows (tests/test_r12_opt.py).
-    if big is None:
-        big = big_input(sf_dir, "part", 256 << 20)
-    if big:
-        total = value.agg(F.sum("val").alias("__tot"))
-        thresholded = (value.crossJoin(F.broadcast(total))
-                       .withColumn("threshold",
-                                   F.col("__tot").cast("double") * F.lit(0.001)))
-    else:
-        from pyspark.sql import Window
-        total = F.sum("val").over(Window.partitionBy())
-        thresholded = value.withColumn(
-            "threshold", total.cast("double") * F.lit(0.001))
+    # the national total is one empty-partition window over the
+    # per-part rows: a single pass over one task, which holds |part|
+    # rows (the broadcast 1-row aggregate spelling serializes two
+    # jobs over the same subtree — measured 0.91× at sf10)
+    from pyspark.sql import Window
+    total = F.sum("val").over(Window.partitionBy())
+    thresholded = value.withColumn(
+        "threshold", total.cast("double") * F.lit(0.001))
     return (thresholded
             .filter(F.col("val").cast("double") > F.col("threshold"))
             .select("partkey", F.col("val").cast("double").alias("part_value"))
@@ -298,7 +283,7 @@ def q13(spark, sf_dir):
     ORDER BY s_suppkey
     """,
 )
-def q15(spark, sf_dir, big=None):
+def q15(spark, sf_dir):
     """Q15: revenue view + scalar MAX subquery. Exact decimal revenue
     makes the MAX-equality deterministic across engines."""
     l = ld(spark, sf_dir, "lineitem").filter(
@@ -307,25 +292,14 @@ def q15(spark, sf_dir, big=None):
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(38,6)")
     revenue = (l.groupBy(F.col("l_suppkey").alias("supplier_no"))
                .agg(F.sum(rev).alias("total_rev")))
-    # r12 (guide §2.5): size-gated global-scalar strategy, same
-    # rationale and crossover as q11 but keyed on the supplier
-    # dimension: empty-partition window while per-supplier rows fit
-    # one task, broadcast 1-row MAX (ReuseExchange over the revenue
-    # shuffle) beyond. Both paths identical rows
-    # (tests/test_r12_opt.py).
+    # the scalar MAX is one empty-partition window over the
+    # per-supplier rows, as in q11
+    from pyspark.sql import Window
     s = ld(spark, sf_dir, "supplier")
-    if big is None:
-        big = big_input(sf_dir, "supplier", 256 << 20)
-    if big:
-        mx = revenue.agg(F.max("total_rev").alias("__mx"))
-        capped = (revenue.crossJoin(F.broadcast(mx))
-                  .filter(F.col("total_rev") == F.col("__mx")))
-    else:
-        from pyspark.sql import Window
-        capped = (revenue
-                  .withColumn("__mx",
-                              F.max("total_rev").over(Window.partitionBy()))
-                  .filter(F.col("total_rev") == F.col("__mx")))
+    capped = (revenue
+              .withColumn("__mx",
+                          F.max("total_rev").over(Window.partitionBy()))
+              .filter(F.col("total_rev") == F.col("__mx")))
     return (capped
             .join(s, F.col("s_suppkey") == F.col("supplier_no"))
             .select("s_suppkey", "s_name",
@@ -529,10 +503,9 @@ def q22(spark, sf_dir):
          .select("o_custkey"))
     # r12 (guide §3.1): at MB scale the post-filter size estimate
     # keeps this highly selective side on a sort-merge anti join
-    # (shuffling CUSTOMER too); hint the broadcast where the input is
-    # provably small. At GB+ the hint is withheld — AQE owns the
-    # runtime choice from real sizes (A/B 1.86×).
-    if not big_input(sf_dir, "orders"):
+    # (shuffling CUSTOMER too); hint the broadcast unless orders
+    # `is_big` — then AQE owns the choice from real sizes (A/B 1.86×).
+    if not explain.is_big(o):
         o = F.broadcast(o)
     return (c.crossJoin(F.broadcast(avg_bal))
             .filter(F.col("c_acctbal") > F.col("avg_bal"))
