@@ -219,7 +219,7 @@ def test_exact_agg_judges_any_input_by_its_plan(spark, store):
     rdd = spark.createDataFrame([(1, 0.5), (2, 1.5)], "g long, x double")
     assert explain.size_estimate(rdd) == 2 ** 63 - 1
     assert per_partition_stage(rdd)
-    f = "/root/testdata/sf0.001/lineitem.parquet"
+    f = os.path.join(SF_DIR, "lineitem.parquet")
     assert explain.size_estimate(spark.read.parquet(f)) == os.path.getsize(f)
 
 

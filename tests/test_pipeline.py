@@ -625,8 +625,7 @@ def test_cosine_kernels_identical(spark, monkeypatch):
 
     def entry_rows(cosine_np_bytes):
         monkeypatch.setattr(qp, "COSINE_NP_BYTES", cosine_np_bytes)
-        df = QUERIES["pipe_ann_cosine_topk"].fn(
-            spark, "/root/testdata/sf0.001")
+        df = QUERIES["pipe_ann_cosine_topk"].fn(spark, SF_DIR)
         assert ("ArrowEvalPython" in df._jdf.queryExecution()
                 .executedPlan().toString()) == (cosine_np_bytes == 0)
         return sorted(map(tuple, df.collect()))
