@@ -32,7 +32,9 @@ def facts(spark, name):
     return analyze(QUERIES[name].fn(spark, SF_DIR))
 
 
-# AQE on: these two run before the first no_aqe test
+# These two plan with AQE on. no_aqe is module-scoped: it turns AQE
+# off at the first test that requests it and back on only when the
+# module ends, so they sit above that test.
 def test_q20_semi_join_has_no_prebuild_distinct(spark):
     """q20's HAVING subquery feeds the semi join directly — exactly
     two aggregate exchanges ((suppkey,partkey) partial+final), not a

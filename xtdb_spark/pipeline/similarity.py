@@ -62,22 +62,15 @@ def cosine_np(a: Column, b: Column, single_eval: bool = False) -> Column:
     def cos_series(va, vb):
         import pandas as pd
 
-        def lengths(vs):
-            return np.array([len(v) if ok else -1
-                             for v, ok in zip(vs, vs.notna())])
-
-        out = np.full(len(va), np.nan)
-        na, nb = lengths(va), lengths(vb)
-        ok = (na >= 0) & (na == nb)
-        for d in np.unique(na[ok]):
-            rows = ok & (na == d)
-            k = int(rows.sum())
-            x = np.array(va[rows].tolist(), dtype="float64").reshape(k, d)
-            y = np.array(vb[rows].tolist(), dtype="float64").reshape(k, d)
-            ab = np.zeros(k)
-            aa = np.zeros(k)
-            bb = np.zeros(k)
-            for i in range(d):  # dim-ordered: fold-identical sums
+        def score(rows):
+            x = np.array(va[rows].tolist(), dtype="float64")
+            y = np.array(vb[rows].tolist(), dtype="float64")
+            if x.ndim != 2 or x.shape != y.shape:
+                raise ValueError("vector lengths differ")
+            ab = np.zeros(len(x))
+            aa = np.zeros(len(x))
+            bb = np.zeros(len(x))
+            for i in range(x.shape[1]):  # dim-ordered: fold-identical sums
                 ab += x[:, i] * y[:, i]
                 aa += x[:, i] * x[:, i]
                 bb += y[:, i] * y[:, i]
@@ -85,6 +78,20 @@ def cosine_np(a: Column, b: Column, single_eval: bool = False) -> Column:
             with np.errstate(divide="ignore", invalid="ignore"):
                 out[rows] = ab / den
             ok[rows] = den != 0
+
+        def lengths(vs):
+            return np.array([len(v) if ok else -1
+                             for v, ok in zip(vs, vs.notna())])
+
+        out = np.full(len(va), np.nan)
+        ok = (va.notna() & vb.notna()).to_numpy()
+        try:
+            score(ok.copy())
+        except ValueError:  # lengths differ: score each length alone
+            na, nb = lengths(va), lengths(vb)
+            ok &= na == nb
+            for d in np.unique(na[ok]):
+                score(ok & (na == d))
         res = pd.Series(out)
         res[~ok] = None
         return res

@@ -30,11 +30,8 @@ def size_estimate(df: DataFrame) -> int:
     root's estimate multiplies a join's inputs (9.9e15 B for lineitem
     ⋈ orders ⋈ customer at sf0.01), so it is not used."""
     leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-    it = leaves.iterator()
-    size = 0
-    while it.hasNext():
-        size = max(size, int(it.next().stats().sizeInBytes()))
-    return size
+    return max((int(leaves.apply(i).stats().sizeInBytes())
+                for i in range(leaves.size())), default=0)
 
 
 def is_big(df: DataFrame) -> bool:

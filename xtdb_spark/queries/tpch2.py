@@ -27,7 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from xtdb_spark.plans import explain
 from xtdb_spark.queries.registry import (
     dsum, exact_agg, ld, register, sql_dsum,
 )
@@ -501,12 +500,8 @@ def q22(spark, sf_dir):
     o = (ld(spark, sf_dir, "orders")
          .filter(F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp"))
          .select("o_custkey"))
-    # r12 (guide §3.1): at MB scale the post-filter size estimate
-    # keeps this highly selective side on a sort-merge anti join
-    # (shuffling CUSTOMER too); hint the broadcast unless orders
-    # `is_big` — then AQE owns the choice from real sizes (A/B 1.86×).
-    if not explain.is_big(o):
-        o = F.broadcast(o)
+    # no broadcast hint on `o`: inside noise at sf0.01-sf1, slower at
+    # sf10 (BENCH_NOTES.md, "Size gates from one estimate")
     return (c.crossJoin(F.broadcast(avg_bal))
             .filter(F.col("c_acctbal") > F.col("avg_bal"))
             .join(o, F.col("o_custkey") == F.col("c_custkey"), "left_anti")
